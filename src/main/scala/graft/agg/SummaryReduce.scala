@@ -91,24 +91,21 @@ object SummaryReduce {
       cfg: AggConfig = AggConfig()
   ): AggResult = {
     import spark.implicits._
-    val n = chunks.count()
+    // One action over the input: #summaries == #chunks, thousands at most
+    // — the DATA was reduced by the map stage; this is the reference's
+    // exact reduce boundary. Order is restored here, on the driver.
+    val rows = chunks.collect().sortBy(_.chunkIndex)
+    val n = rows.length.toLong
     if (n == 0) return AggResult("", 0, 0, 0.0)
 
     // F8 position prefix, in chunk order (/root/reference/result_aggregator.py:78-91).
-    val prefixed: Seq[String] = chunks
-      .orderBy("chunkIndex")
-      .map { c =>
-        Prompts.positionPrefix(
-          TextFunctions.formatHms(c.startTime),
-          TextFunctions.formatHms(c.endTime),
-          c.summary
-        )
-      }
-      .collect()
-      .toSeq
-    // (collect is correct here: #summaries == #chunks, thousands at most —
-    // the DATA was reduced by the map stage; this is the reference's exact
-    // reduce boundary.)
+    val prefixed: Seq[String] = rows.toSeq.map { c =>
+      Prompts.positionPrefix(
+        TextFunctions.formatHms(c.startTime),
+        TextFunctions.formatHms(c.endTime),
+        c.summary
+      )
+    }
 
     val total = prefixed.map(TextFunctions.estimateTokens).sum
     val client = LlmClient.forConfig(llmCfg)

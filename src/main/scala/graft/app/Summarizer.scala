@@ -22,6 +22,9 @@ object Summarizer {
       agg: SummaryReduce.AggConfig = SummaryReduce.AggConfig()
   )
 
+  /** `processedChunks` holds the mapped rows on the driver, in
+    * `chunkIndex` order: the map ran once, and there is no cache to
+    * release (`unpersist` on it is a no-op). */
   case class Output(
       result: SummaryResult,
       processedChunks: Dataset[ProcessedChunk]
@@ -32,6 +35,7 @@ object Summarizer {
       inputPath: String,
       cfg: Config = Config()
   ): Output = {
+    import spark.implicits._
     val t0 = System.nanoTime()
     val raw = Preprocess.loadTranscript(spark, inputPath)
     // Reported segment count is POST-limit, like the reference's
@@ -44,13 +48,18 @@ object Summarizer {
     // preprocessed transcript instead of re-running load+fold per action.
     val processed = Preprocess.run(spark, raw, cfg.prep).cache()
     val chunks = Chunker.run(spark, processed, cfg.chunk)
-    val mapped =
-      SummarizeMap.run(spark, chunks, cfg.llm, cfg.map).cache()
-    val nChunks = mapped.count()
+    // The one action over the paid map; every later use reads these rows.
+    // #summaries == #chunks, thousands at most, so the driver holds them.
+    val rows = SummarizeMap.run(spark, chunks, cfg.llm, cfg.map)
+      .collect().sortBy(_.chunkIndex).toSeq
+    val mapped = spark.createDataset(rows)
+    val nChunks = rows.size.toLong
 
     // Metadata assembled like /root/reference/main.py:219-231.
     val (durSec, _) = Preprocess.transcriptDuration(processed)
     val speakers = Preprocess.extractSpeakers(processed)
+    // All consumers of the preprocessed transcript have run.
+    processed.unpersist()
     val metadata = cfg.agg.metadata ++ Seq(
       // Duration is rendered in h/m/s words in the metadata block
       // (/root/reference/main.py:229,324-332), not HH:MM:SS.
@@ -63,24 +72,12 @@ object Summarizer {
     val agg = SummaryReduce.aggregate(
       spark, mapped, cfg.llm, cfg.agg.copy(metadata = metadata))
 
-    import org.apache.spark.sql.functions._
-    val usage = mapped
-      .agg(
-        sum(col("tokensUsed").cast("long")).as("t"),
-        sum(col("cost")).as("c"))
-      .head()
-    val mapTokens = if (usage.isNullAt(0)) 0L else usage.getLong(0)
-    val mapCost = if (usage.isNullAt(1)) 0.0 else usage.getDouble(1)
-    // All consumers of the preprocessed transcript have run; only the
-    // mapped chunks (returned to the caller) stay cached.
-    processed.unpersist()
-
     Output(
       SummaryResult(
         summary = agg.summary,
         processingTimeSec = (System.nanoTime() - t0) / 1e9,
-        tokensUsed = mapTokens + agg.tokensUsed,
-        cost = mapCost + agg.cost,
+        tokensUsed = rows.map(_.tokensUsed.toLong).sum + agg.tokensUsed,
+        cost = rows.map(_.cost).sum + agg.cost,
         segments = nSegments,
         chunks = nChunks,
         provider = cfg.llm.provider,

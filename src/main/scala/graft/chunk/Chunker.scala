@@ -334,9 +334,10 @@ object Chunker {
     out.toSeq
   }
 
-  /** Spark surface: sort by the explicit order key into one partition
-    * (parity — a single transcript always fits; the corpus-scale path runs
-    * this same fold per transcript key). */
+  /** Spark surface: gather into one partition with `coalesce(1)` (no
+    * shuffle) and sort by the explicit order key (parity — a single
+    * transcript always fits; the corpus-scale path runs this same fold
+    * per transcript key). */
   def run(
       spark: SparkSession,
       segments: Dataset[ProcessedSegment],
@@ -344,7 +345,7 @@ object Chunker {
   ): Dataset[Chunk] = {
     import spark.implicits._
     segments
-      .repartition(1)
+      .coalesce(1)
       .sortWithinPartitions("rowIdx", "start")
       .mapPartitions(it => chunkLocal(it.toSeq, cfg).iterator)
   }

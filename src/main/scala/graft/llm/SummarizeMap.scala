@@ -10,8 +10,11 @@ import graft.model.{Chunk, ProcessedChunk}
   * asyncio-semaphore cap becomes `repartition(k)`); the client, its
   * retries, and error-as-row semantics live INSIDE `mapPartitions` so a
   * flaky API call never triggers a Spark task retry of the whole
-  * partition. Order is restored with an explicit `chunkIndex` sort, the
-  * engine-wide replacement for the reference's list re-sort (:156-158).
+  * partition. Rows come back in no particular order: consumers restore
+  * it by `chunkIndex` after collecting, the engine-wide replacement for
+  * the reference's list re-sort (:156-158). A global sort here would run
+  * the map twice, once for the range sampler and once for the shuffle,
+  * and send every paid request twice.
   *
   * At 100 TB scale this stage is pure fan-out: chunks are independent
   * rows, so throughput scales linearly with executors; the only knob that
@@ -101,8 +104,6 @@ object SummarizeMap {
           }
         }
       }
-      .orderBy("chunkIndex")
-      .as[ProcessedChunk]
   }
 
   private def toProcessed(

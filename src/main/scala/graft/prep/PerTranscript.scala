@@ -57,14 +57,8 @@ object PerTranscript {
                 scala.collection.mutable.ArrayBuffer.empty[ProcessedSegment]
               while (in.hasNext && in.head.transcriptId == tid)
                 group += in.next().segment
-              var segs: Seq[ProcessedSegment] = group.toSeq
-              if (prep.mergeSameSpeaker && segs.nonEmpty)
-                segs = Preprocess.combineLocal(
-                  segs, prep.maxSegmentDuration, prep.preserveTimestamps)
-              prep.timeIntervalSeconds.foreach { s =>
-                if (segs.nonEmpty) segs = Preprocess.intervalLocal(segs, s)
-              }
-              Chunker.chunkLocal(segs, chunk).map(c => KeyedChunk(tid, c))
+              Chunker.chunkLocal(Preprocess.foldLocal(group.toSeq, prep), chunk)
+                .map(c => KeyedChunk(tid, c))
             }
           }
         groups.flatten

@@ -216,9 +216,23 @@ object Preprocess {
     out.toSeq
   }
 
-  /** Full preprocessing over a single transcript: declarative stages stay
-    * distributed; the order-dependent folds run in one sorted partition
-    * (parity mode — a transcript always fits). */
+  /** The order-dependent folds over one transcript's segments in
+    * `rowIdx` order: same-speaker merge, then interval aggregation. Both
+    * the single-transcript and the corpus path call this, so the fold
+    * order lives here only. */
+  def foldLocal(segs: Seq[ProcessedSegment], cfg: PrepConfig): Seq[ProcessedSegment] = {
+    val merged =
+      if (cfg.mergeSameSpeaker)
+        combineLocal(segs, cfg.maxSegmentDuration, cfg.preserveTimestamps)
+      else segs
+    cfg.timeIntervalSeconds.fold(merged)(intervalLocal(merged, _))
+  }
+
+  /** Full preprocessing over a single transcript: the declarative stages
+    * run as one projection; the order-dependent folds run in one sorted
+    * partition (parity mode — a transcript always fits). `coalesce(1)`
+    * gathers it without a shuffle: a single multiLine JSON file is one
+    * partition already. */
   def run(
       spark: SparkSession,
       raw: Dataset[RawIndexed],
@@ -227,24 +241,11 @@ object Preprocess {
     import spark.implicits._
     val enriched = enrich(spark, raw, cfg)
     if (!cfg.mergeSameSpeaker && cfg.timeIntervalSeconds.isEmpty) enriched
-    else {
-      val maxDur = cfg.maxSegmentDuration
-      val preserve = cfg.preserveTimestamps
-      val interval = cfg.timeIntervalSeconds
-      val merge = cfg.mergeSameSpeaker
+    else
       enriched
-        .repartition(1)
+        .coalesce(1)
         .sortWithinPartitions("rowIdx")
-        .mapPartitions { it =>
-          var segs = it.toSeq
-          if (merge && segs.nonEmpty)
-            segs = combineLocal(segs, maxDur, preserve)
-          interval.foreach { s =>
-            if (segs.nonEmpty) segs = intervalLocal(segs, s)
-          }
-          segs.iterator
-        }
-    }
+        .mapPartitions(it => foldLocal(it.toSeq, cfg).iterator)
   }
 
   /** Cap on [[extractSpeakers]]' driver-side collect. Transcripts have a
@@ -254,21 +255,20 @@ object Preprocess {
 
   /** A4: unique sorted speakers (/root/reference/preprocessor.py:326-342).
     * The collect is transcript-scale BY INTENT — guarded by
-    * [[MaxSpeakers]] (checked with a `limit(cap+1)` pre-pass, so the
-    * failing path never materializes more than cap+1 rows on the
-    * driver). For corpus-scale distinct-speaker analytics keep the result
+    * [[MaxSpeakers]] (one `limit(cap+1)` collect, so the failing path
+    * never materializes more than cap+1 rows on the driver). For
+    * corpus-scale distinct-speaker analytics keep the result
     * distributed: `ds.select("speaker").distinct()`. */
   def extractSpeakers(
       ds: Dataset[ProcessedSegment],
       cap: Int = MaxSpeakers): Seq[String] = {
     import ds.sparkSession.implicits._
-    val distinct = ds.select("speaker").distinct()
-    val probe = distinct.limit(cap + 1).count()
-    require(probe <= cap,
+    val found = ds.select("speaker").distinct().limit(cap + 1).as[String].collect()
+    require(found.length <= cap,
       s"extractSpeakers found > $cap distinct speakers — this is " +
         "a transcript-scale operator; use the distributed " +
         "select(\"speaker\").distinct() frame for corpus-scale analytics")
-    distinct.as[String].collect().sorted.toSeq
+    found.sorted.toSeq
   }
 
   /** A5: transcript duration (/root/reference/preprocessor.py:344-361). */

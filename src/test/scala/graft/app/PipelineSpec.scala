@@ -1,5 +1,10 @@
 package graft.app
 
+import java.net.InetSocketAddress
+import java.nio.charset.StandardCharsets
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.SparkSuite
 import graft.agg.SummaryReduce
 import graft.chunk.Chunker
@@ -78,6 +83,68 @@ class PipelineSpec extends SparkSuite {
           SummarizeMap.MapConfig(concurrency = 2, requestsPerTask = requestsPerTask))
         .collect().map(c => c.chunkIndex -> c.summary).toSeq.sortBy(_._1)
     assert(summaries(4) == summaries(1))
+  }
+
+  /** An OpenAI-shaped local provider that records every request body.
+    * The reply is a digest of the body, so distinct prompts get distinct
+    * summaries; replies are short, so the reduce is one direct call. */
+  private def withRecordingProvider(f: (LlmConfig, () => Seq[String]) => Unit): Unit = {
+    val bodies = new ConcurrentLinkedQueue[String]()
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", { (ex: HttpExchange) =>
+      val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+      bodies.add(body)
+      val digest = java.security.MessageDigest.getInstance("MD5")
+        .digest(body.getBytes(StandardCharsets.UTF_8)).map("%02x".format(_)).mkString
+      val reply =
+        s"""{"choices":[{"message":{"role":"assistant","content":"summary $digest"}}],""" +
+          """"usage":{"prompt_tokens":10,"completion_tokens":5}}"""
+      val bytes = reply.getBytes(StandardCharsets.UTF_8)
+      ex.getResponseHeaders.add("Content-Type", "application/json")
+      ex.sendResponseHeaders(200, bytes.length)
+      ex.getResponseBody.write(bytes)
+      ex.close()
+    })
+    server.start()
+    try {
+      val llm = LlmConfig(provider = "openai", model = "gpt-4", apiKey = Some("k"),
+        endpoint = Some(s"http://127.0.0.1:${server.getAddress.getPort}"))
+      f(llm, () => { val b = bodies.asScala.toSeq; bodies.clear(); b })
+    } finally server.stop(0)
+  }
+
+  // Map requests carry the (default, empty) map system prompt; reduce
+  // requests carry the reduce system prompt.
+  private def isMapRequest(body: String): Boolean =
+    body.contains(""""role":"system","content":""}""")
+
+  test("every map prompt is paid once, in the pipeline and under a bare reduce") {
+    val chunkCfg = Chunker.ChunkConfig(maxTokensPerChunk = 300, contextTokens = 50)
+    withRecordingProvider { (llm, drain) =>
+      val out = Summarizer.summarizePath(
+        spark, resourcePath("mini_multi_speaker.json"),
+        Summarizer.Config(llm = llm, chunk = chunkCfg))
+      val sent = drain()
+      val mapBodies = sent.filter(isMapRequest)
+      val (nSent, nMap) = (sent.size, mapBodies.size)
+      val reduceCalls = nSent - nMap
+      assert(out.result.chunks > 1)
+      assert(reduceCalls == 1)
+      assert(nSent == out.result.chunks + reduceCalls)
+      assert(mapBodies.distinct.size == nMap)
+      assert(out.result.tokensUsed == 15L * nSent)
+
+      // The reduce over an uncached map evaluates it once.
+      val raw = Preprocess.loadTranscript(spark, resourcePath("mini_multi_speaker.json"))
+      val chunks = Chunker.run(spark, Preprocess.run(spark, raw), chunkCfg)
+      val agg = SummaryReduce.aggregate(spark, SummarizeMap.run(spark, chunks, llm), llm)
+      val again = drain().filter(isMapRequest)
+      val nAgain = again.size
+      assert(agg.chunksAggregated == out.result.chunks)
+      assert(nAgain == out.result.chunks)
+      assert(again.distinct.size == nAgain)
+      assert(again.toSet == mapBodies.toSet, "the bare map sent other prompts")
+    }
   }
 
   test("mock reduce output is a pure function of its inputs") {

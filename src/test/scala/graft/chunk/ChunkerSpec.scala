@@ -122,6 +122,30 @@ class ChunkerSpec extends SparkSuite {
     assert(flat.size == segs.size)
   }
 
+  test("corpus path matches Preprocess.run + Chunker.run under every key") {
+    import spark.implicits._
+    import graft.prep.PerTranscript
+    val chunkCfg = Chunker.ChunkConfig(300, 50)
+    for {
+      fixture <- Seq("mini_multi_speaker.json", "oversized_segment.json")
+      prepCfg <- Seq(Preprocess.PrepConfig(),
+        Preprocess.PrepConfig(timeIntervalSeconds = Some(60)))
+    } {
+      val raw = Preprocess.loadTranscript(spark, resourcePath(fixture))
+      val single = Chunker.run(spark, Preprocess.run(spark, raw, prepCfg), chunkCfg)
+        .collect().sortBy(_.chunkIndex).toSeq
+      assert(single.nonEmpty)
+      val keyed = Preprocess.enrich(spark, raw, prepCfg)
+        .flatMap(s => Seq(1L, 2L, 3L).map(PerTranscript.KeyedSegment(_, s)))
+      val corpus = PerTranscript.preprocessAndChunk(spark, keyed, prepCfg, chunkCfg)
+        .collect().groupBy(_.transcriptId)
+      assert(corpus.keySet == Set(1L, 2L, 3L), s"$fixture $prepCfg")
+      corpus.values.foreach { kc =>
+        assert(kc.map(_.chunk).sortBy(_.chunkIndex).toSeq == single, s"$fixture $prepCfg")
+      }
+    }
+  }
+
   test("Spark surface matches the local fold") {
     import spark.implicits._
     val raw = Preprocess.loadTranscript(spark, resourcePath("mini_multi_speaker.json"))
