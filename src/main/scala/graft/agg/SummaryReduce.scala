@@ -1,7 +1,7 @@
 package graft.agg
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import graft.llm.{LlmClient, LlmConfig, Prompts}
+import graft.llm.{Inflight, LlmClient, LlmConfig, Prompts}
 import graft.model.ProcessedChunk
 import graft.text.TextFunctions
 
@@ -10,12 +10,13 @@ import graft.text.TextFunctions
   *
   * Shape: the reference's hierarchical reduce is a fixed two-level tree —
   * batches of ordered summaries reduced concurrently, then one final
-  * combine. In Spark that is `groupByKey(batchId).mapGroups(reduce)`
-  * (level 1, distributed — one LLM call per batch, running in parallel
-  * across executors exactly like the reference's asyncio.gather) followed
-  * by a single driver-side final call (level 2 — one call, nothing to
-  * distribute). Batch ids are a deterministic function of chunk order, so
-  * results are reproducible regardless of execution order.
+  * combine. The batches are already on the driver after the map's
+  * collect, so level 1 runs them through the driver's [[Inflight]] window
+  * (one LLM call per batch, in flight together like the reference's
+  * asyncio.gather) and level 2 is a single driver-side call; neither
+  * runs a Spark job. Batch ids are a deterministic function of chunk
+  * order and the window yields in batch order, so results are
+  * reproducible regardless of which call finishes first.
   */
 object SummaryReduce {
 
@@ -82,15 +83,15 @@ object SummaryReduce {
     math.min(perBatch, cfg.maxSummariesPerBatch)
   }
 
-  /** Full reduce over the mapped chunks. Level 1 runs distributed (one
-    * task per batch); level 2 is a single driver-side call. */
+  /** Full reduce over the mapped chunks. Level 1 keeps up to
+    * min(#batches, defaultParallelism) batch calls in flight on the
+    * driver; level 2 is a single driver-side call. */
   def aggregate(
       spark: SparkSession,
       chunks: Dataset[ProcessedChunk],
       llmCfg: LlmConfig,
       cfg: AggConfig = AggConfig()
   ): AggResult = {
-    import spark.implicits._
     // One action over the input: #summaries == #chunks, thousands at most
     // — the DATA was reduced by the map stage; this is the reference's
     // exact reduce boundary. Order is restored here, on the driver.
@@ -117,33 +118,25 @@ object SummaryReduce {
       val bs = batchSize(prefixed, cfg)
       val batches = prefixed.grouped(bs).toSeq
       val nb = batches.size
-      // Level 1: distributed batch reduces (A7's asyncio.gather becomes a
-      // parallel Spark stage; batchId keys are deterministic).
-      val batchDs = spark
-        .createDataset(batches.zipWithIndex.map { case (b, i) => (i, b) })
-        .repartition(math.min(nb, spark.sparkContext.defaultParallelism))
-      val metadata = cfg.metadata
-      val template = cfg.promptTemplate
-      val intermediate = batchDs
-        .map { case (i, batch) =>
-          val batchClient = LlmClient.forConfig(llmCfg)
-          val batchMeta = metadata ++ Seq(
-            "Batch" -> s"${i + 1}/$nb",
-            "Position" -> f"Covering approximately ${100.0 * i / nb}%.0f%% - ${100.0 * (i + 1) / nb}%.0f%% of the transcript"
-          )
-          val r = singleReduce(batchClient, batch, template, batchMeta)
-          (i, r.content, r.promptTokens + r.completionTokens, r.cost)
-        }
-        .collect()
-        .sortBy(_._1)
-      val interTokens = intermediate.map(_._3.toLong).sum
-      val interCost = intermediate.map(_._4).sum
+      // Level 1: A7's asyncio.gather is the driver's in-flight window over
+      // the batches, sharing its one client; results come in batch order.
+      val window = Inflight.ordered(batches.iterator.zipWithIndex,
+          math.min(nb, spark.sparkContext.defaultParallelism)) { case (batch, i) =>
+        val batchMeta = cfg.metadata ++ Seq(
+          "Batch" -> s"${i + 1}/$nb",
+          "Position" -> f"Covering approximately ${100.0 * i / nb}%.0f%% - ${100.0 * (i + 1) / nb}%.0f%% of the transcript"
+        )
+        singleReduce(client, batch, cfg.promptTemplate, batchMeta)
+      }
+      val intermediate = try window.toVector finally window.close()
+      val interTokens = intermediate.map(r => (r.promptTokens + r.completionTokens).toLong).sum
+      val interCost = intermediate.map(_.cost).sum
       if (intermediate.length == 1) {
-        AggResult(intermediate.head._2, n, interTokens, interCost)
+        AggResult(intermediate.head.content, n, interTokens, interCost)
       } else {
         // Level 2: one final combine on the driver.
         val r = singleReduce(
-          client, intermediate.map(_._2).toSeq, cfg.promptTemplate, cfg.metadata)
+          client, intermediate.map(_.content), cfg.promptTemplate, cfg.metadata)
         AggResult(
           r.content, n,
           interTokens + r.promptTokens + r.completionTokens,

@@ -95,7 +95,7 @@ object Summarizer {
     * directory write here would break the reference's file contract. */
   def saveChunks(chunks: Dataset[ProcessedChunk], path: String): Unit = {
     import graft.llm.MiniJson.esc
-    val rows = chunks.orderBy("chunkIndex").collect()
+    val rows = chunks.collect().sortBy(_.chunkIndex)
     val body = rows
       .map(c =>
         s"""{"chunk_index":${c.chunkIndex},"start_time":${c.startTime},""" +
@@ -171,6 +171,9 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args)
+    if (opts.contains("requests-per-task"))
+      throw new IllegalArgumentException("--requests-per-task was removed: " +
+        "--max-concurrent sets the number of LLM requests in flight per task")
     val input = opts.getOrElse("input",
       sys.error("--input <transcript.json> is required"))
     val spark = SparkSession.builder()
@@ -218,8 +221,7 @@ object Main {
             .map(Prompts.ensureTranscriptPlaceholder)
             .getOrElse(Prompts.defaultMapPrompt),
           systemPrompt = opts.get("system-prompt-file").map(readFile),
-          concurrency = opts.getOrElse("max-concurrent", "5").toInt,
-          requestsPerTask = opts.getOrElse("requests-per-task", "1").toInt
+          concurrency = opts.getOrElse("max-concurrent", "5").toInt
         ),
         agg = SummaryReduce.AggConfig(
           // Hierarchical is the reference's DEFAULT, disabled via

@@ -2,14 +2,17 @@ package graft.app
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.SparkSuite
 import graft.agg.SummaryReduce
 import graft.chunk.Chunker
 import graft.llm.{LlmConfig, MockLlmClient, Prompts, SummarizeMap}
+import graft.model.{Chunk, ProcessedChunk}
 import graft.prep.Preprocess
+import org.apache.spark.sql.Dataset
 
 /** Slice-0 e2e (SURVEY §7.2-1): JSON → preprocess → chunk → mock LLM map →
   * reduce, fully deterministic through the mock client. */
@@ -71,37 +74,53 @@ class PipelineSpec extends SparkSuite {
   }
 
   test("intra-partition concurrency produces identical results") {
-    import graft.llm.{LlmConfig, SummarizeMap}
-    import graft.chunk.Chunker
-    import graft.prep.Preprocess
     val raw = Preprocess.loadTranscript(spark, resourcePath("mini_multi_speaker.json"))
     val prepped = Preprocess.run(spark, raw)
     val chunks = Chunker.run(spark, prepped,
       Chunker.ChunkConfig(maxTokensPerChunk = 300, contextTokens = 50))
-    def summaries(requestsPerTask: Int): Seq[(Int, String)] =
-      SummarizeMap.run(spark, chunks, LlmConfig(),
-          SummarizeMap.MapConfig(concurrency = 2, requestsPerTask = requestsPerTask))
+    def summaries(in: Dataset[Chunk], concurrency: Int): Seq[(Int, String)] =
+      SummarizeMap.run(spark, in, LlmConfig(),
+          SummarizeMap.MapConfig(concurrency = concurrency))
         .collect().map(c => c.chunkIndex -> c.summary).toSeq.sortBy(_._1)
-    assert(summaries(4) == summaries(1))
+    val sequential = summaries(chunks, 1)
+    assert(sequential.size > 1)
+    // One window in one task, then windows in three tasks at once.
+    for (in <- Seq(chunks, chunks.repartition(3))) {
+      assert(summaries(in, 1) == sequential)
+      assert(summaries(in, 4) == sequential)
+    }
   }
 
-  /** An OpenAI-shaped local provider that records every request body.
-    * The reply is a digest of the body, so distinct prompts get distinct
-    * summaries; replies are short, so the reduce is one direct call. */
-  private def withRecordingProvider(f: (LlmConfig, () => Seq[String]) => Unit): Unit = {
+  /** An OpenAI-shaped local provider that records every request body and
+    * the peak number of requests open at once. The reply is a digest of
+    * the body, so distinct prompts get distinct summaries; replies are
+    * short, so the reduce is one direct call. `holdMs` and `status` give
+    * each request's hold time and HTTP status from its body; a failed
+    * request is answered `boom`. */
+  private def withProvider(holdMs: String => Long, status: String => Int)(
+      f: (LlmConfig, () => Seq[String], () => Int) => Unit): Unit = {
     val bodies = new ConcurrentLinkedQueue[String]()
+    val open = new AtomicInteger(0)
+    val peak = new AtomicInteger(0)
+    val handlers = Executors.newCachedThreadPool()
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.setExecutor(handlers)
     server.createContext("/", { (ex: HttpExchange) =>
       val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
       bodies.add(body)
-      val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(body.getBytes(StandardCharsets.UTF_8)).map("%02x".format(_)).mkString
+      peak.accumulateAndGet(open.incrementAndGet(), (a, b) => math.max(a, b))
+      // Counted as closed before the reply goes out, so a request the
+      // client sends on receiving it never overlaps this one in the count.
+      try Thread.sleep(holdMs(body)) finally open.decrementAndGet()
+      val code = status(body)
       val reply =
-        s"""{"choices":[{"message":{"role":"assistant","content":"summary $digest"}}],""" +
-          """"usage":{"prompt_tokens":10,"completion_tokens":5}}"""
+        if (code != 200) "boom"
+        else
+          s"""{"choices":[{"message":{"role":"assistant","content":"${replyTo(body)}"}}],""" +
+            """"usage":{"prompt_tokens":10,"completion_tokens":5}}"""
       val bytes = reply.getBytes(StandardCharsets.UTF_8)
       ex.getResponseHeaders.add("Content-Type", "application/json")
-      ex.sendResponseHeaders(200, bytes.length)
+      ex.sendResponseHeaders(code, bytes.length)
       ex.getResponseBody.write(bytes)
       ex.close()
     })
@@ -109,9 +128,19 @@ class PipelineSpec extends SparkSuite {
     try {
       val llm = LlmConfig(provider = "openai", model = "gpt-4", apiKey = Some("k"),
         endpoint = Some(s"http://127.0.0.1:${server.getAddress.getPort}"))
-      f(llm, () => { val b = bodies.asScala.toSeq; bodies.clear(); b })
-    } finally server.stop(0)
+      f(llm, () => { val b = bodies.asScala.toSeq; bodies.clear(); b }, () => peak.get())
+    } finally {
+      server.stop(0)
+      handlers.shutdownNow()
+    }
   }
+
+  private def replyTo(body: String): String =
+    "summary " + java.security.MessageDigest.getInstance("MD5")
+      .digest(body.getBytes(StandardCharsets.UTF_8)).map("%02x".format(_)).mkString
+
+  private def withRecordingProvider(f: (LlmConfig, () => Seq[String]) => Unit): Unit =
+    withProvider(_ => 0L, _ => 200)((llm, drain, _) => f(llm, drain))
 
   // Map requests carry the (default, empty) map system prompt; reduce
   // requests carry the reduce system prompt.
@@ -144,6 +173,64 @@ class PipelineSpec extends SparkSuite {
       assert(nAgain == out.result.chunks)
       assert(again.distinct.size == nAgain)
       assert(again.toSet == mapBodies.toSet, "the bare map sent other prompts")
+    }
+  }
+
+  test("a transcript keeps concurrency map requests in flight above the slot count") {
+    val concurrency = spark.sparkContext.defaultParallelism + 1
+    // 60 segments of about 100 tokens, two speakers in turn.
+    val words = "the quarterly numbers were strong across every region this year " * 6
+    val segments = (0 until 60).map { i =>
+      s"""{"start":${30.0 * i},"end":${30.0 * i + 29},"text":"$words $i",""" +
+        s""""speaker":"${if (i % 2 == 0) "ALICE" else "BOB"}"}"""
+    }
+    val input = java.nio.file.Files.createTempFile("inflight", ".json")
+    try {
+      java.nio.file.Files.writeString(input, segments.mkString("""{"segments":[""", ",", "]}"))
+      withProvider(_ => 150L, _ => 200) { (llm, drain, peak) =>
+        val out = Summarizer.summarizePath(spark, input.toString,
+          Summarizer.Config(llm = llm,
+            chunk = Chunker.ChunkConfig(maxTokensPerChunk = 300, contextTokens = 50),
+            map = SummarizeMap.MapConfig(concurrency = concurrency)))
+        val nMap = drain().count(isMapRequest)
+        assert(out.result.chunks >= 2 * concurrency)
+        assert(nMap == out.result.chunks)
+        assert(peak() == concurrency)
+      }
+    } finally java.nio.file.Files.delete(input)
+  }
+
+  test("level-1 batch outputs reach the final combine in batch order, errors as text") {
+    import spark.implicits._
+    val batchNo = """Batch: (\d+)/\d+""".r
+    def batchOf(body: String): Option[Int] =
+      batchNo.findFirstMatchIn(body).map(_.group(1).toInt)
+    val failing = 2
+    // Later batches are answered faster, so they finish first.
+    withProvider(b => batchOf(b).fold(0L)(i => 40L * (10 - i)),
+        b => if (batchOf(b).contains(failing)) 500 else 200) { (llm, drain, _) =>
+      val rows = (0 until 12).map { i =>
+        ProcessedChunk(i, 10.0 * i, 10.0 * i + 10, "t", "t", 10, Seq("A"), 12,
+          100.0 * i / 12, i, s"point $i" + " word" * 30, 15, 0.0, None)
+      }
+      val agg = SummaryReduce.aggregate(spark, spark.createDataset(rows.reverse),
+        llm.copy(maxRetries = 1, retryDelaySec = 0),
+        SummaryReduce.AggConfig(maxTokensPerBatch = 120, reservedTokens = 20))
+      val sent = drain()
+      val (batches, combines) = sent.partition(batchOf(_).nonEmpty)
+      val nb = batches.size
+      assert(nb >= 3)
+      assert(batches.flatMap(batchOf).sorted == (1 to nb))
+      assert(sent.size == nb + 1)
+      assert(agg.chunksAggregated == 12)
+      val outputs = batches.sortBy(batchOf(_).get).map { b =>
+        if (batchOf(b).contains(failing))
+          "[Error aggregating summaries: java.lang.RuntimeException: OpenAI HTTP 500: boom]"
+        else replyTo(b)
+      }
+      val at = outputs.map(combines.head.indexOf(_))
+      assert(at.forall(_ >= 0), s"batch outputs missing from the final combine: $at")
+      assert(at == at.sorted, s"batch outputs out of order in the final combine: $at")
     }
   }
 
