@@ -1,6 +1,7 @@
 package graft.app
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, collect_set, count, lit}
 import graft.agg.SummaryReduce
 import graft.chunk.Chunker
 import graft.llm.{LlmConfig, Prompts, SummarizeMap}
@@ -10,7 +11,8 @@ import graft.text.TextFunctions
 
 /** The facade mirroring the reference's `TranscriptSummarizer`
   * (/root/reference/main.py:51-257): preprocess → chunk → LLM map →
-  * reduce, with the same knobs, as one lazy Spark pipeline.
+  * reduce, with the same knobs, as one lazy Spark pipeline that runs one
+  * Spark job per transcript: the map's collect.
   */
 object Summarizer {
 
@@ -37,16 +39,14 @@ object Summarizer {
   ): Output = {
     import spark.implicits._
     val t0 = System.nanoTime()
+    // The metadata is observed inside the map's pass (Dataset.observe):
+    // the loaded row count, and the span and speakers of the
+    // preprocessed transcript.
+    val loaded, prepped = Observation()
     val raw = Preprocess.loadTranscript(spark, inputPath)
-    // Reported segment count is POST-limit, like the reference's
-    // `segments[:limit]` then `len(segments)` (main.py:130-135, :253).
-    val rawCount = raw.count() // one job; both consumers below share it
-    val nSegments = cfg.prep.limitSegments
-      .fold(rawCount)(l => math.min(rawCount, l.toLong))
-
-    // Three consumers below (chunking, duration, speakers) — cache the
-    // preprocessed transcript instead of re-running load+fold per action.
-    val processed = Preprocess.run(spark, raw, cfg.prep).cache()
+      .observe(loaded, count(lit(1)).as("rows"))
+    val processed = Preprocess.run(spark, raw, cfg.prep)
+      .observe(prepped, collect_set(col("speaker")).as("speakers"), Preprocess.SpanColumns: _*)
     val chunks = Chunker.run(spark, processed, cfg.chunk)
     // The one action over the paid map; every later use reads these rows.
     // #summaries == #chunks, thousands at most, so the driver holds them.
@@ -55,11 +55,18 @@ object Summarizer {
     val mapped = spark.createDataset(rows)
     val nChunks = rows.size.toLong
 
+    // An observed node the optimizer pruned reports no metrics
+    // (`limitSegments = Some(0)` plans an empty relation): no rows.
+    val rawCount = loaded.get.getOrElse("rows", 0L).asInstanceOf[Long]
+    // Reported segment count is POST-limit, like the reference's
+    // `segments[:limit]` then `len(segments)` (main.py:130-135, :253).
+    val nSegments = cfg.prep.limitSegments
+      .fold(rawCount)(l => math.min(rawCount, l.toLong))
     // Metadata assembled like /root/reference/main.py:219-231.
-    val (durSec, _) = Preprocess.transcriptDuration(processed)
-    val speakers = Preprocess.extractSpeakers(processed)
-    // All consumers of the preprocessed transcript have run.
-    processed.unpersist()
+    val seen = prepped.get
+    val durSec = Preprocess.spanSeconds(seen)
+    val speakers = Preprocess.speakerList(
+      seen.getOrElse("speakers", Nil).asInstanceOf[collection.Seq[String]].toSeq)
     val metadata = cfg.agg.metadata ++ Seq(
       // Duration is rendered in h/m/s words in the metadata block
       // (/root/reference/main.py:229,324-332), not HH:MM:SS.

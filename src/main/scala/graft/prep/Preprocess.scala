@@ -1,7 +1,8 @@
 package graft.prep
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType, StructType}
 import graft.model.{ProcessedSegment, RawSegment, SegmentTimestamp}
 import graft.text.TextFunctions
 
@@ -34,20 +35,43 @@ object Preprocess {
       limitSegments: Option[Int] = None
   )
 
+  /** The read schema of the transcript contract [[loadTranscript]]
+    * loads: times are JSON numbers, `text` and `speaker` strings; other
+    * fields are ignored. */
+  val TranscriptSchema: StructType = new StructType()
+    .add("segments", ArrayType(new StructType()
+      .add("start", DoubleType)
+      .add("end", DoubleType)
+      .add("text", StringType)
+      .add("speaker", StringType)))
+
   /** S1: load the `{"segments":[...]}` transcript contract
     * (/root/reference/README.md:162-175). posexplode preserves the JSON
     * array position as the explicit ordering key the reference gets for
-    * free from Python list order. */
+    * free from Python list order.
+    *
+    * The read uses [[TranscriptSchema]], so it runs no schema-inference
+    * job, and mode `FAILFAST`: truncated JSON or a time that is not a
+    * number (`"start": "0.5"`) fails the first action with
+    * `FAILED_READ_FILE` naming the file, instead of loading as null.
+    * Integer times read as doubles; a number in `text` or `speaker` reads
+    * as its JSON text. A file without a `segments` array fails the first
+    * action with an error naming `path`. An empty array loads as zero
+    * rows, and a segment without `speaker` loads with speaker `""`. */
   def loadTranscript(spark: SparkSession, path: String): Dataset[RawIndexed] = {
     import spark.implicits._
+    val segments = coalesce(col("segments"),
+      raise_error(lit(s"transcript $path has no segments array")))
     spark.read
+      .schema(TranscriptSchema)
       .option("multiLine", true)
+      .option("mode", "FAILFAST")
       .json(path)
-      .select(posexplode(col("segments")).as(Seq("rowIdx", "seg")))
+      .select(posexplode(segments).as(Seq("rowIdx", "seg")))
       .select(
         col("rowIdx").cast("long"),
-        col("seg.start").cast("double").as("start"),
-        col("seg.end").cast("double").as("end"),
+        col("seg.start"),
+        col("seg.end"),
         coalesce(col("seg.text"), lit("")).as("text"),
         coalesce(col("seg.speaker"), lit("")).as("speaker")
       )
@@ -263,20 +287,35 @@ object Preprocess {
       ds: Dataset[ProcessedSegment],
       cap: Int = MaxSpeakers): Seq[String] = {
     import ds.sparkSession.implicits._
-    val found = ds.select("speaker").distinct().limit(cap + 1).as[String].collect()
-    require(found.length <= cap,
+    speakerList(ds.select("speaker").distinct().limit(cap + 1).as[String].collect().toSeq, cap)
+  }
+
+  /** A4's result from a transcript's distinct speakers: sorted, and
+    * refused above `cap` (see [[extractSpeakers]]). */
+  def speakerList(distinct: Seq[String], cap: Int = MaxSpeakers): Seq[String] = {
+    require(distinct.length <= cap,
       s"extractSpeakers found > $cap distinct speakers — this is " +
         "a transcript-scale operator; use the distributed " +
         "select(\"speaker\").distinct() frame for corpus-scale analytics")
-    found.sorted.toSeq
+    distinct.sorted
   }
+
+  /** A5's aggregates over preprocessed rows, named `start` and `end`: the
+    * first start and the last end. */
+  val SpanColumns: Seq[Column] = Seq(min(col("start")).as("start"), max(col("end")).as("end"))
+
+  /** Seconds from `start` to `end` as [[SpanColumns]] name them; 0 when
+    * they are null or absent (no rows). */
+  def spanSeconds(span: Map[String, Any]): Double =
+    (span.get("start"), span.get("end")) match {
+      case (Some(s: Double), Some(e: Double)) => e - s
+      case _                                  => 0.0
+    }
 
   /** A5: transcript duration (/root/reference/preprocessor.py:344-361). */
   def transcriptDuration(ds: Dataset[ProcessedSegment]): (Double, String) = {
-    val row = ds.agg(min(col("start")), max(col("end"))).head()
-    val d =
-      if (row.isNullAt(0) || row.isNullAt(1)) 0.0
-      else row.getDouble(1) - row.getDouble(0)
+    val d = spanSeconds(
+      ds.agg(SpanColumns.head, SpanColumns.tail: _*).head().getValuesMap(Seq("start", "end")))
     (d, TextFunctions.formatHms(d))
   }
 }

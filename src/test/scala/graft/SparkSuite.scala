@@ -16,4 +16,11 @@ trait SparkSuite extends AnyFunSuite {
 
   def resourcePath(name: String): String =
     getClass.getClassLoader.getResource(name).getPath
+
+  /** Runs `f` on the path of a temporary transcript file holding `json`. */
+  def withTranscript(json: String)(f: String => Unit): Unit = {
+    val p = java.nio.file.Files.createTempFile("transcript", ".json")
+    try { java.nio.file.Files.writeString(p, json); f(p.toString) }
+    finally java.nio.file.Files.delete(p)
+  }
 }

@@ -12,6 +12,7 @@ import graft.chunk.Chunker
 import graft.llm.{LlmConfig, MockLlmClient, Prompts, SummarizeMap}
 import graft.model.{Chunk, ProcessedChunk}
 import graft.prep.Preprocess
+import graft.text.TextFunctions
 import org.apache.spark.sql.Dataset
 
 /** Slice-0 e2e (SURVEY §7.2-1): JSON → preprocess → chunk → mock LLM map →
@@ -173,6 +174,50 @@ class PipelineSpec extends SparkSuite {
       assert(nAgain == out.result.chunks)
       assert(again.distinct.size == nAgain)
       assert(again.toSet == mapBodies.toSet, "the bare map sent other prompts")
+    }
+  }
+
+  test("the final reduce request carries the transcript's metadata") {
+    import graft.llm.MiniJson.esc
+    val path = resourcePath("mini_multi_speaker.json")
+    val chunkCfg = Chunker.ChunkConfig(maxTokensPerChunk = 300, contextTokens = 50)
+    val preps = Seq(
+      Preprocess.PrepConfig(),
+      Preprocess.PrepConfig(timeIntervalSeconds = Some(60)),
+      Preprocess.PrepConfig(limitSegments = Some(10)),
+      Preprocess.PrepConfig(limitSegments = Some(0)))
+    withRecordingProvider { (llm, drain) =>
+      for (prep <- preps) {
+        val out = Summarizer.summarizePath(spark, path,
+          Summarizer.Config(llm = llm, prep = prep, chunk = chunkCfg)).result
+        val sent = drain()
+        val (mapBodies, reduceBodies) = sent.partition(isMapRequest)
+        val nRaw = Preprocess.loadTranscript(spark, path).count()
+        val processed = Preprocess.run(spark, Preprocess.loadTranscript(spark, path), prep)
+        val nSegments = prep.limitSegments.fold(nRaw)(l => math.min(nRaw, l.toLong))
+        val (duration, _) = Preprocess.transcriptDuration(processed)
+        val speakers = Preprocess.extractSpeakers(processed)
+        assert(out.segments == nSegments, s"$prep")
+        assert(out.chunks == mapBodies.size, s"$prep")
+        if (prep.limitSegments.contains(0)) {
+          assert(nSegments == 0 && out.chunks == 0 && out.summary == "")
+          assert(sent.isEmpty)
+        } else {
+          val block = Prompts.metadataBlock(Seq(
+            "Transcript Duration" -> TextFunctions.formatDurationWords(duration),
+            "Number of Speakers" -> speakers.size.toString,
+            "Speakers" -> speakers.mkString(", "),
+            "Number of Segments" -> nSegments.toString,
+            "Number of Chunks" -> out.chunks.toString))
+          assert(out.chunks > 0 && duration > 0 && speakers.nonEmpty, s"$prep")
+          assert(reduceBodies.size == 1, s"$prep")
+          assert(reduceBodies.head.contains(esc(block)), s"$prep: no $block")
+        }
+      }
+      // The interval fold's speakers are joined lists, and the limit cuts.
+      val intervals = Preprocess.run(spark, Preprocess.loadTranscript(spark, path), preps(1))
+      assert(Preprocess.extractSpeakers(intervals).exists(_.contains(", ")))
+      assert(Preprocess.loadTranscript(spark, path).count() > 10)
     }
   }
 

@@ -1,11 +1,76 @@
 package graft.app
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.SparkSuite
+import graft.agg.SummaryReduce
+import graft.chunk.Chunker
 import graft.model.ProcessedChunk
 
-/** The summarizer's driver-side sinks and CLI surface. */
+/** The summarizer's Spark jobs, inputs at the edge of the contract,
+  * driver-side sinks and CLI surface. */
 class SummarizerSpec extends SparkSuite {
+
+  /** `f`'s result, and the Spark jobs it starts from this thread and the
+    * threads it spawns. */
+  private def withJobCount[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val (key, tag) = ("graft.test.jobTag", java.util.UUID.randomUUID().toString)
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == tag)) jobs.incrementAndGet()
+    }
+    BusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    val result =
+      try f
+      finally {
+        sc.setLocalProperty(key, null)
+        BusDrain.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    (result, jobs.get)
+  }
+
+  test("one summarizePath call runs one Spark job, under a direct and a two-level reduce") {
+    val chunk = Chunker.ChunkConfig(maxTokensPerChunk = 300, contextTokens = 50)
+    val direct = Summarizer.Config(chunk = chunk)
+    val twoLevel = direct.copy(
+      agg = SummaryReduce.AggConfig(maxTokensPerBatch = 40, reservedTokens = 10))
+    for ((cfg, levels) <- Seq(direct -> 1, twoLevel -> 2)) {
+      val (result, jobs) = withJobCount(Summarizer.summarizePath(
+        spark, resourcePath("mini_multi_speaker.json"), cfg).result)
+      assert(result.chunks > 1)
+      // The mock charges 100 tokens a call: one reduce call, or batches
+      // and a final combine.
+      assert((result.tokensUsed > result.chunks * 100 + 100) == (levels == 2))
+      assert(jobs == 1, s"$levels-level reduce")
+    }
+  }
+
+  test("an empty segments array summarizes to nothing, with no LLM call") {
+    withTranscript("""{"segments": []}""") { path =>
+      val out = Summarizer.summarizePath(spark, path)
+      assert(out.result.segments == 0)
+      assert(out.result.chunks == 0)
+      assert(out.result.summary == "")
+      assert(out.result.tokensUsed == 0)
+    }
+  }
+
+  test("segments without a speaker key summarize as one unnamed speaker") {
+    val segs = (0 until 3).map(i => s"""{"start": ${10 * i}, "end": ${10 * i + 9}, "text": "part $i"}""")
+    withTranscript(segs.mkString("""{"segments": [""", ",", "]}")) { path =>
+      val out = Summarizer.summarizePath(spark, path)
+      assert(out.result.segments == 3)
+      assert(out.result.chunks == 1)
+      assert(out.result.summary.contains("MOCK SUMMARY"))
+    }
+  }
 
   test("saveChunks writes the chunks in chunk order with the reference's fields") {
     import spark.implicits._

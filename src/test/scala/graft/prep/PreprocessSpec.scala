@@ -130,4 +130,54 @@ class PreprocessSpec extends SparkSuite {
       Preprocess.PrepConfig(limitSegments = Some(10), mergeSameSpeaker = false))
     assert(out.count() <= 10)
   }
+
+  private def load(path: String): Seq[RawIndexed] =
+    Preprocess.loadTranscript(spark, path).collect().toSeq
+
+  test("a transcript outside the contract fails with an error naming the file") {
+    val broken = Seq(
+      "no segments array" -> """{"items": [{"start": 0, "end": 1, "text": "a"}]}""",
+      "truncated JSON" -> """{"segments": [{"start": 0, "end": 1, "text": "a"}, {"sta""",
+      "a string time" -> """{"segments": [{"start": "0.5", "end": 1, "text": "a"}]}""")
+    for ((what, json) <- broken) withTranscript(json) { path =>
+      val e = intercept[Exception](load(path))
+      val messages = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString("\n")
+      assert(messages.contains(path), s"$what: $messages")
+    }
+  }
+
+  test("integer times, numeric text and extra fields load as the contract's types") {
+    val json =
+      """{"meta": {"lang": "en"}, "segments": [
+        |  {"start": 0, "end": 2, "text": "a", "speaker": "A", "confidence": 0.9},
+        |  {"start": 2.5, "end": 4, "text": 42, "speaker": "B", "words": [1, 2]}
+        |]}""".stripMargin
+    withTranscript(json) { path =>
+      assert(load(path) == Seq(
+        RawIndexed(0, 0.0, 2.0, "a", "A"),
+        RawIndexed(1, 2.5, 4.0, "42", "B")))
+    }
+  }
+
+  test("an empty segments array loads as no rows") {
+    withTranscript("""{"segments": []}""") { path =>
+      assert(load(path).isEmpty)
+    }
+  }
+
+  test("segments without a speaker key load with speaker \"\"") {
+    val json = """{"segments": [{"start": 0, "end": 1, "text": "a"}, {"start": 1, "end": 2, "text": "b"}]}"""
+    withTranscript(json) { path =>
+      assert(load(path) == Seq(RawIndexed(0, 0.0, 1.0, "a", ""), RawIndexed(1, 1.0, 2.0, "b", "")))
+    }
+  }
+
+  test("transcriptDuration spans the first start to the last end, 0 on no rows") {
+    import spark.implicits._
+    val segs = Seq(seg(5, 9, "A", "x", 0), seg(9, 30.5, "B", "y", 1)).toDS()
+    assert(Preprocess.transcriptDuration(segs)._1 == 25.5)
+    assert(Preprocess.transcriptDuration(segs.limit(0))._1 == 0.0)
+    assert(Preprocess.spanSeconds(Map.empty) == 0.0)
+  }
 }
