@@ -83,24 +83,35 @@ object SummaryReduce {
     math.min(perBatch, cfg.maxSummariesPerBatch)
   }
 
-  /** Full reduce over the mapped chunks. Level 1 keeps up to
-    * min(#batches, defaultParallelism) batch calls in flight on the
-    * driver; level 2 is a single driver-side call. */
+  /** Full reduce over the mapped chunks: one collect, then the reduce
+    * over the driver-held rows. */
   def aggregate(
       spark: SparkSession,
       chunks: Dataset[ProcessedChunk],
       llmCfg: LlmConfig,
       cfg: AggConfig = AggConfig()
-  ): AggResult = {
+  ): AggResult =
     // One action over the input: #summaries == #chunks, thousands at most
     // — the DATA was reduced by the map stage; this is the reference's
-    // exact reduce boundary. Order is restored here, on the driver.
-    val rows = chunks.collect().sortBy(_.chunkIndex)
+    // exact reduce boundary.
+    aggregate(spark, chunks.collect().toSeq, llmCfg, cfg)
+
+  /** Full reduce over driver-held mapped chunks, in `chunkIndex` order
+    * whatever their order here. Level 1 keeps up to
+    * min(#batches, defaultParallelism) batch calls in flight on the
+    * driver; level 2 is a single driver-side call. */
+  def aggregate(
+      spark: SparkSession,
+      chunks: Seq[ProcessedChunk],
+      llmCfg: LlmConfig,
+      cfg: AggConfig
+  ): AggResult = {
+    val rows = chunks.sortBy(_.chunkIndex)
     val n = rows.length.toLong
     if (n == 0) return AggResult("", 0, 0, 0.0)
 
     // F8 position prefix, in chunk order (/root/reference/result_aggregator.py:78-91).
-    val prefixed: Seq[String] = rows.toSeq.map { c =>
+    val prefixed: Seq[String] = rows.map { c =>
       Prompts.positionPrefix(
         TextFunctions.formatHms(c.startTime),
         TextFunctions.formatHms(c.endTime),

@@ -1,18 +1,20 @@
 package graft.app
 
-import org.apache.spark.sql.{Dataset, Observation, SparkSession}
-import org.apache.spark.sql.functions.{col, collect_set, count, lit}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import graft.agg.SummaryReduce
 import graft.chunk.Chunker
 import graft.llm.{LlmConfig, Prompts, SummarizeMap}
-import graft.model.{ProcessedChunk, SummaryResult}
+import graft.model.{MappedTranscript, ProcessedChunk, SummaryResult, Transcript}
 import graft.prep.Preprocess
 import graft.text.TextFunctions
 
 /** The facade mirroring the reference's `TranscriptSummarizer`
   * (/root/reference/main.py:51-257): preprocess → chunk → LLM map →
-  * reduce, with the same knobs, as one lazy Spark pipeline that runs one
-  * Spark job per transcript: the map's collect.
+  * reduce, with the same knobs. A transcript file is read as the one row
+  * it is, and [[mapTranscript]] runs preprocess, chunk and the paid map
+  * over it inside the task that reads it, so a transcript is one Spark job
+  * (the collect) and the reduce runs on the driver. A corpus of files is N
+  * rows of the same map.
   */
 object Summarizer {
 
@@ -32,52 +34,63 @@ object Summarizer {
       processedChunks: Dataset[ProcessedChunk]
   )
 
+  // Derived once per JVM, not per call.
+  private lazy val MappedEncoder = Encoders.product[MappedTranscript]
+  private lazy val ChunkEncoder = Encoders.product[ProcessedChunk]
+
+  /** One transcript through the local forms of every layered stage:
+    * [[Preprocess.indexLocal]], the limit, [[Preprocess.enrichLocal]],
+    * [[Preprocess.foldLocal]], [[Chunker.chunkLocal]] and
+    * [[SummarizeMap.mapLocal]]. Rows stay in array order, and every fold
+    * keeps `rowIdx` ascending, so nothing sorts. */
+  def mapTranscript(t: Transcript, cfg: Config): MappedTranscript = {
+    val raw = Preprocess.indexLocal(t)
+    // The reported segment count is POST-limit, like the reference's
+    // `segments[:limit]` then `len(segments)` (main.py:130-135, :253).
+    val limited = cfg.prep.limitSegments.fold(raw)(raw.take)
+    val prepped = Preprocess.foldLocal(limited.flatMap(Preprocess.enrichLocal), cfg.prep)
+    val chunks = Chunker.chunkLocal(prepped, cfg.chunk)
+    MappedTranscript(
+      segments = limited.size.toLong,
+      durationSec = Preprocess.spanLocal(prepped),
+      speakers = prepped.map(_.speaker).distinct,
+      chunks = SummarizeMap.mapLocal(chunks.iterator, cfg.llm, cfg.map).toVector)
+  }
+
+  private def requireOneTranscript(path: String, n: Int): Unit =
+    require(n <= 1, s"$path holds $n transcripts; summarizePath summarizes one")
+
   def summarizePath(
       spark: SparkSession,
       inputPath: String,
       cfg: Config = Config()
   ): Output = {
-    import spark.implicits._
     val t0 = System.nanoTime()
-    // The metadata is observed inside the map's pass (Dataset.observe):
-    // the loaded row count, and the span and speakers of the
-    // preprocessed transcript.
-    val loaded, prepped = Observation()
-    val raw = Preprocess.loadTranscript(spark, inputPath)
-      .observe(loaded, count(lit(1)).as("rows"))
-    val processed = Preprocess.run(spark, raw, cfg.prep)
-      .observe(prepped, collect_set(col("speaker")).as("speakers"), Preprocess.SpanColumns: _*)
-    val chunks = Chunker.run(spark, processed, cfg.chunk)
-    // The one action over the paid map; every later use reads these rows.
-    // #summaries == #chunks, thousands at most, so the driver holds them.
-    val rows = SummarizeMap.run(spark, chunks, cfg.llm, cfg.map)
-      .collect().sortBy(_.chunkIndex).toSeq
-    val mapped = spark.createDataset(rows)
+    cfg.prep.limitSegments.foreach(l => require(l >= 0, s"limitSegments must be >= 0, got $l"))
+    val read = Preprocess.readTranscripts(spark, inputPath)
+    // A directory of transcript files is refused before its map is paid.
+    requireOneTranscript(inputPath, read.inputFiles.length)
+    // The one Spark job. #chunks is thousands at most, so the driver
+    // holds the mapped rows; every later use reads them.
+    val mapped = read.mapPartitions(_.map(mapTranscript(_, cfg)))(MappedEncoder).collect()
+    // A file holding a JSON array of transcripts reads as a row each.
+    requireOneTranscript(inputPath, mapped.length)
+    val t = mapped.headOption.getOrElse(MappedTranscript(0, 0.0, Nil, Nil))
+    val rows = t.chunks
     val nChunks = rows.size.toLong
-
-    // An observed node the optimizer pruned reports no metrics
-    // (`limitSegments = Some(0)` plans an empty relation): no rows.
-    val rawCount = loaded.get.getOrElse("rows", 0L).asInstanceOf[Long]
-    // Reported segment count is POST-limit, like the reference's
-    // `segments[:limit]` then `len(segments)` (main.py:130-135, :253).
-    val nSegments = cfg.prep.limitSegments
-      .fold(rawCount)(l => math.min(rawCount, l.toLong))
+    val speakers = Preprocess.speakerList(t.speakers)
     // Metadata assembled like /root/reference/main.py:219-231.
-    val seen = prepped.get
-    val durSec = Preprocess.spanSeconds(seen)
-    val speakers = Preprocess.speakerList(
-      seen.getOrElse("speakers", Nil).asInstanceOf[collection.Seq[String]].toSeq)
     val metadata = cfg.agg.metadata ++ Seq(
       // Duration is rendered in h/m/s words in the metadata block
       // (/root/reference/main.py:229,324-332), not HH:MM:SS.
-      "Transcript Duration" -> TextFunctions.formatDurationWords(durSec),
+      "Transcript Duration" -> TextFunctions.formatDurationWords(t.durationSec),
       "Number of Speakers" -> speakers.size.toString,
       "Speakers" -> speakers.mkString(", "),
-      "Number of Segments" -> nSegments.toString,
+      "Number of Segments" -> t.segments.toString,
       "Number of Chunks" -> nChunks.toString
     )
     val agg = SummaryReduce.aggregate(
-      spark, mapped, cfg.llm, cfg.agg.copy(metadata = metadata))
+      spark, rows, cfg.llm, cfg.agg.copy(metadata = metadata))
 
     Output(
       SummaryResult(
@@ -85,12 +98,12 @@ object Summarizer {
         processingTimeSec = (System.nanoTime() - t0) / 1e9,
         tokensUsed = rows.map(_.tokensUsed.toLong).sum + agg.tokensUsed,
         cost = rows.map(_.cost).sum + agg.cost,
-        segments = nSegments,
+        segments = t.segments,
         chunks = nChunks,
         provider = cfg.llm.provider,
         model = cfg.llm.model
       ),
-      mapped
+      spark.createDataset(rows)(ChunkEncoder)
     )
   }
 

@@ -7,10 +7,11 @@ import graft.model.{Chunk, ProcessedChunk}
   * /root/reference/llm_executor.py:110-230).
   *
   * Spark-first shape: `concurrency` is the number of requests in flight
-  * per task, not a partition count. Each task runs its chunks through an
-  * [[Inflight]] window over the input's own partitioning, so the HTTP wait
-  * holds no extra Spark task slots. `Chunker.run` yields one partition, so
-  * a transcript has exactly `concurrency` requests in flight on any core
+  * per task, not a partition count. [[mapLocal]] runs a task's chunks
+  * through an [[Inflight]] window, so the HTTP wait holds no extra Spark
+  * task slots. The summarizer maps a transcript's chunks inside its one
+  * per-transcript task, and `Chunker.run` yields one partition, so a
+  * transcript has exactly `concurrency` requests in flight on any core
   * count (the reference's semaphore); `p` partitions have up to
   * `p × concurrency`. The client, its retries, and error-as-row semantics
   * live INSIDE `mapPartitions` so a flaky API call never triggers a Spark
@@ -37,24 +38,31 @@ object SummarizeMap {
       cfg: MapConfig = MapConfig()
   ): Dataset[ProcessedChunk] = {
     import spark.implicits._
+    chunks.mapPartitions(it => mapLocal(it, llmCfg, cfg))
+  }
+
+  /** The map over one task's chunks: each chunk's prompt through one
+    * client, `cfg.concurrency` requests in flight, results in input
+    * order. [[run]] applies it per partition and the summarizer per
+    * transcript. */
+  def mapLocal(
+      chunks: Iterator[Chunk],
+      llmCfg: LlmConfig,
+      cfg: MapConfig
+  ): Iterator[ProcessedChunk] = {
     val template = Prompts.ensureTranscriptPlaceholder(cfg.promptTemplate)
     val system = cfg.systemPrompt.getOrElse("")
-    val summaryType = cfg.summaryType
-    val useContext = cfg.useContextText
-    val inflight = cfg.concurrency
-    chunks.mapPartitions { it =>
-      // One client per task, shared by its window's threads: the HTTP
-      // client is thread-safe and reuses connections.
-      val client = LlmClient.forConfig(llmCfg)
-      Inflight.ordered(it, inflight) { chunk =>
-        val body = if (useContext) chunk.textWithContext else chunk.text
-        val user = Prompts.fill(
-          Prompts.fill(template, "transcript", body),
-          "summary_type",
-          summaryType
-        )
-        toProcessed(chunk, client.completeWithRetry(system, user))
-      }
+    // One client, shared by the window's threads: the HTTP client is
+    // thread-safe and reuses connections.
+    val client = LlmClient.forConfig(llmCfg)
+    Inflight.ordered(chunks, cfg.concurrency) { chunk =>
+      val body = if (cfg.useContextText) chunk.textWithContext else chunk.text
+      val user = Prompts.fill(
+        Prompts.fill(template, "transcript", body),
+        "summary_type",
+        cfg.summaryType
+      )
+      toProcessed(chunk, client.completeWithRetry(system, user))
     }
   }
 

@@ -16,6 +16,9 @@ case class RawSegment(
     speaker: String
 )
 
+/** One transcript file of the contract: its segments in file order. */
+case class Transcript(segments: Seq[RawSegment])
+
 /** One `{start,end,text}` (plus optional speaker) element of a combined
   * segment's provenance list (/root/reference/preprocessor.py:203-213). */
 case class SegmentTimestamp(
@@ -73,6 +76,17 @@ case class ProcessedChunk(
     tokensUsed: Int,
     cost: Double,
     error: Option[String]
+)
+
+/** One transcript through preprocess, chunk and map: the reduce's
+  * metadata (segment count after the limit, duration and distinct
+  * speakers of the preprocessed rows) and the mapped chunks in
+  * `chunkIndex` order. */
+case class MappedTranscript(
+    segments: Long,
+    durationSec: Double,
+    speakers: Seq[String],
+    chunks: Seq[ProcessedChunk]
 )
 
 /** Final result (/root/reference/main.py:248-257). */

@@ -1,29 +1,27 @@
 package graft.prep
 
-import org.apache.spark.sql.{Column, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType, StructType}
-import graft.model.{ProcessedSegment, RawSegment, SegmentTimestamp}
+import graft.model.{ProcessedSegment, SegmentTimestamp, Transcript}
 import graft.text.TextFunctions
 
 /** Preprocessing stage (SURVEY.md §2.2 F1/F2/F4, §2.3 A1/A2/A3/A4/A5 —
   * /root/reference/preprocessor.py).
   *
   * Two layers:
-  *   - pure Scala folds (`combineLocal`, `intervalLocal`) that reproduce the
-  *     reference's order-dependent semantics exactly and are unit-testable
-  *     without a SparkSession;
-  *   - Spark surfaces that run the declarative parts (filter/clean/enrich)
-  *     as codegen'd Column expressions and the stateful folds via
-  *     sort + mapPartitions.
+  *   - pure Scala functions (`indexLocal`, `enrichLocal`, `foldLocal`)
+  *     that reproduce the reference's semantics, its order-dependent folds
+  *     exactly, and are unit-testable without a SparkSession;
+  *   - Spark surfaces of the layered stages (`enrich`, `run`) that apply
+  *     them to Datasets, the folds via sort + mapPartitions.
   *
   * Scale design: a transcript is small (thousands of rows) even when a
   * corpus is 100 TB — the unit of parallelism is the TRANSCRIPT, not the
-  * segment. The single-transcript path here sorts into one partition
-  * (exact parity with the reference's sequential fold); the corpus-scale
-  * path keys by transcript and applies the same local folds per key via
-  * repartition + sortWithinPartitions (secondary-sort pattern, no global
-  * shuffle beyond the per-key hash) — see [[PerTranscript]].
+  * segment. The summarizer runs the local functions over a transcript
+  * file's one row ([[readTranscripts]]) in one task; the keyed corpus path
+  * applies the same folds per key via repartition + sortWithinPartitions
+  * (secondary-sort pattern) — see [[PerTranscript]].
   */
 object Preprocess {
 
@@ -35,8 +33,8 @@ object Preprocess {
       limitSegments: Option[Int] = None
   )
 
-  /** The read schema of the transcript contract [[loadTranscript]]
-    * loads: times are JSON numbers, `text` and `speaker` strings; other
+  /** The read schema of the transcript contract [[readTranscripts]]
+    * reads: times are JSON numbers, `text` and `speaker` strings; other
     * fields are ignored. */
   val TranscriptSchema: StructType = new StructType()
     .add("segments", ArrayType(new StructType()
@@ -45,10 +43,8 @@ object Preprocess {
       .add("text", StringType)
       .add("speaker", StringType)))
 
-  /** S1: load the `{"segments":[...]}` transcript contract
-    * (/root/reference/README.md:162-175). posexplode preserves the JSON
-    * array position as the explicit ordering key the reference gets for
-    * free from Python list order.
+  /** The transcript contract's read (the reference's README.md:162-175):
+    * one row per file, its `segments` in file order.
     *
     * The read uses [[TranscriptSchema]], so it runs no schema-inference
     * job, and mode `FAILFAST`: truncated JSON or a time that is not a
@@ -56,18 +52,39 @@ object Preprocess {
     * `FAILED_READ_FILE` naming the file, instead of loading as null.
     * Integer times read as doubles; a number in `text` or `speaker` reads
     * as its JSON text. A file without a `segments` array fails the first
-    * action with an error naming `path`. An empty array loads as zero
-    * rows, and a segment without `speaker` loads with speaker `""`. */
-  def loadTranscript(spark: SparkSession, path: String): Dataset[RawIndexed] = {
-    import spark.implicits._
-    val segments = coalesce(col("segments"),
-      raise_error(lit(s"transcript $path has no segments array")))
+    * action with an error naming `path`, and a segment with a null time
+    * with `NOT_NULL_ASSERT_VIOLATION`. */
+  def readTranscripts(spark: SparkSession, path: String): Dataset[Transcript] =
     spark.read
       .schema(TranscriptSchema)
       .option("multiLine", true)
       .option("mode", "FAILFAST")
       .json(path)
-      .select(posexplode(segments).as(Seq("rowIdx", "seg")))
+      .select(coalesce(col("segments"),
+        raise_error(lit(s"transcript $path has no segments array"))).as("segments"))
+      .as(TranscriptEncoder)
+
+  // Derived once per JVM, not per read.
+  private lazy val TranscriptEncoder = Encoders.product[Transcript]
+
+  /** S1: one transcript's segments as rows, each keyed by its array
+    * position, the explicit ordering key the reference gets for free from
+    * Python list order. A missing `text` or `speaker` reads as `""`, as in
+    * [[loadTranscript]]. */
+  def indexLocal(t: Transcript): Seq[RawIndexed] =
+    t.segments.zipWithIndex.map { case (s, i) =>
+      if (s == null) throw new NullPointerException(s"segment $i of the transcript is null")
+      RawIndexed(i.toLong, s.start, s.end, Option(s.text).getOrElse(""),
+        Option(s.speaker).getOrElse(""))
+    }
+
+  /** S1 over [[readTranscripts]] as codegen'd Columns: posexplode keys
+    * each segment by its array position, as [[indexLocal]] does. An empty
+    * array loads as zero rows. */
+  def loadTranscript(spark: SparkSession, path: String): Dataset[RawIndexed] = {
+    import spark.implicits._
+    readTranscripts(spark, path)
+      .select(posexplode(col("segments")).as(Seq("rowIdx", "seg")))
       .select(
         col("rowIdx").cast("long"),
         col("seg.start"),
@@ -78,9 +95,16 @@ object Preprocess {
       .as[RawIndexed]
   }
 
-  /** F1+F2+F4 as one codegen'd projection: drop empty texts, clean, format
-    * timestamps (/root/reference/preprocessor.py:36-54). S2 limit is pushed
-    * before everything, as the reference does with `--limit-segments`. */
+  /** F1+F2+F4 on one segment (the reference's preprocessor.py:36-54): drop
+    * a text that Spark's `trim` (U+0020 only) leaves empty, clean the
+    * text, format the times. */
+  def enrichLocal(r: RawIndexed): Option[ProcessedSegment] =
+    if (TextFunctions.trimSpaces(r.text).isEmpty) None
+    else Some(ProcessedSegment(r.start, r.end, TextFunctions.cleanText(r.text), r.speaker,
+      TextFunctions.formatHms(r.start), TextFunctions.formatHms(r.end), r.rowIdx))
+
+  /** [[enrichLocal]] over a Dataset. S2 limit is pushed before
+    * everything, as the reference does with `--limit-segments`. */
   def enrich(
       spark: SparkSession,
       raw: Dataset[RawIndexed],
@@ -91,23 +115,7 @@ object Preprocess {
       case Some(n) => raw.orderBy("rowIdx").limit(n)
       case None    => raw
     }
-    limited
-      .filter(trim(col("text")) =!= "")
-      .select(
-        col("start"),
-        col("end"),
-        TextFunctions.cleanTextCol(col("text")).as("text"),
-        col("speaker"),
-        TextFunctions.formatHmsCol(col("start")).as("startFormatted"),
-        TextFunctions.formatHmsCol(col("end")).as("endFormatted"),
-        col("rowIdx"),
-        lit(false).as("isCombined"),
-        lit(1).as("originalSegments"),
-        lit(false).as("isAggregated"),
-        lit(null).cast("int").as("intervalIndex"),
-        typedLit(Seq.empty[SegmentTimestamp]).as("segmentTimestamps")
-      )
-      .as[ProcessedSegment]
+    limited.mapPartitions(_.flatMap(enrichLocal))
   }
 
   // -------------------------------------------------------------------------
@@ -252,11 +260,10 @@ object Preprocess {
     cfg.timeIntervalSeconds.fold(merged)(intervalLocal(merged, _))
   }
 
-  /** Full preprocessing over a single transcript: the declarative stages
-    * run as one projection; the order-dependent folds run in one sorted
-    * partition (parity mode — a transcript always fits). `coalesce(1)`
-    * gathers it without a shuffle: a single multiLine JSON file is one
-    * partition already. */
+  /** Full preprocessing over a single transcript as Dataset stages:
+    * [[enrich]], then [[foldLocal]] in one sorted partition (parity mode —
+    * a transcript always fits). `coalesce(1)` gathers it without a
+    * shuffle: a single multiLine JSON file is one partition already. */
   def run(
       spark: SparkSession,
       raw: Dataset[RawIndexed],
@@ -300,22 +307,25 @@ object Preprocess {
     distinct.sorted
   }
 
-  /** A5's aggregates over preprocessed rows, named `start` and `end`: the
-    * first start and the last end. */
-  val SpanColumns: Seq[Column] = Seq(min(col("start")).as("start"), max(col("end")).as("end"))
-
-  /** Seconds from `start` to `end` as [[SpanColumns]] name them; 0 when
-    * they are null or absent (no rows). */
+  /** Seconds from `start` to `end`, the first start and the last end of
+    * [[transcriptDuration]]'s aggregate; 0 when they are null or absent
+    * (no rows). */
   def spanSeconds(span: Map[String, Any]): Double =
     (span.get("start"), span.get("end")) match {
       case (Some(s: Double), Some(e: Double)) => e - s
       case _                                  => 0.0
     }
 
+  /** [[spanSeconds]] over local rows: the first start to the last end, 0
+    * on no rows. */
+  def spanLocal(segs: Seq[ProcessedSegment]): Double =
+    if (segs.isEmpty) 0.0
+    else segs.map(_.end).reduce(_ max _) - segs.map(_.start).reduce(_ min _)
+
   /** A5: transcript duration (/root/reference/preprocessor.py:344-361). */
   def transcriptDuration(ds: Dataset[ProcessedSegment]): (Double, String) = {
-    val d = spanSeconds(
-      ds.agg(SpanColumns.head, SpanColumns.tail: _*).head().getValuesMap(Seq("start", "end")))
+    val span = ds.agg(min(col("start")).as("start"), max(col("end")).as("end")).head()
+    val d = spanSeconds(span.getValuesMap(Seq("start", "end")))
     (d, TextFunctions.formatHms(d))
   }
 }

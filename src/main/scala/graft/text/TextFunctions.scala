@@ -1,5 +1,6 @@
 package graft.text
 
+import java.util.regex.Pattern
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -12,7 +13,9 @@ import org.apache.spark.sql.functions._
   *     (codegen'd by Tungsten — no UDF in the hot path) for the
   *     DataFrame/oracle surface.
   *
-  * The two are kept semantically identical; ScalaTest cross-checks them.
+  * The two are kept semantically identical; `TextTwinsSpec` cross-checks
+  * them on generated inputs. The pipeline runs the Scala form; the Column
+  * form serves the oracle queries.
   */
 object TextFunctions {
 
@@ -22,35 +25,45 @@ object TextFunctions {
   // backreference), (c) insert a missing space after .!? before a letter.
   // -------------------------------------------------------------------------
 
-  private val WsRun = "\\s+"
+  private val WsRun = Pattern.compile("\\s+")
   // Backreference pattern — java.util.regex only; RE2-based engines (DuckDB)
   // cannot express this, so step (b) is excluded from the oracle query
   // surface and covered by ScalaTest goldens instead (SURVEY.md §7.4).
-  private val RepeatedWord = "\\b(\\w+)( \\1\\b)+"
-  private val MissingSpace = "([.!?])([A-Za-z])"
+  private val RepeatedWord = Pattern.compile("\\b(\\w+)( \\1\\b)+")
+  private val MissingSpace = Pattern.compile("([.!?])([A-Za-z])")
 
   def cleanText(s: String): String = {
     if (s == null) return null
-    val collapsed = s.replaceAll(WsRun, " ").trim
-    val deduped = collapsed.replaceAll(RepeatedWord, "$1")
-    deduped.replaceAll(MissingSpace, "$1 $2")
+    val collapsed = trimSpaces(WsRun.matcher(s).replaceAll(" "))
+    val deduped = RepeatedWord.matcher(collapsed).replaceAll("$1")
+    MissingSpace.matcher(deduped).replaceAll("$1 $2")
+  }
+
+  /** Spark's `trim`: strips U+0020 only, where `String.trim` strips every
+    * character up to U+0020, control characters included. */
+  def trimSpaces(s: String): String = {
+    var b = 0
+    var e = s.length
+    while (b < e && s.charAt(b) == ' ') b += 1
+    while (e > b && s.charAt(e - 1) == ' ') e -= 1
+    s.substring(b, e)
   }
 
   def cleanTextCol(c: Column): Column =
     regexp_replace(
       regexp_replace(
-        trim(regexp_replace(c, WsRun, " ")),
-        RepeatedWord,
+        trim(regexp_replace(c, WsRun.pattern, " ")),
+        RepeatedWord.pattern,
         "$1"
       ),
-      MissingSpace,
+      MissingSpace.pattern,
       "$1 $2"
     )
 
   /** Oracle-expressible subset of clean_text: steps (a) + (c) only — no
     * backreference, identical semantics in java regex and RE2. */
   def cleanTextPortableCol(c: Column): Column =
-    regexp_replace(trim(regexp_replace(c, WsRun, " ")), MissingSpace, "$1 $2")
+    regexp_replace(trim(regexp_replace(c, WsRun.pattern, " ")), MissingSpace.pattern, "$1 $2")
 
   // -------------------------------------------------------------------------
   // F3 format_timestamp (/root/reference/preprocessor.py:91-107): seconds →
@@ -62,7 +75,10 @@ object TextFunctions {
     val h = total / 3600
     val m = (total % 3600) / 60
     val s = total % 60
-    if (h > 0) f"$h%02d:$m%02d:$s%02d" else f"$m%02d:$s%02d"
+    // `%02d` without java.util.Formatter, which dominates the map's
+    // rendering cost: a negative value is already two wide ("-5").
+    def pad(v: Long): String = if (v >= 0 && v < 10) "0" + v else v.toString
+    if (h > 0) pad(h) + ":" + pad(m) + ":" + pad(s) else pad(m) + ":" + pad(s)
   }
 
   def formatHmsCol(seconds: Column): Column = {

@@ -7,7 +7,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.SparkSuite
 import graft.agg.SummaryReduce
 import graft.chunk.Chunker
+import graft.llm.SummarizeMap
 import graft.model.ProcessedChunk
+import graft.prep.Preprocess
+import graft.text.TextFunctions
 
 /** The summarizer's Spark jobs, inputs at the edge of the contract,
   * driver-side sinks and CLI surface. */
@@ -69,6 +72,81 @@ class SummarizerSpec extends SparkSuite {
       assert(out.result.segments == 3)
       assert(out.result.chunks == 1)
       assert(out.result.summary.contains("MOCK SUMMARY"))
+    }
+  }
+
+  test("summarizePath matches the layered Dataset stages under every prep, chunk and map shape") {
+    val base = Summarizer.Config(
+      chunk = Chunker.ChunkConfig(maxTokensPerChunk = 300, contextTokens = 50))
+    val configs = Seq(
+      base,
+      base.copy(prep = Preprocess.PrepConfig(mergeSameSpeaker = false)),
+      base.copy(prep = Preprocess.PrepConfig(timeIntervalSeconds = Some(60))),
+      base.copy(prep = Preprocess.PrepConfig(limitSegments = Some(10))),
+      base.copy(prep = Preprocess.PrepConfig(limitSegments = Some(0))),
+      base.copy(prep = Preprocess.PrepConfig(preserveTimestamps = false)),
+      base.copy(map = SummarizeMap.MapConfig(useContextText = false)))
+    for (fixture <- Seq("mini_multi_speaker.json", "oversized_segment.json"); cfg <- configs) {
+      val path = resourcePath(fixture)
+      val out = Summarizer.summarizePath(spark, path, cfg)
+      val raw = Preprocess.loadTranscript(spark, path)
+      val processed = Preprocess.run(spark, raw, cfg.prep)
+      val mapped = SummarizeMap.run(spark, Chunker.run(spark, processed, cfg.chunk), cfg.llm, cfg.map)
+      val rows = mapped.collect().sortBy(_.chunkIndex).toSeq
+      val nRaw = raw.count()
+      val nSegments = cfg.prep.limitSegments.fold(nRaw)(l => math.min(nRaw, l.toLong))
+      val (duration, _) = Preprocess.transcriptDuration(processed)
+      val speakers = Preprocess.extractSpeakers(processed)
+      val agg = SummaryReduce.aggregate(spark, mapped, cfg.llm, cfg.agg.copy(metadata = Seq(
+        "Transcript Duration" -> TextFunctions.formatDurationWords(duration),
+        "Number of Speakers" -> speakers.size.toString,
+        "Speakers" -> speakers.mkString(", "),
+        "Number of Segments" -> nSegments.toString,
+        "Number of Chunks" -> rows.size.toString)))
+      val what = s"$fixture $cfg"
+      assert(out.result.summary == agg.summary, what)
+      assert(out.result.tokensUsed == rows.map(_.tokensUsed.toLong).sum + agg.tokensUsed, what)
+      assert(out.result.segments == nSegments, what)
+      assert(out.result.chunks == rows.size, what)
+      assert(out.processedChunks.collect().toSeq == rows, what)
+    }
+  }
+
+  test("a directory of two transcripts fails with an error naming the path and the count") {
+    val dir = Files.createTempDirectory("transcripts")
+    val files = Seq("a.json", "b.json").map(dir.resolve)
+    try {
+      files.foreach(Files.writeString(_,
+        """{"segments": [{"start": 0, "end": 1, "text": "hello", "speaker": "A"}]}"""))
+      val e = intercept[IllegalArgumentException](
+        Summarizer.summarizePath(spark, dir.toString))
+      assert(e.getMessage.contains(dir.toString) && e.getMessage.contains("2 transcripts"),
+        e.getMessage)
+    } finally {
+      files.foreach(Files.deleteIfExists)
+      Files.delete(dir)
+    }
+  }
+
+  test("a negative limitSegments is refused before any job") {
+    val cfg = Summarizer.Config(prep = Preprocess.PrepConfig(limitSegments = Some(-1)))
+    val (e, jobs) = withJobCount(intercept[IllegalArgumentException](
+      Summarizer.summarizePath(spark, resourcePath("mini_multi_speaker.json"), cfg)))
+    assert(e.getMessage.contains("limitSegments"))
+    assert(jobs == 0)
+  }
+
+  test("a null start or a null segment fails the call with an error saying so") {
+    val broken = Seq(
+      """{"segments": [{"start": null, "end": 1, "text": "a", "speaker": "A"}]}""" ->
+        "NOT_NULL_ASSERT_VIOLATION",
+      """{"segments": [{"start": 0, "end": 1, "text": "a"}, null]}""" ->
+        "segment 1 of the transcript is null")
+    for ((json, expected) <- broken) withTranscript(json) { path =>
+      val e = intercept[Exception](Summarizer.summarizePath(spark, path))
+      val messages = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString("\n")
+      assert(messages.contains(expected), messages)
     }
   }
 
