@@ -23,7 +23,6 @@ object SummaryReduce {
   case class AggConfig(
       maxTokensPerBatch: Int = 6000,
       reservedTokens: Int = 1000,
-      maxSummariesPerBatch: Int = 10,
       hierarchical: Boolean = true,
       promptTemplate: Option[String] = None,
       metadata: Seq[(String, String)] = Seq.empty
@@ -72,15 +71,18 @@ object SummaryReduce {
     }
   }
 
+  /** The reference's cap on summaries per level-1 batch. */
+  val MaxSummariesPerBatch = 10
+
   /** A8 batch sizing (/root/reference/result_aggregator.py:357-380):
-    * min(10, max(1, (budget − reserved) / avgTokens)). */
+    * min([[MaxSummariesPerBatch]], max(1, (budget − reserved) / avgTokens)). */
   def batchSize(summaries: Seq[String], cfg: AggConfig): Int = {
     if (summaries.isEmpty) return 1
     val avg =
       summaries.map(TextFunctions.estimateTokens(_).toDouble).sum / summaries.size
     val perBatch =
       math.max(1, ((cfg.maxTokensPerBatch - cfg.reservedTokens) / avg).toInt)
-    math.min(perBatch, cfg.maxSummariesPerBatch)
+    math.min(perBatch, MaxSummariesPerBatch)
   }
 
   /** Full reduce over the mapped chunks: one collect, then the reduce

@@ -39,19 +39,18 @@ object Summarizer {
   private lazy val ChunkEncoder = Encoders.product[ProcessedChunk]
 
   /** One transcript through the local forms of every layered stage:
-    * [[Preprocess.indexLocal]], the limit, [[Preprocess.enrichLocal]],
-    * [[Preprocess.foldLocal]], [[Chunker.chunkLocal]] and
-    * [[SummarizeMap.mapLocal]]. Rows stay in array order, and every fold
-    * keeps `rowIdx` ascending, so nothing sorts. */
+    * [[Preprocess.indexLocal]], [[Preprocess.prepLocal]],
+    * [[Chunker.chunkLocal]] and [[SummarizeMap.mapLocal]]. Rows stay in
+    * array order, and every fold keeps `rowIdx` ascending, so nothing
+    * sorts. */
   def mapTranscript(t: Transcript, cfg: Config): MappedTranscript = {
     val raw = Preprocess.indexLocal(t)
-    // The reported segment count is POST-limit, like the reference's
-    // `segments[:limit]` then `len(segments)` (main.py:130-135, :253).
-    val limited = cfg.prep.limitSegments.fold(raw)(raw.take)
-    val prepped = Preprocess.foldLocal(limited.flatMap(Preprocess.enrichLocal), cfg.prep)
+    val prepped = Preprocess.prepLocal(raw, cfg.prep)
     val chunks = Chunker.chunkLocal(prepped, cfg.chunk)
     MappedTranscript(
-      segments = limited.size.toLong,
+      // The reported segment count is POST-limit, like the reference's
+      // `segments[:limit]` then `len(segments)` (main.py:130-135, :253).
+      segments = cfg.prep.limitSegments.fold(raw.size)(raw.size min _).toLong,
       durationSec = Preprocess.spanLocal(prepped),
       speakers = prepped.map(_.speaker).distinct,
       chunks = SummarizeMap.mapLocal(chunks.iterator, cfg.llm, cfg.map).toVector)

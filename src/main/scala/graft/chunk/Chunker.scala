@@ -19,7 +19,6 @@ object Chunker {
   case class ChunkConfig(
       maxTokensPerChunk: Int = 4000,
       contextTokens: Int = 150,
-      addContext: Boolean = true,
       /** Inter-chunk overlap: when a chunk closes on the token budget, the
         * trailing segments up to this many tokens are re-seeded into the
         * next chunk for summary continuity. The reference declares
@@ -112,8 +111,7 @@ object Chunker {
       val body = text.toString
       val idx = chunks.size
       val withContext =
-        if (cfg.addContext) contextHeader(idx, startTime, endTime, speakerList, position) + "\n\n" + body
-        else body
+        contextHeader(idx, startTime, endTime, speakerList, position) + "\n\n" + body
       lastItems = items.toSeq
       chunks += Chunk(
         segments = segs.toSeq,
@@ -334,10 +332,10 @@ object Chunker {
     out.toSeq
   }
 
-  /** Spark surface: gather into one partition with `coalesce(1)` (no
-    * shuffle) and sort by the explicit order key (parity — a single
-    * transcript always fits; the corpus-scale path runs this same fold
-    * per transcript key). */
+  /** [[chunkLocal]] over a single transcript's Dataset: gathered into one
+    * partition with `coalesce(1)` (no shuffle) and sorted by the explicit
+    * order key (a single transcript always fits). A corpus is N transcript
+    * rows, each chunked by the same [[chunkLocal]] inside one map. */
   def run(
       spark: SparkSession,
       segments: Dataset[ProcessedSegment],

@@ -34,10 +34,7 @@ case class LlmConfig(
     retryDelaySec: Int = 5,
     /** Override the provider base URL (contract tests point this at a
       * local stub server; None = the provider's public endpoint). */
-    endpoint: Option[String] = None,
-    /** Anthropic API version header value — public API documentation
-      * constant, kept in config rather than inline. */
-    anthropicVersion: String = "2023-06-01"
+    endpoint: Option[String] = None
 )
 
 trait LlmClient extends Serializable {
@@ -174,9 +171,8 @@ object MiniJson {
 
 /** OpenAI chat completions adapter
   * (/root/reference/llm_executor.py:250-326). */
-class OpenAiClient(val config: LlmConfig) extends LlmClient {
-  @transient private lazy val http = HttpClient.newHttpClient()
-
+class OpenAiClient(val config: LlmConfig)
+    extends HttpLlmClient("OpenAI", "https://api.openai.com", "/v1/chat/completions") {
   override def complete(systemPrompt: String, userPrompt: String): LlmResponse = {
     import MiniJson._
     val body =
@@ -184,18 +180,7 @@ class OpenAiClient(val config: LlmConfig) extends LlmClient {
         s""""max_tokens":${config.maxTokens},"messages":[""" +
         s"""{"role":"system","content":"${esc(systemPrompt)}"},""" +
         s"""{"role":"user","content":"${esc(userPrompt)}"}]}"""
-    val req = HttpRequest.newBuilder()
-      .uri(URI.create(config.endpoint.getOrElse("https://api.openai.com") +
-        "/v1/chat/completions"))
-      .timeout(Duration.ofSeconds(config.timeoutSec))
-      .header("Content-Type", "application/json")
-      .header("Authorization", s"Bearer ${config.apiKey.getOrElse("")}")
-      .POST(HttpRequest.BodyPublishers.ofString(body))
-      .build()
-    val resp = http.send(req, HttpResponse.BodyHandlers.ofString())
-    if (resp.statusCode() != 200)
-      throw new RuntimeException(s"OpenAI HTTP ${resp.statusCode()}: ${resp.body().take(200)}")
-    val json = resp.body()
+    val json = postJson(Seq("Authorization" -> s"Bearer ${config.apiKey.getOrElse("")}"), body)
     val content = firstString(json, "content").getOrElse(
       throw new RuntimeException("no content in response"))
     val pt = firstInt(json, "prompt_tokens").getOrElse(0)
@@ -209,28 +194,16 @@ class OpenAiClient(val config: LlmConfig) extends LlmClient {
   * with the system prompt in the top-level `system` field (reference bug
   * fixed). Token usage estimated as chars/4 when absent, per the
   * reference's own estimator (:389-397). */
-class AnthropicClient(val config: LlmConfig) extends LlmClient {
-  @transient private lazy val http = HttpClient.newHttpClient()
-
+class AnthropicClient(val config: LlmConfig)
+    extends HttpLlmClient("Anthropic", "https://api.anthropic.com", "/v1/messages") {
   override def complete(systemPrompt: String, userPrompt: String): LlmResponse = {
     import MiniJson._
     val body =
       s"""{"model":"${esc(config.model)}","max_tokens":${config.maxTokens},""" +
         s""""temperature":${config.temperature},"system":"${esc(systemPrompt)}",""" +
         s""""messages":[{"role":"user","content":"${esc(userPrompt)}"}]}"""
-    val req = HttpRequest.newBuilder()
-      .uri(URI.create(config.endpoint.getOrElse("https://api.anthropic.com") +
-        "/v1/messages"))
-      .timeout(Duration.ofSeconds(config.timeoutSec))
-      .header("Content-Type", "application/json")
-      .header("x-api-key", config.apiKey.getOrElse(""))
-      .header("anthropic-version", config.anthropicVersion)
-      .POST(HttpRequest.BodyPublishers.ofString(body))
-      .build()
-    val resp = http.send(req, HttpResponse.BodyHandlers.ofString())
-    if (resp.statusCode() != 200)
-      throw new RuntimeException(s"Anthropic HTTP ${resp.statusCode()}: ${resp.body().take(200)}")
-    val json = resp.body()
+    val json = postJson(Seq("x-api-key" -> config.apiKey.getOrElse(""),
+      "anthropic-version" -> AnthropicClient.ApiVersion), body)
     val content = firstString(json, "text").getOrElse(
       throw new RuntimeException("no text in response"))
     val pt = firstInt(json, "input_tokens")
@@ -239,6 +212,35 @@ class AnthropicClient(val config: LlmConfig) extends LlmClient {
       .getOrElse(TextEstimates.chars4(content))
     LlmResponse(content, pt, ct,
       LlmClient.estimateCost(config.model, pt, ct), config.model, isMock = false)
+  }
+}
+
+object AnthropicClient {
+  /** The `anthropic-version` header the adapter's request shape is
+    * written against. */
+  val ApiVersion = "2023-06-01"
+}
+
+/** What the chat adapters share: one HTTP client per instance and a
+  * JSON POST to `path` under the configured endpoint (`defaultBase` when
+  * none) that fails the call, naming `provider`, on any status but 200.
+  * The adapters differ only in URL, auth headers, body and parse. */
+abstract class HttpLlmClient(provider: String, defaultBase: String, path: String)
+    extends LlmClient {
+  @transient private lazy val http = HttpClient.newHttpClient()
+
+  /** The response body of one POST of `body`. */
+  protected def postJson(headers: Seq[(String, String)], body: String): String = {
+    val req = HttpRequest.newBuilder()
+      .uri(URI.create(config.endpoint.getOrElse(defaultBase) + path))
+      .timeout(Duration.ofSeconds(config.timeoutSec))
+      .header("Content-Type", "application/json")
+    headers.foreach { case (k, v) => req.header(k, v) }
+    val resp = http.send(req.POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+      HttpResponse.BodyHandlers.ofString())
+    if (resp.statusCode() != 200)
+      throw new RuntimeException(s"$provider HTTP ${resp.statusCode()}: ${resp.body().take(200)}")
+    resp.body()
   }
 }
 

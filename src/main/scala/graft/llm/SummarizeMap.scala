@@ -9,11 +9,12 @@ import graft.model.{Chunk, ProcessedChunk}
   * Spark-first shape: `concurrency` is the number of requests in flight
   * per task, not a partition count. [[mapLocal]] runs a task's chunks
   * through an [[Inflight]] window, so the HTTP wait holds no extra Spark
-  * task slots. The summarizer maps a transcript's chunks inside its one
-  * per-transcript task, and `Chunker.run` yields one partition, so a
-  * transcript has exactly `concurrency` requests in flight on any core
-  * count (the reference's semaphore); `p` partitions have up to
-  * `p × concurrency`. The client, its retries, and error-as-row semantics
+  * task slots. The summarizer maps a transcript's chunks inside the task
+  * that reads its one row, so a transcript has exactly `concurrency`
+  * requests in flight on any core count (the reference's semaphore); a
+  * corpus is N transcript rows of the same map, up to `concurrency` per
+  * running task. [[run]] applies the same [[mapLocal]] to the layered
+  * stage's one partition (`Chunker.run`). The client, its retries, and error-as-row semantics
   * live INSIDE `mapPartitions` so a flaky API call never triggers a Spark
   * task retry of the whole partition. Consumers restore chunk order by
   * `chunkIndex` after collecting, the engine-wide replacement for the
@@ -26,10 +27,13 @@ object SummarizeMap {
   case class MapConfig(
       promptTemplate: String = Prompts.defaultMapPrompt,
       systemPrompt: Option[String] = None,
-      summaryType: String = "comprehensive",
       concurrency: Int = 5,
       useContextText: Boolean = true
   )
+
+  /** The `{summary_type}` the map prompt is filled with: the reference's
+    * default, which no caller changes. */
+  private val SummaryType = "comprehensive"
 
   def run(
       spark: SparkSession,
@@ -60,7 +64,7 @@ object SummarizeMap {
       val user = Prompts.fill(
         Prompts.fill(template, "transcript", body),
         "summary_type",
-        cfg.summaryType
+        SummaryType
       )
       toProcessed(chunk, client.completeWithRetry(system, user))
     }
@@ -82,7 +86,6 @@ object SummarizeMap {
       textWithContext = chunk.textWithContext, tokenCount = chunk.tokenCount,
       speakers = chunk.speakers, totalChunks = chunk.totalChunks,
       positionPercentage = chunk.positionPercentage,
-      processingIndex = chunk.chunkIndex,
       summary = summary, tokensUsed = tokensUsed, cost = cost, error = error)
   }
 }

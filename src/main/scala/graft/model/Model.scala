@@ -71,7 +71,6 @@ case class ProcessedChunk(
     speakers: Seq[String],
     totalChunks: Int,
     positionPercentage: Double,
-    processingIndex: Int,
     summary: String,
     tokensUsed: Int,
     cost: Double,

@@ -9,19 +9,18 @@ import graft.text.TextFunctions
 /** Preprocessing stage (SURVEY.md §2.2 F1/F2/F4, §2.3 A1/A2/A3/A4/A5 —
   * /root/reference/preprocessor.py).
   *
-  * Two layers:
-  *   - pure Scala functions (`indexLocal`, `enrichLocal`, `foldLocal`)
-  *     that reproduce the reference's semantics, its order-dependent folds
-  *     exactly, and are unit-testable without a SparkSession;
-  *   - Spark surfaces of the layered stages (`enrich`, `run`) that apply
-  *     them to Datasets, the folds via sort + mapPartitions.
+  * Every step is a pure Scala function over one transcript's rows
+  * (`indexLocal`, then [[prepLocal]]: the limit, `enrichLocal`,
+  * `foldLocal`) that reproduces the reference's semantics, its
+  * order-dependent folds exactly, and is unit-testable without a
+  * SparkSession. The layered Dataset stages ([[loadTranscript]], [[run]])
+  * apply the same functions.
   *
   * Scale design: a transcript is small (thousands of rows) even when a
   * corpus is 100 TB — the unit of parallelism is the TRANSCRIPT, not the
-  * segment. The summarizer runs the local functions over a transcript
-  * file's one row ([[readTranscripts]]) in one task; the keyed corpus path
-  * applies the same folds per key via repartition + sortWithinPartitions
-  * (secondary-sort pattern) — see [[PerTranscript]].
+  * segment. A transcript file is one row ([[readTranscripts]]) and the
+  * local functions run over it in one task; a corpus is N such rows
+  * through the same map.
   */
 object Preprocess {
 
@@ -69,8 +68,7 @@ object Preprocess {
 
   /** S1: one transcript's segments as rows, each keyed by its array
     * position, the explicit ordering key the reference gets for free from
-    * Python list order. A missing `text` or `speaker` reads as `""`, as in
-    * [[loadTranscript]]. */
+    * Python list order. A missing `text` or `speaker` reads as `""`. */
   def indexLocal(t: Transcript): Seq[RawIndexed] =
     t.segments.zipWithIndex.map { case (s, i) =>
       if (s == null) throw new NullPointerException(s"segment $i of the transcript is null")
@@ -78,21 +76,11 @@ object Preprocess {
         Option(s.speaker).getOrElse(""))
     }
 
-  /** S1 over [[readTranscripts]] as codegen'd Columns: posexplode keys
-    * each segment by its array position, as [[indexLocal]] does. An empty
-    * array loads as zero rows. */
+  /** S1 over [[readTranscripts]]: [[indexLocal]] per transcript row. An
+    * empty array loads as zero rows. */
   def loadTranscript(spark: SparkSession, path: String): Dataset[RawIndexed] = {
     import spark.implicits._
-    readTranscripts(spark, path)
-      .select(posexplode(col("segments")).as(Seq("rowIdx", "seg")))
-      .select(
-        col("rowIdx").cast("long"),
-        col("seg.start"),
-        col("seg.end"),
-        coalesce(col("seg.text"), lit("")).as("text"),
-        coalesce(col("seg.speaker"), lit("")).as("speaker")
-      )
-      .as[RawIndexed]
+    readTranscripts(spark, path).flatMap(indexLocal)
   }
 
   /** F1+F2+F4 on one segment (the reference's preprocessor.py:36-54): drop
@@ -102,21 +90,6 @@ object Preprocess {
     if (TextFunctions.trimSpaces(r.text).isEmpty) None
     else Some(ProcessedSegment(r.start, r.end, TextFunctions.cleanText(r.text), r.speaker,
       TextFunctions.formatHms(r.start), TextFunctions.formatHms(r.end), r.rowIdx))
-
-  /** [[enrichLocal]] over a Dataset. S2 limit is pushed before
-    * everything, as the reference does with `--limit-segments`. */
-  def enrich(
-      spark: SparkSession,
-      raw: Dataset[RawIndexed],
-      cfg: PrepConfig
-  ): Dataset[ProcessedSegment] = {
-    import spark.implicits._
-    val limited = cfg.limitSegments match {
-      case Some(n) => raw.orderBy("rowIdx").limit(n)
-      case None    => raw
-    }
-    limited.mapPartitions(_.flatMap(enrichLocal))
-  }
 
   // -------------------------------------------------------------------------
   // A1 + A2: consecutive same-speaker merge with duration cap — pure fold,
@@ -249,9 +222,7 @@ object Preprocess {
   }
 
   /** The order-dependent folds over one transcript's segments in
-    * `rowIdx` order: same-speaker merge, then interval aggregation. Both
-    * the single-transcript and the corpus path call this, so the fold
-    * order lives here only. */
+    * `rowIdx` order: same-speaker merge, then interval aggregation. */
   def foldLocal(segs: Seq[ProcessedSegment], cfg: PrepConfig): Seq[ProcessedSegment] = {
     val merged =
       if (cfg.mergeSameSpeaker)
@@ -260,23 +231,28 @@ object Preprocess {
     cfg.timeIntervalSeconds.fold(merged)(intervalLocal(merged, _))
   }
 
-  /** Full preprocessing over a single transcript as Dataset stages:
-    * [[enrich]], then [[foldLocal]] in one sorted partition (parity mode —
-    * a transcript always fits). `coalesce(1)` gathers it without a
-    * shuffle: a single multiLine JSON file is one partition already. */
+  /** Full preprocessing of one transcript's rows in `rowIdx` order: the
+    * S2 limit first, as the reference does with `--limit-segments`, then
+    * [[enrichLocal]] and [[foldLocal]]. */
+  def prepLocal(raw: Seq[RawIndexed], cfg: PrepConfig): Seq[ProcessedSegment] = {
+    val limited = cfg.limitSegments.fold(raw)(raw.take)
+    foldLocal(limited.flatMap(enrichLocal), cfg)
+  }
+
+  /** [[prepLocal]] over a single transcript's Dataset, in one sorted
+    * partition (a transcript always fits). `coalesce(1)` gathers it
+    * without a shuffle: a single multiLine JSON file is one partition
+    * already. */
   def run(
       spark: SparkSession,
       raw: Dataset[RawIndexed],
       cfg: PrepConfig = PrepConfig()
   ): Dataset[ProcessedSegment] = {
     import spark.implicits._
-    val enriched = enrich(spark, raw, cfg)
-    if (!cfg.mergeSameSpeaker && cfg.timeIntervalSeconds.isEmpty) enriched
-    else
-      enriched
-        .coalesce(1)
-        .sortWithinPartitions("rowIdx")
-        .mapPartitions(it => foldLocal(it.toSeq, cfg).iterator)
+    raw
+      .coalesce(1)
+      .sortWithinPartitions("rowIdx")
+      .mapPartitions(it => prepLocal(it.toSeq, cfg).iterator)
   }
 
   /** Cap on [[extractSpeakers]]' driver-side collect. Transcripts have a
@@ -307,25 +283,15 @@ object Preprocess {
     distinct.sorted
   }
 
-  /** Seconds from `start` to `end`, the first start and the last end of
-    * [[transcriptDuration]]'s aggregate; 0 when they are null or absent
-    * (no rows). */
-  def spanSeconds(span: Map[String, Any]): Double =
-    (span.get("start"), span.get("end")) match {
-      case (Some(s: Double), Some(e: Double)) => e - s
-      case _                                  => 0.0
-    }
-
-  /** [[spanSeconds]] over local rows: the first start to the last end, 0
-    * on no rows. */
+  /** A5 over local rows: the first start to the last end, 0 on no rows. */
   def spanLocal(segs: Seq[ProcessedSegment]): Double =
     if (segs.isEmpty) 0.0
     else segs.map(_.end).reduce(_ max _) - segs.map(_.start).reduce(_ min _)
 
   /** A5: transcript duration (/root/reference/preprocessor.py:344-361). */
   def transcriptDuration(ds: Dataset[ProcessedSegment]): (Double, String) = {
-    val span = ds.agg(min(col("start")).as("start"), max(col("end")).as("end")).head()
-    val d = spanSeconds(span.getValuesMap(Seq("start", "end")))
+    val span = ds.agg(min(col("start")), max(col("end"))).head()
+    val d = if (span.isNullAt(0)) 0.0 else span.getDouble(1) - span.getDouble(0)
     (d, TextFunctions.formatHms(d))
   }
 }

@@ -173,15 +173,6 @@ object TextFunctions {
     out.toSeq
   }
 
-  /** Clause fallback of the long-sentence splitter
-    * (/root/reference/big_chunkeroosky.py:455): split on clause punctuation,
-    * keeping the delimiter with the preceding clause. */
-  def splitClauses(sentence: String): Seq[String] = {
-    if (sentence == null || sentence.isEmpty) return Seq.empty
-    val parts = sentence.split("(?<=[,.;:?!])\\s+").toSeq
-    parts.map(_.trim).filter(_.nonEmpty)
-  }
-
   /** Last-resort splitter: fixed-size word groups
     * (/root/reference/big_chunkeroosky.py:459-472). */
   def splitWordGroups(s: String, groupSize: Int = 20): Seq[String] =

@@ -256,7 +256,7 @@ class PipelineSpec extends SparkSuite {
         b => if (batchOf(b).contains(failing)) 500 else 200) { (llm, drain, _) =>
       val rows = (0 until 12).map { i =>
         ProcessedChunk(i, 10.0 * i, 10.0 * i + 10, "t", "t", 10, Seq("A"), 12,
-          100.0 * i / 12, i, s"point $i" + " word" * 30, 15, 0.0, None)
+          100.0 * i / 12, s"point $i" + " word" * 30, 15, 0.0, None)
       }
       val agg = SummaryReduce.aggregate(spark, spark.createDataset(rows.reverse),
         llm.copy(maxRetries = 1, retryDelaySec = 0),

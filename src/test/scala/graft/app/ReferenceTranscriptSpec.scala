@@ -1,13 +1,15 @@
 package graft.app
 
 import graft.SparkSuite
-import graft.chunk.Chunker
-import graft.prep.{PerTranscript, Preprocess}
+import graft.chunk.{Chunker, CorpusParity}
+import graft.prep.Preprocess
 
 /** Full pipeline over the reference's own 4,778-segment fixture
   * (/root/reference/transcript-example.json, read-only) — the real
-  * workload shape: 7.4 h single-speaker audio transcript. */
-class ReferenceTranscriptSpec extends SparkSuite {
+  * workload shape: 7.4 h single-speaker audio transcript — when it is
+  * present, and over a generated transcript of the same shape
+  * ([[ReferenceShape]]) always. */
+class ReferenceTranscriptSpec extends SparkSuite with CorpusParity {
 
   private val path = "/root/reference/transcript-example.json"
 
@@ -53,24 +55,30 @@ class ReferenceTranscriptSpec extends SparkSuite {
 
   test("per-transcript corpus path matches the single-transcript path") {
     assume(new java.io.File(path).exists())
-    import spark.implicits._
-    val raw = Preprocess.loadTranscript(spark, path)
-    val prepped = Preprocess.run(spark, raw)
-    val single = Chunker.run(spark, prepped).collect().sortBy(_.chunkIndex)
+    assertCorpusParity(path, Preprocess.PrepConfig(), Chunker.ChunkConfig())
+  }
 
-    // Same transcript replicated under 3 keys through the corpus path.
-    val enriched = Preprocess.enrich(spark, raw, Preprocess.PrepConfig())
-    val keyed = enriched.flatMap(s =>
-      Seq(1L, 2L, 3L).map(PerTranscript.KeyedSegment(_, s)))
-    val corpus = PerTranscript
-      .preprocessAndChunk(spark, keyed)
-      .collect()
-      .groupBy(_.transcriptId)
-    assert(corpus.keySet == Set(1L, 2L, 3L))
-    corpus.values.foreach { chunks =>
-      val sorted = chunks.map(_.chunk).sortBy(_.chunkIndex)
-      assert(sorted.map(_.text).toSeq == single.map(_.text).toSeq)
-      assert(sorted.map(_.tokenCount).toSeq == single.map(_.tokenCount).toSeq)
+  test("a generated reference-shaped transcript summarizes end-to-end on the mock client") {
+    withTranscript(ReferenceShape.json(seed = 1)) { generated =>
+      val out = Summarizer.summarizePath(spark, generated, Summarizer.Config())
+      assert(out.result.segments == ReferenceShape.Segments)
+      assert(out.result.chunks == ReferenceShape.Chunks)
+      assert(out.result.summary.contains("MOCK SUMMARY"))
+      // One map call per chunk and one direct reduce, 100 tokens each.
+      assert(out.result.tokensUsed == out.result.chunks * 100 + 100)
+      val chunks = out.processedChunks.collect()
+      assert(chunks.map(_.chunkIndex).toSeq == chunks.indices)
+      assert(chunks.forall(_.tokenCount <= 3850))
+      val starts = chunks.map(_.startTime).toSeq
+      assert(starts == starts.sorted)
+      assert(chunks.last.endTime <= ReferenceShape.Seconds)
+    }
+  }
+
+  test("on a generated reference-shaped transcript the corpus path matches the single-transcript path") {
+    withTranscript(ReferenceShape.json(seed = 2)) { generated =>
+      val chunks = assertCorpusParity(generated, Preprocess.PrepConfig(), Chunker.ChunkConfig())
+      assert(chunks.length == ReferenceShape.Chunks)
     }
   }
 }

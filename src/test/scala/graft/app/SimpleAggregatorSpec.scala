@@ -15,8 +15,7 @@ class SimpleAggregatorSpec extends SparkSuite {
     chunkIndex = i, startTime = i * 10.0, endTime = i * 10.0 + 9.0,
     text = s"text $i", textWithContext = s"text $i", tokenCount = 10,
     speakers = Seq("A"), totalChunks = 3, positionPercentage = i * 33.3,
-    processingIndex = i, summary = summary, tokensUsed = 100, cost = 0.0,
-    error = None)
+    summary = summary, tokensUsed = 100, cost = 0.0, error = None)
 
   test("real provider without a key fails fast, like the reference ctor") {
     import spark.implicits._

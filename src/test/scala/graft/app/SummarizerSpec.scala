@@ -154,7 +154,7 @@ class SummarizerSpec extends SparkSuite {
     import spark.implicits._
     val rows = (0 until 4).map { i =>
       ProcessedChunk(i, 10.0 * i, 10.0 * i + 10, "t", "t", 10, Seq("A"), 4,
-        25.0 * i, i, s"summary \"$i\"", 15 + i, 0.0, None)
+        25.0 * i, s"summary \"$i\"", 15 + i, 0.0, None)
     }
     val dir = Files.createTempDirectory("chunks")
     val path = dir.resolve("chunks.json")

@@ -6,7 +6,7 @@ import graft.prep.Preprocess
 import graft.text.TextFunctions
 
 /** C1/C2/C3/M3 semantics (/root/reference/big_chunkeroosky.py). */
-class ChunkerSpec extends SparkSuite {
+class ChunkerSpec extends SparkSuite with CorpusParity {
 
   private def seg(start: Double, end: Double, speaker: String, text: String, idx: Long) =
     ProcessedSegment(
@@ -123,27 +123,12 @@ class ChunkerSpec extends SparkSuite {
   }
 
   test("corpus path matches Preprocess.run + Chunker.run under every key") {
-    import spark.implicits._
-    import graft.prep.PerTranscript
     val chunkCfg = Chunker.ChunkConfig(300, 50)
     for {
       fixture <- Seq("mini_multi_speaker.json", "oversized_segment.json")
       prepCfg <- Seq(Preprocess.PrepConfig(),
         Preprocess.PrepConfig(timeIntervalSeconds = Some(60)))
-    } {
-      val raw = Preprocess.loadTranscript(spark, resourcePath(fixture))
-      val single = Chunker.run(spark, Preprocess.run(spark, raw, prepCfg), chunkCfg)
-        .collect().sortBy(_.chunkIndex).toSeq
-      assert(single.nonEmpty)
-      val keyed = Preprocess.enrich(spark, raw, prepCfg)
-        .flatMap(s => Seq(1L, 2L, 3L).map(PerTranscript.KeyedSegment(_, s)))
-      val corpus = PerTranscript.preprocessAndChunk(spark, keyed, prepCfg, chunkCfg)
-        .collect().groupBy(_.transcriptId)
-      assert(corpus.keySet == Set(1L, 2L, 3L), s"$fixture $prepCfg")
-      corpus.values.foreach { kc =>
-        assert(kc.map(_.chunk).sortBy(_.chunkIndex).toSeq == single, s"$fixture $prepCfg")
-      }
-    }
+    } assert(assertCorpusParity(resourcePath(fixture), prepCfg, chunkCfg).nonEmpty)
   }
 
   test("Spark surface matches the local fold") {

@@ -70,10 +70,10 @@ class LlmClientContractSpec extends AnyFunSuite {
       val body = readBody(ex)
       assert(ex.getRequestURI.getPath == "/v1/messages")
       assert(ex.getRequestHeaders.getFirst("x-api-key") == "k2")
-      // Assert against the config default, not a second string literal —
-      // the version value lives in exactly one place (LlmConfig).
+      // Assert against the adapter's constant, not a second string
+      // literal — the version value lives in exactly one place.
       assert(ex.getRequestHeaders.getFirst("anthropic-version") ==
-        LlmConfig().anthropicVersion)
+        AnthropicClient.ApiVersion)
       // System prompt as top-level field (the reference bug this adapter fixes).
       assert(body.contains(""""system":"sys prompt""""))
       assert(!body.contains(""""role":"system""""))

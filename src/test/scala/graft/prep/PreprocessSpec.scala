@@ -178,6 +178,5 @@ class PreprocessSpec extends SparkSuite {
     val segs = Seq(seg(5, 9, "A", "x", 0), seg(9, 30.5, "B", "y", 1)).toDS()
     assert(Preprocess.transcriptDuration(segs)._1 == 25.5)
     assert(Preprocess.transcriptDuration(segs.limit(0))._1 == 0.0)
-    assert(Preprocess.spanSeconds(Map.empty) == 0.0)
   }
 }

@@ -86,10 +86,6 @@ class TextFunctionsSpec extends AnyFunSuite {
     })
   }
 
-  test("splitClauses keeps delimiters with the preceding clause") {
-    assert(splitClauses("a, b; c.") == Seq("a,", "b;", "c."))
-  }
-
   test("splitWordGroups groups ~N words") {
     val words = (1 to 45).map(i => s"w$i").mkString(" ")
     val groups = splitWordGroups(words, 20)
