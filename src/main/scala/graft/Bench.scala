@@ -56,32 +56,16 @@ object Bench {
     // memos hold localCheckpoint blocks via strong references, so the
     // per-query clearCache/GC below never reclaims them — across a
     // 264-query run they tax every query scheduled after their build.
-    // Bench owns the run order, so it releases each memo family right
-    // AFTER its last consumer runs (outside the timed window). A release
-    // with consumers remaining would only force a rebuild (correctness
-    // is unaffected). The family table lives in SparkEntry — one
-    // definition for Bench AND Verify.
+    // Bench owns the run order, so graft.Memo releases each family right
+    // AFTER its last consumer runs (outside the timed window); Verify
+    // takes the same release points from the same registry.
     val selectedNames = selected.map(_._1)
-    val memoFamilies: Seq[(Int, () => Unit)] =
-      SparkEntry.memoFamilies(spark, sfDir)
-        .map { case (qs, f) => (selectedNames.lastIndexWhere(qs.contains), f) }
-        .filter(_._1 >= 0)
     val results = selected.zipWithIndex.map { case ((name, fn), qIdx) =>
-      // Memo disclosure: the three dup-components-sharing queries are
-      // run-order dependent — whichever runs first pays the minhash+CC
-      // build, the others replay the memoized frame. Record which ones
-      // hit so per-query numbers (and budget re-baselines) stay
-      // interpretable.
-      val memoHit =
-        graft.queries.PipelineQueries.dupComponentsPrimed(spark, sfDir)
-      val shingleMemoHit =
-        graft.queries.PipelineQueries.docShingleRowsPrimed(spark, sfDir)
-      val knnMemoHit =
-        graft.queries.PipelineQueries.knnEdgesPrimed(spark, sfDir)
-      val verdictMemoHit =
-        graft.queries.PipelineQueries.stagedVerdictsPrimed(spark, sfDir)
-      val commitMemoHit =
-        graft.dedup.TableCommit.corpusPrimed(spark, s"$sfDir#commit-corpus")
+      // Memo disclosure: a memo family's consumers are run-order
+      // dependent — whichever runs first pays the build, the others
+      // replay the memoized value. Record which ones hit so per-query
+      // numbers (and budget re-baselines) stay interpretable.
+      val usedMemo = Memo.hit(name, spark, sfDir)
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
@@ -90,16 +74,6 @@ object Bench {
           false
         }
       val elapsed = (System.nanoTime() - t0) / 1e9
-      val usedMemo = (memoHit &&
-        graft.queries.PipelineQueries.CcMemoQueries.contains(name)) ||
-        (shingleMemoHit &&
-          graft.queries.PipelineQueries.ShingleMemoQueries.contains(name)) ||
-        (knnMemoHit &&
-          graft.queries.PipelineQueries.KnnMemoQueries.contains(name)) ||
-        (verdictMemoHit &&
-          graft.queries.PipelineQueries.VerdictMemoQueries.contains(name)) ||
-        (commitMemoHit &&
-          graft.queries.StreamingQueries.CommitMemoQueries.contains(name))
       // Isolation between queries: one query's persisted frames must not
       // tax the next (round-2 bench showed a leaked dedup cache slowing a
       // trivial DISTINCT 28×). clearCache drops CacheManager entries;
@@ -107,9 +81,7 @@ object Bench {
       // localCheckpoint blocks immediately instead of at the next
       // periodic-GC tick. Both run OUTSIDE the timed window, as does the
       // memo-family release after each family's LAST consumer.
-      memoFamilies.foreach { case (lastIdx, release) =>
-        if (lastIdx == qIdx) release()
-      }
+      Memo.releaseAfter(selectedNames, qIdx, spark, sfDir)
       spark.catalog.clearCache()
       // Streaming state-store providers are unloaded only by their
       // periodic maintenance task, so each q_stream_* query's loaded
@@ -165,9 +137,9 @@ object Bench {
       .mkString("{", ",", "}")
     val failed = results.collect { case (k, _, false, _, _) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
-    // Queries whose timed window replayed the memoized dup-components
-    // frame (built by an earlier query in this run) — their numbers are
-    // not standalone costs; budget re-baselines must keep the run order.
+    // Queries whose timed window replayed a memoized value (built by an
+    // earlier query in this run) — their numbers are not standalone
+    // costs; budget re-baselines must keep the run order.
     val memoHits = results.collect { case (k, _, _, true, _) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val breachJson = breaches

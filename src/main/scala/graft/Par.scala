@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 /** Concurrent INDEPENDENT Spark actions — the stores' write fan-out.
   *
   * A fold/deploy/compaction writes up to ten per-table parquet outputs
@@ -64,5 +66,25 @@ private[graft] object Par {
     }
     if (interrupted) Thread.currentThread().interrupt()
     errs.flatten.headOption.foreach(e => throw e)
+  }
+
+  /** [[all]] over tasks that each return a checkpointed frame: the
+    * frames in argument order. If any task fails, the frames the others
+    * completed are released ([[Ckpt.release]]) before the first failure
+    * rethrows — siblings finish inside the barrier, and their eager
+    * checkpoints would otherwise stay persisted with no consumer. A
+    * task may return a frame its caller already materialized, so that
+    * a failure releases it too. */
+  def checkpointAll(tasks: (() => DataFrame)*): IndexedSeq[DataFrame] = {
+    val out = new Array[DataFrame](tasks.length)
+    try all(tasks.zipWithIndex.map { case (t, i) => () => out(i) = t() }: _*)
+    catch {
+      case e: Throwable =>
+        out.foreach(f =>
+          try Ckpt.release(f)
+          catch { case scala.util.control.NonFatal(_) => () })
+        throw e
+    }
+    out.toIndexedSeq
   }
 }

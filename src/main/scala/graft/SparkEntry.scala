@@ -16,28 +16,6 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.revenueByNation(spark, "/root/testdata/sf0.001")
 
-  /** The (session, dir)-keyed memo families as (declared consumers,
-    * release hook) pairs — ONE definition consumed by BOTH long-lived
-    * runners (Bench and Verify), so a new family cannot be released in
-    * one and silently leaked in the other (the round-15 lifecycle: each
-    * runner maps these onto its own sorted run order and fires the
-    * release right after the family's LAST consumer). The consumer
-    * sets are the same ones the bench's memo-hit disclosure uses. */
-  def memoFamilies(
-      spark: SparkSession, sfDir: String): Seq[(Set[String], () => Unit)] =
-    Seq(
-      (PipelineQueries.CcMemoQueries,
-        () => PipelineQueries.releaseDupComponents(spark, sfDir)),
-      (PipelineQueries.ShingleMemoQueries,
-        () => PipelineQueries.releaseDocShingleRows(spark, sfDir)),
-      (PipelineQueries.KnnMemoQueries,
-        () => PipelineQueries.releaseMutualEdgesMemo(spark, sfDir)),
-      (PipelineQueries.VerdictMemoQueries,
-        () => PipelineQueries.releaseStagedVerdicts(spark, sfDir)),
-      (StreamingQueries.CommitMemoQueries,
-        () => graft.dedup.TableCommit.releaseSharedDeploy(
-          spark, s"$sfDir#commit-corpus")))
-
   /** One entry per implemented operator from SURVEY.md §2 / §7.4. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- relational surface (SURVEY §7.3) ---

@@ -27,19 +27,13 @@ object Verify {
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val selectedNames = selected.map(_._1)
-    val memoFamilies: Seq[(Int, () => Unit)] =
-      SparkEntry.memoFamilies(spark, sfDir)
-        .map { case (qs, f) => (selectedNames.lastIndexWhere(qs.contains), f) }
-        .filter(_._1 >= 0)
     selected.zipWithIndex.foreach { case ((name, fn), qIdx) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      memoFamilies.foreach { case (lastIdx, release) =>
-        if (lastIdx == qIdx) release()
-      }
+      Memo.releaseAfter(selectedNames, qIdx, spark, sfDir)
       // Same streaming state-store unload as Bench: the providers'
       // maintenance-interval lifecycle otherwise holds each q_stream_*
       // query's state in heap for the rest of the 265-query dump.

@@ -2018,35 +2018,11 @@ object Dedup {
     // them concurrently (graft.Par — guide §2.6 "overlap independent
     // jobs"); each thunk materializes exactly what the sequential code
     // did, so results are unchanged and every later consumer reads
-    // checkpointed blocks as before.
-    var accepted: DataFrame = null
-    var deltaNgramRows: DataFrame = null
-    var corpusFps: DataFrame = null
-    var corpusBands: DataFrame = null
-    var corpusSpans: DataFrame = null
-    var corpusSimBands: DataFrame = null
-    var corpusNgramRows: DataFrame = null
-    var corpusNgramDf: DataFrame = null
-    // On a loud failure (the id-clash require below, or any thunk
-    // error), the SIBLING thunks still complete inside Par's barrier —
-    // their eager checkpoints would be left persisted with no consumer
-    // and no release point (round-16 ADVICE: a persisted-RDD leak on
-    // the failure path the old sequential order didn't have). Release
-    // whatever materialized before rethrowing; the success path is
-    // unchanged.
-    def releaseAllOnFailure[A](body: => A): A =
-      try body
-      catch {
-        case t: Throwable =>
-          Seq(accepted, deltaNgramRows, corpusFps, corpusBands,
-            corpusSpans, corpusSimBands, corpusNgramRows, corpusNgramDf,
-            corpusDocs)
-            .filter(_ != null).foreach(f =>
-              try graft.Ckpt.release(f)
-              catch { case scala.util.control.NonFatal(_) => () })
-          throw t
-      }
-    releaseAllOnFailure(graft.Par.all(
+    // checkpointed blocks as before. On a loud failure (the id-clash
+    // check below, or any thunk error) checkpointAll releases what the
+    // siblings materialized, corpusDocs included (its first thunk).
+    val round1 = graft.Par.checkpointAll(
+      () => corpusDocs,
       () => {
         val verdicts = incrementalExact(corpusDocs, batchDocs, "id", "text")
         val acceptedRaw = batchDocs
@@ -2069,45 +2045,44 @@ object Dedup {
         val idClashes = acc
           .join(corpusDocs.select("id"), Seq("id"), "left_semi")
           .count()
+        if (idClashes != 0L) graft.Ckpt.release(acc)
         require(idClashes == 0L,
           s"commitArtifacts: $idClashes accepted batch id(s) already " +
             "exist in the corpus with different content — ids must be " +
             "disjoint (re-key the batch before committing)")
-        accepted = acc
-        deltaNgramRows =
-          ngramShingleRows(acc, "id", "text", ngramBlockCol, ngramN,
-            spread = false)
-            .localCheckpoint(true)
+        acc
       },
-      () => corpusFps = corpusDocs
+      () => corpusDocs
         .select(fpc(col("text")).as("fingerprint"))
         .filter(col("fingerprint").isNotNull)
         .distinct()
         .localCheckpoint(true),
-      () => corpusBands =
-        bandTable(corpusDocs, "id", "text", numHashes, bands)
-          .localCheckpoint(true),
-      () => corpusSpans =
-        spanFpSet(corpusDocs, "id", "text", w).localCheckpoint(true),
+      () => bandTable(corpusDocs, "id", "text", numHashes, bands)
+        .localCheckpoint(true),
+      () => spanFpSet(corpusDocs, "id", "text", w).localCheckpoint(true),
       // SimHash band table: per-row map work, so the fold is a bare
       // union — ids are disjoint (the guard above), making the union
       // exactly the rebuilt artifact.
-      () => corpusSimBands =
-        simhashBandTable(corpusDocs, "id", "text", simhashBlocks)
-          .localCheckpoint(true),
+      () => simhashBandTable(corpusDocs, "id", "text", simhashBlocks)
+        .localCheckpoint(true),
       // N-gram posting artifact: stored as (capped postings, FULL df
       // sidecar); fold per the scaladoc. One checkpointed shingle pass
       // per side feeds postings, df and the per-doc set table.
-      () => {
-        val rows =
-          ngramShingleRows(corpusDocs, "id", "text", ngramBlockCol, ngramN)
-            .localCheckpoint(true)
-        corpusNgramRows = rows
-        corpusNgramDf = rows
+      () => ngramShingleRows(corpusDocs, "id", "text", ngramBlockCol, ngramN)
+        .localCheckpoint(true))
+    val Seq(_, accepted, corpusFps, corpusBands, corpusSpans,
+        corpusSimBands, corpusNgramRows) = round1
+    // The delta shingle rows and the corpus df sidecar read round one's
+    // frames, which ride along so that a failure here releases them too.
+    val Seq(deltaNgramRows, corpusNgramDf) = graft.Par.checkpointAll(
+      round1.map(f => () => f) ++ Seq(
+        () => ngramShingleRows(accepted, "id", "text", ngramBlockCol, ngramN,
+          spread = false)
+          .localCheckpoint(true),
+        () => corpusNgramRows
           .groupBy("blk", "shingle")
           .agg(count(lit(1)).as("df"))
-          .localCheckpoint(true)
-      }))
+          .localCheckpoint(true)): _*).takeRight(2)
     val deltaFps = accepted
       .select(fpc(col("text")).as("fingerprint"))
       .filter(col("fingerprint").isNotNull)
@@ -2293,27 +2268,23 @@ object Dedup {
     // fps, df decrement join) depend only on the checkpointed `deleted`
     // frame — submit them concurrently (round 17, guide §2.6: they were
     // three serial delete-sized jobs in the retraction's critical path).
-    var deletedFps: DataFrame = null
-    var deletedSpanFps: DataFrame = null
-    var dfJoined: DataFrame = null
-    graft.Par.all(
+    val Seq(deletedFps, deletedSpanFps, dfJoined) = graft.Par.checkpointAll(
       // Fingerprint set: retain any deleted fp a remaining doc still has.
-      () => deletedFps = deleted
+      () => deleted
         .select(fpc(col("text")).as("fingerprint"))
         .filter(col("fingerprint").isNotNull)
         .distinct()
         .localCheckpoint(true),
       // Span fp set: the same retention discipline over window fps.
-      () => deletedSpanFps =
-        spanFpSet(deleted, "id", "text", w, spread = false)
-          .localCheckpoint(true),
+      () => spanFpSet(deleted, "id", "text", w, spread = false)
+        .localCheckpoint(true),
       // Df sidecar: additive, so the decrement is exact.
       () => {
         val deletedDf =
           ngramShingleRows(deleted, "id", "text", ngramBlockCol, ngramN)
             .groupBy("blk", "shingle")
             .agg(count(lit(1)).as("ddf"))
-        dfJoined = stored.ngramDf
+        stored.ngramDf
           .join(deletedDf, Seq("blk", "shingle"), "left")
           .select(
             col("blk"), col("shingle"),

@@ -986,37 +986,25 @@ object TableCommit {
       spanBloom: org.apache.spark.broadcast.Broadcast[
         org.apache.spark.util.sketch.BloomFilter])
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Layer]()
-
-  private[graft] def corpusPrimed(s: SparkSession, key: String): Boolean =
-    memo.containsKey((s, key))
-
-  /** Release the memoized shared deploy for (session, key): evict the
-    * layer, unpersist its span-Bloom broadcast, and delete the corpus
-    * temp dir — the memo-lifecycle hook (round-14 VERDICT #2). Safe
-    * only once every store handed out under this key is DONE: the
-    * fp/id Blooms are per-store deserialized copies, but the span
-    * Bloom broadcast and the corpus parquet dirs are SHARED — a
-    * retained handle would re-broadcast the span Bloom on its next
-    * fold (unpersist, not destroy, exactly so that is a slow path
-    * rather than a crash) but its corpus-layer reads would hit
-    * deleted dirs. A later [[sharedDeploy]] call just redeploys. Any
-    * NEW query that adopts sharedDeploy under a bench-released key
-    * must also join [[graft.queries.StreamingQueries.CommitMemoQueries]]
-    * so the release point moves after it. */
-  private[graft] def releaseSharedDeploy(
-      s: SparkSession, key: String): Unit = {
-    val layer = memo.remove((s, key))
-    if (layer != null) {
-      try layer.spanBloom.unpersist(blocking = false)
-      catch { case scala.util.control.NonFatal(_) => () }
-      try {
-        val p = new org.apache.hadoop.fs.Path(layer.root)
-        val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-        if (fs.exists(p)) fs.delete(p, true)
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
+  /** The commit family's shared-deploy memo, declared once with its
+    * consumers and its release. The release unpersists the layer's
+    * span-Bloom broadcast and deletes the corpus temp dir, so it is safe
+    * only once every store handed out under the key is DONE: the fp/id
+    * Blooms are per-store deserialized copies, but the span Bloom
+    * broadcast and the corpus parquet dirs are SHARED — a retained
+    * handle would re-broadcast the span Bloom on its next fold
+    * (unpersist, not destroy, exactly so that is a slow path rather
+    * than a crash) but its corpus-layer reads would hit deleted dirs. A
+    * later [[sharedDeploy]] call just redeploys. A query that adopts
+    * sharedDeploy under the data dir as its key joins the consumer set
+    * here, which moves the runners' release point after it. */
+  private val SharedCorpusMemo = graft.Memo.family[Layer]("commit_corpus",
+    Set("q_stream_commit", "q_stream_lifecycle")) { layer =>
+    try layer.spanBloom.unpersist(blocking = false)
+    catch { case scala.util.control.NonFatal(_) => () }
+    try org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(layer.root))
+    catch { case scala.util.control.NonFatal(_) => () }
   }
 
   private def ser(b: org.apache.spark.util.sketch.BloomFilter): Array[Byte] = {
@@ -1075,14 +1063,12 @@ object TableCommit {
       takeoverAfterMs = takeoverAfterMs).rebuild()
 
   /** A store whose IMMUTABLE corpus layer is the memoized deploy for
-    * `(session, key)` — the ccMemo/knnMemo discipline applied to the
-    * commit family's shared deploy: the first caller writes the corpus
-    * tables and builds the Blooms once; later callers reuse the tables
-    * (read-only after deploy) and receive their OWN deserialized copies
-    * of the growable fp/id Blooms (folds mutate them per store), plus
-    * the frozen span Bloom broadcast. Deltas, tombstones and the ledger
-    * are per-instance — stores stay independent. Memo hits are
-    * disclosed in the bench record via [[corpusPrimed]]. */
+    * `(session, key)` in [[SharedCorpusMemo]]: the first caller writes
+    * the corpus tables and builds the Blooms once; later callers reuse
+    * the tables (read-only after deploy) and receive their OWN
+    * deserialized copies of the growable fp/id Blooms (folds mutate them
+    * per store), plus the frozen span Bloom broadcast. Deltas, tombstones
+    * and the ledger are per-instance — stores stay independent. */
   def sharedDeploy(
       spark: SparkSession,
       key: String,
@@ -1098,7 +1084,7 @@ object TableCommit {
       compactDeltaRatio: Double = 0.5,
       compactMaxDeltaFiles: Long = 512L,
       gcRetainMs: Long = 0L): TableCommit = {
-    val layer = memo.computeIfAbsent((spark, key), _ => {
+    val layer = graft.Memo.get(SharedCorpusMemo, spark, key) {
       val root = java.nio.file.Files
         .createTempDirectory("graft_corpus_layer_").toString
       val tc = new TableCommit(spark, root, numHashes, bands, w,
@@ -1106,7 +1092,7 @@ object TableCommit {
         .deploy(corpus, idCol, textCol)
       val (fp, id, span) = tc.blooms
       Layer(root, ser(fp), ser(id), span)
-    })
+    }
     new TableCommit(
       spark,
       java.nio.file.Files.createTempDirectory("graft_store_").toString,

@@ -145,6 +145,9 @@ object MinhashSigAgg {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "graft_minhash_sig",
       exprs => {
+        if (exprs.length != 2) throw new IllegalArgumentException(
+          "graft_minhash_sig(shingle, numHashes) takes 2 arguments, got " +
+            exprs.length)
         val n = exprs(1) match {
           case Literal(v: Int, IntegerType) => v
           case Literal(v: Long, LongType) => v.toInt

@@ -1639,51 +1639,21 @@ object PipelineQueries {
   def knnGraph(s: SparkSession, d: String): DataFrame =
     mutualEdgesMemo(s, d).orderBy("id_a", "id_b")
 
-  /** Memo for the mutual-kNN edge set, keyed by (session, dir) — the
-    * [[ccMemo]] discipline applied to the graph family's shared prefix:
-    * the graph, the cluster, and the keep-list queries all read the
-    * SAME deterministic edge set, so one build serves all three
-    * (memo hits disclosed in the bench record like the CC build's). */
-  private val knnMemo =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
-
-  private[graft] def mutualEdgesMemo(s: SparkSession, d: String): DataFrame = {
-    val key = (s, d)
-    def build(): DataFrame = graft.similarity.Ivf
-      .mutualKnnEdges(embeddings(s, d), IvfCentroidIds, IvfNProbe, KnnGraphK)
-      .localCheckpoint(true)
-    knnMemo.get(key) match {
-      case Some(cached) =>
-        try { cached.limit(1).collect(); cached }
-        catch {
-          case _: org.apache.spark.SparkException =>
-            knnMemo.remove(key, cached)
-            knnMemo.getOrElseUpdate(key, build())
-        }
-      case None => knnMemo.getOrElseUpdate(key, build())
-    }
-  }
-
-  private[graft] def knnEdgesPrimed(s: SparkSession, d: String): Boolean =
-    knnMemo.contains((s, d))
-
-  /** Release [[knnMemo]]'s entry AND its checkpoint blocks — the
-    * memo-lifecycle hook (round-14 VERDICT #2): the bench calls this
-    * right after the last [[KnnMemoQueries]] member runs, so the
-    * edge-set blocks stop taxing every later query in the session.
-    * Safe only once no consumer will run again this session (a later
-    * call just rebuilds). */
-  private[graft] def releaseMutualEdgesMemo(
-      s: SparkSession, d: String): Unit =
-    knnMemo.remove((s, d)).foreach(graft.Ckpt.release(_))
-
-  /** The declared query names that resolve through [[knnMemo]]. */
-  private[graft] val KnnMemoQueries: Set[String] =
+  /** The mutual-kNN edge set's memo family: the graph, cluster and
+    * keep-list queries all read the SAME deterministic edge set, so one
+    * build serves every declared consumer. */
+  private val KnnEdgesMemo = graft.Memo.frames("knn_edges",
     Set("q_knn_graph", "q_semantic_clusters", "q_semantic_keeplist",
       "q_semantic_quality_keeplist", "q_graph_stats", "q_graph_pagerank",
       "q_graph_drift", "q_pagerank_keeplist", "q_pagerank_incremental",
-      "q_pagerank_residual")
+      "q_pagerank_residual"))
+
+  private[graft] def mutualEdgesMemo(s: SparkSession, d: String): DataFrame =
+    graft.Memo.get(KnnEdgesMemo, s, d) {
+      graft.similarity.Ivf
+        .mutualKnnEdges(embeddings(s, d), IvfCentroidIds, IvfNProbe, KnnGraphK)
+        .localCheckpoint(true)
+    }
 
   /** The probe/assign/score/rank CTEs of the whole-corpus kNN edge set
     * — shared by the graph, clusters, keep-list and retraction oracles.
@@ -3332,132 +3302,46 @@ object PipelineQueries {
        |WHERE round(n_inter / (sa.set_size + sb.set_size - n_inter), 6) >= $MinhashThreshold
        |ORDER BY id_a, id_b""".stripMargin
 
-  /** Memo for [[dupComponents]], keyed by (session, data dir): the
-    * minhash band join + connected components is the shared prefix of
-    * THREE declared queries (dup clusters, keep-list, leakage-safe
-    * split) — without the memo a Verify/Bench run pays the most
-    * expensive pipeline in the surface three times for bit-identical
-    * results (the computation is deterministic: fixed hash family,
-    * min-label CC). The value is localCheckpoint'ed, so hits replay a
-    * materialized doc-count-sized frame. Keyed on the session INSTANCE:
-    * a new session (tests, restarts) recomputes; stale entries of
-    * stopped sessions only strand a tiny cached frame. */
-  private val ccMemo =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
+  /** The dup-components memo family: the minhash band join +
+    * connected components is the shared prefix of the dup-cluster,
+    * keep-list, split and curation queries — without the memo a
+    * Verify/Bench run pays the most expensive pipeline in the surface
+    * once per consumer for bit-identical results (fixed hash family,
+    * min-label CC). */
+  private val DupComponentsMemo = graft.Memo.frames("dup_components",
+    Set("q_dup_clusters", "q_dedup_keeplist", "q_leakage_safe_split",
+      "q_quality_keeplist", "q_curation_funnel", "q_dup_histogram",
+      "q_dup_downweight", "q_weighted_sample", "q_corpus_card",
+      "q_split_audit"))
 
   /** Near-dup pairs → connected components (id, component) over
-    * `documents(d)` — computed once per (session, dir), see [[ccMemo]].
-    *
-    * localCheckpoint is NOT fault-tolerant: an executor loss drops the
-    * materialized blocks AND the lineage (it is truncated by design), so
-    * a stale memo hit would fail every later caller unrecoverably. A
-    * hit therefore probes one partition first (`limit(1)` — one cached
-    * block, not a rescan) and on any Spark failure evicts and rebuilds
-    * from source — the pipeline is deterministic, so the rebuild is
-    * bit-identical. Data changed under the dir within one session is
-    * the caller's signal to send via [[invalidateDupComponents]]. */
-  private[graft] def dupComponents(s: SparkSession, d: String): DataFrame = {
-    val key = (s, d)
-    def build(): DataFrame = {
+    * `documents(d)` — computed once per (session, dir) through
+    * [[DupComponentsMemo]]. */
+  private[graft] def dupComponents(s: SparkSession, d: String): DataFrame =
+    graft.Memo.get(DupComponentsMemo, s, d) {
       val pairs = Dedup
         .minhashDuplicates(documents(s, d), "doc_id", "text",
           MinhashHashes, MinhashBands, MinhashThreshold)
         .select("id_a", "id_b")
       Dedup.connectedComponents(pairs).localCheckpoint(true)
     }
-    ccMemo.get(key) match {
-      case Some(cached) =>
-        try { cached.limit(1).collect(); cached }
-        catch {
-          case _: org.apache.spark.SparkException =>
-            ccMemo.remove(key, cached)
-            ccMemo.getOrElseUpdate(key, build())
-        }
-      case None => ccMemo.getOrElseUpdate(key, build())
-    }
-  }
 
-  /** Evict [[ccMemo]]'s entry for (session, dir) — the hook a caller
-    * uses when the data under `d` changes mid-session (the memo cannot
-    * see writes; it keys on the path, not the content). */
-  private[graft] def invalidateDupComponents(
-      s: SparkSession, d: String): Unit =
-    ccMemo.remove((s, d))
-
-  /** Release [[ccMemo]]'s entry AND its checkpoint blocks — see
-    * [[releaseMutualEdgesMemo]] for the lifecycle contract. */
-  private[graft] def releaseDupComponents(
-      s: SparkSession, d: String): Unit =
-    ccMemo.remove((s, d)).foreach(graft.Ckpt.release(_))
-
-  /** Whether [[ccMemo]] is already primed for (session, dir) — lets the
-    * bench disclose which of the three sharing queries replayed the
-    * memoized frame instead of paying the build. */
-  private[graft] def dupComponentsPrimed(s: SparkSession, d: String): Boolean =
-    ccMemo.contains((s, d))
-
-  /** The declared query names that resolve through [[ccMemo]] — the
-    * bench's memo-hit disclosure set. */
-  private[graft] val CcMemoQueries: Set[String] =
-    Set("q_dup_clusters", "q_dedup_keeplist", "q_leakage_safe_split",
-      "q_quality_keeplist", "q_curation_funnel", "q_dup_histogram",
-      "q_dup_downweight", "q_weighted_sample", "q_corpus_card",
-      "q_split_audit")
-
-  /** Memo for the full-table n-gram shingle pass, keyed by (session,
-    * dir) — the [[ccMemo]] discipline applied to the second shared
-    * prefix that grew two consumers in round 11: the distinct
-    * (id, blk = lang, shingle) row table over ALL documents is the
-    * dominant cost (tokenize + hash explode) of BOTH the n-gram gate's
-    * artifact build (`q_stream_ngram`, corpus = the NgramIncMod
-    * residue's complement, lang-blocked) and the ingest ledger's
-    * (`q_stream_attribution`, corpus = the IncrementalMod complement,
-    * single-block — a per-doc-constant blk projection keeps
-    * distinctness, so one table serves both). Same
-    * localCheckpoint-validity probe as [[dupComponents]]. */
-  private val shingleRowsMemo =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
-
-  private[graft] def docShingleRows(s: SparkSession, d: String): DataFrame = {
-    val key = (s, d)
-    def build(): DataFrame = Dedup
-      .ngramShingleRows(documents(s, d), "doc_id", "text", col("lang"), 3)
-      .localCheckpoint(true)
-    shingleRowsMemo.get(key) match {
-      case Some(cached) =>
-        try { cached.limit(1).collect(); cached }
-        catch {
-          case _: org.apache.spark.SparkException =>
-            shingleRowsMemo.remove(key, cached)
-            shingleRowsMemo.getOrElseUpdate(key, build())
-        }
-      case None => shingleRowsMemo.getOrElseUpdate(key, build())
-    }
-  }
-
-  private[graft] def invalidateDocShingleRows(
-      s: SparkSession, d: String): Unit =
-    shingleRowsMemo.remove((s, d))
-
-  /** Release [[shingleRowsMemo]]'s entry AND its checkpoint blocks —
-    * see [[releaseMutualEdgesMemo]] for the lifecycle contract. The
-    * shingle-row table is the LARGEST memoized frame (one row per
-    * distinct (doc, blk, 3-gram)), so this is the highest-value
-    * eviction of the three. */
-  private[graft] def releaseDocShingleRows(
-      s: SparkSession, d: String): Unit =
-    shingleRowsMemo.remove((s, d)).foreach(graft.Ckpt.release(_))
-
-  private[graft] def docShingleRowsPrimed(
-      s: SparkSession, d: String): Boolean =
-    shingleRowsMemo.contains((s, d))
-
-  /** The declared query names that resolve through [[shingleRowsMemo]]. */
-  private[graft] val ShingleMemoQueries: Set[String] =
+  /** The shingle-row memo family: the distinct (id, blk = lang, shingle)
+    * row table over ALL documents is the dominant cost (tokenize + hash
+    * explode) of the n-gram gate's artifact build (lang-blocked) and of
+    * the ingest ledger's (single-block — a per-doc-constant blk
+    * projection keeps distinctness, so one table serves both). It is
+    * the LARGEST memoized frame: one row per distinct (doc, blk, 3-gram). */
+  private val DocShingleRowsMemo = graft.Memo.frames("doc_shingle_rows",
     Set("q_stream_ngram", "q_stream_attribution", "q_ngram_novelty",
-      "q_stream_novelty")
+      "q_stream_novelty"))
+
+  private[graft] def docShingleRows(s: SparkSession, d: String): DataFrame =
+    graft.Memo.get(DocShingleRowsMemo, s, d) {
+      Dedup
+        .ngramShingleRows(documents(s, d), "doc_id", "text", col("lang"), 3)
+        .localCheckpoint(true)
+    }
 
   /** Duplicate clusters: connected components over the minhash near-dup
     * pairs — iterative min-label propagation on the Spark side, a
@@ -4257,62 +4141,23 @@ object PipelineQueries {
       .orderBy("stage_idx")
   }
 
-  /** Memo for [[stagedVerdicts]], keyed by (session, dir) — the
-    * [[ccMemo]] discipline applied to the funnel's per-doc verdict
-    * frame, the shared prefix of TWO declared queries (q_curation_funnel
-    * and q_corpus_card): without it each readout re-runs the
-    * gopher battery + repetition battery + contamination shingle join
-    * for bit-identical verdicts (round-16 VERDICT #7; ~2-4 s per
-    * consumer at sf0.1). The value is one boolean-flag row per doc —
-    * the SMALLEST memoized frame of the five families. Same
-    * localCheckpoint validity probe and Bench/Verify release-point
-    * lifecycle as the other memo families ([[SparkEntry.memoFamilies]]).
-    * NOT result caching across runs: the memo lives in-session, builds
-    * inside a consumer's timed window, and is disclosed per-run via
-    * `memo_hits`. */
-  private val stagedVerdictsMemo =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), DataFrame]
+  /** The funnel-verdict memo family: one boolean-flag row per doc, the
+    * shared prefix of the funnel and the corpus card — without it each
+    * readout re-runs the gopher battery + repetition battery +
+    * contamination shingle join for bit-identical verdicts (~2-4 s per
+    * consumer at sf0.1). */
+  private val StagedVerdictsMemo = graft.Memo.frames("staged_verdicts",
+    Set("q_curation_funnel", "q_corpus_card"))
 
-  private[graft] def stagedVerdicts(s: SparkSession, d: String): DataFrame = {
-    val key = (s, d)
-    def build(): DataFrame =
+  private[graft] def stagedVerdicts(s: SparkSession, d: String): DataFrame =
+    graft.Memo.get(StagedVerdictsMemo, s, d) {
       stagedVerdictsUnmemoized(s, d).localCheckpoint(true)
-    stagedVerdictsMemo.get(key) match {
-      case Some(cached) =>
-        try { cached.limit(1).collect(); cached }
-        catch {
-          case _: org.apache.spark.SparkException =>
-            stagedVerdictsMemo.remove(key, cached)
-            stagedVerdictsMemo.getOrElseUpdate(key, build())
-        }
-      case None => stagedVerdictsMemo.getOrElseUpdate(key, build())
     }
-  }
-
-  private[graft] def invalidateStagedVerdicts(
-      s: SparkSession, d: String): Unit =
-    stagedVerdictsMemo.remove((s, d))
-
-  /** Release [[stagedVerdictsMemo]]'s entry AND its checkpoint blocks —
-    * see [[releaseMutualEdgesMemo]] for the lifecycle contract. */
-  private[graft] def releaseStagedVerdicts(
-      s: SparkSession, d: String): Unit =
-    stagedVerdictsMemo.remove((s, d)).foreach(graft.Ckpt.release(_))
-
-  private[graft] def stagedVerdictsPrimed(
-      s: SparkSession, d: String): Boolean =
-    stagedVerdictsMemo.contains((s, d))
-
-  /** The declared query names that resolve through
-    * [[stagedVerdictsMemo]]. */
-  private[graft] val VerdictMemoQueries: Set[String] =
-    Set("q_curation_funnel", "q_corpus_card")
 
   /** The funnel's per-document cumulative stage verdicts (doc_id,
     * s1…s4) — shared by [[curationFunnel]] and [[corpusCard]] so the two
     * readouts can never disagree about survivorship. Resolved through
-    * [[stagedVerdictsMemo]]; this is the build. */
+    * [[StagedVerdictsMemo]]; this is the build. */
   private def stagedVerdictsUnmemoized(
       s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)

@@ -76,14 +76,6 @@ object StreamingQueries {
 
   private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** The declared query names that resolve through the
-    * [[graft.dedup.TableCommit.sharedDeploy]] corpus-layer memo —
-    * whichever runs first pays the deploy, the other reuses the
-    * immutable tables (disclosed per-run like the CC/shingle/knn
-    * memos). */
-  private[graft] val CommitMemoQueries: Set[String] =
-    Set("q_stream_commit", "q_stream_lifecycle")
-
   /** Start `stream` against a memory sink, drain all available input, and
     * return the sink table. AvailableNow processes everything then stops —
     * the batch-job face of the streaming runtime.
@@ -1109,8 +1101,7 @@ object StreamingQueries {
     import PipelineQueries.{
       IncrementalMod, MinhashHashes, MinhashBands, SpanW, SimhashBlocks}
     val docs = documents(s, d)
-    val store = graft.dedup.TableCommit.sharedDeploy(
-      s, s"$d#commit-corpus",
+    val store = graft.dedup.TableCommit.sharedDeploy(s, d,
       docs.filter(col("doc_id") % IncrementalMod =!= 0), "doc_id", "text",
       MinhashHashes, MinhashBands, SpanW, simhashBlocks = SimhashBlocks)
     val arrivals = StreamingOps
@@ -1242,8 +1233,7 @@ object StreamingQueries {
       IncrementalMod, RetractMod, RetractResidue,
       MinhashHashes, MinhashBands, SpanW, SimhashBlocks}
     val docs = documents(s, d)
-    val store = graft.dedup.TableCommit.sharedDeploy(
-      s, s"$d#commit-corpus",
+    val store = graft.dedup.TableCommit.sharedDeploy(s, d,
       docs.filter(col("doc_id") % IncrementalMod =!= 0), "doc_id", "text",
       MinhashHashes, MinhashBands, SpanW, simhashBlocks = SimhashBlocks)
     val arrivals = StreamingOps

@@ -2084,16 +2084,16 @@ object TextQueries {
     // keep set replaces the inline subtree in nDoc's plan — same rows,
     // one materialization, released right after nDoc (its only consumer)
     // is checkpointed.
-    var tokAll: DataFrame = null
-    var alignedCkpt: Option[DataFrame] = None
-    graft.Par.all(
-      () => tokAll = docs.select(
+    val ckpts = graft.Par.checkpointAll(
+      (() => docs.select(
         col("doc_id"), col("lang"),
         posexplode_outer(
           regexp_extract_all(col("text"), lit(BpePattern), lit(0)))
           .as(Seq("pos", "tok")))
-        .localCheckpoint(true),
-      () => alignedCkpt = aligned.map(_.localCheckpoint(true)))
+        .localCheckpoint(true)) +:
+        aligned.toSeq.map(a => () => a.localCheckpoint(true)): _*)
+    val tokAll = ckpts.head
+    val alignedCkpt = ckpts.lift(1)
     val islotsCol =
       if (withImages)
         when(col("doc_id") % ImgEvery === 0 && col("al") === 1L,

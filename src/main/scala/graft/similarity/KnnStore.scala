@@ -244,13 +244,11 @@ class KnnStore(
     // The probe and assignment materializations are independent given
     // c0 — submit them concurrently (guide §2.6; they were two serial
     // jobs, each leaving the session idle during the other's tail).
-    var probes: DataFrame = null
-    var asg: DataFrame = null
-    graft.Par.all(
-      () => probes = Ivf.knnProbeFrame(c0, centArr, nProbe)
+    val Seq(probes, asg) = graft.Par.checkpointAll(
+      () => Ivf.knnProbeFrame(c0, centArr, nProbe)
         .withColumn("cell", col("cell").cast("long"))
         .localCheckpoint(true),
-      () => asg = Ivf.knnAsgFrame(c0, centArr)
+      () => Ivf.knnAsgFrame(c0, centArr)
         .withColumn("cell", col("cell").cast("long"))
         .localCheckpoint(true))
     // Three independent writes off the checkpointed probe/assignment
@@ -308,13 +306,11 @@ class KnnStore(
     // sets in ONE job per frame instead of one per set (each collect
     // was its own scheduler round-trip in a ~12-job serial chain —
     // round 17, guide §2.6).
-    var bProbes: DataFrame = null
-    var bAsg: DataFrame = null
-    graft.Par.all(
-      () => bProbes = Ivf.knnProbeFrame(b0, centArr, nProbe)
+    val Seq(bProbes, bAsg) = graft.Par.checkpointAll(
+      () => Ivf.knnProbeFrame(b0, centArr, nProbe)
         .withColumn("cell", col("cell").cast("long"))
         .localCheckpoint(true),
-      () => bAsg = Ivf.knnAsgFrame(b0, centArr)
+      () => Ivf.knnAsgFrame(b0, centArr)
         .withColumn("cell", col("cell").cast("long"))
         .localCheckpoint(true))
     val asgSets = bAsg
@@ -673,13 +669,11 @@ class KnnStore(
       .agg(collect_list(struct(col("cell"), col("cemb"))).as("cents"))
       .localCheckpoint(true)
     // Independent given (c0, centArr2) — concurrent like deploy's.
-    var probes2: DataFrame = null
-    var asg2: DataFrame = null
-    graft.Par.all(
-      () => probes2 = Ivf.knnProbeFrame(c0, centArr2, nProbe)
+    val Seq(probes2, asg2) = graft.Par.checkpointAll(
+      () => Ivf.knnProbeFrame(c0, centArr2, nProbe)
         .withColumn("cell", col("cell").cast("long"))
         .localCheckpoint(true),
-      () => asg2 = Ivf.knnAsgFrame(c0, centArr2)
+      () => Ivf.knnAsgFrame(c0, centArr2)
         .withColumn("cell", col("cell").cast("long"))
         .localCheckpoint(true))
     swapGeneration(
@@ -789,13 +783,11 @@ class KnnStore(
         .agg(collect_list(struct(col("cell"), col("cemb"))).as("cents"))
         .localCheckpoint(true)
       // Independent given (c0, centArr2) — concurrent like deploy's.
-      var probes2: DataFrame = null
-      var asg2: DataFrame = null
-      graft.Par.all(
-        () => probes2 = Ivf.knnProbeFrame(c0, centArr2, nProbe)
+      val Seq(probes2, asg2) = graft.Par.checkpointAll(
+        () => Ivf.knnProbeFrame(c0, centArr2, nProbe)
           .withColumn("cell", col("cell").cast("long"))
           .localCheckpoint(true),
-        () => asg2 = Ivf.knnAsgFrame(c0, centArr2)
+        () => Ivf.knnAsgFrame(c0, centArr2)
           .withColumn("cell", col("cell").cast("long"))
           .localCheckpoint(true))
       // Cells whose membership changed (≤ K values — driver-sized).

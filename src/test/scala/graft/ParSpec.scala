@@ -58,4 +58,32 @@ class ParSpec extends SparkSuite {
     assert(e.getMessage == "graft par boom")
     assert(done.get(), "sibling task must have completed before rethrow")
   }
+
+  test("checkpointAll returns the frames in argument order") {
+    val fs = Par.checkpointAll(
+      () => spark.range(1).toDF("id").localCheckpoint(true),
+      () => spark.range(2).toDF("id").localCheckpoint(true),
+      () => spark.range(3).toDF("id").localCheckpoint(true))
+    try assert(fs.map(_.count()) == Seq(1L, 2L, 3L))
+    finally Ckpt.release(fs: _*)
+  }
+
+  test("checkpointAll: a failing thunk's checkpointed siblings are released, failure rethrows") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val checkpointed = new java.util.concurrent.CountDownLatch(2)
+    def sibling() = {
+      val f = spark.range(10).toDF("id").localCheckpoint(true)
+      checkpointed.countDown()
+      f
+    }
+    val e = intercept[RuntimeException](Par.checkpointAll(
+      () => sibling(),
+      () => { checkpointed.await(); throw new RuntimeException("graft ckpt boom") },
+      () => sibling()))
+    assert(e.getMessage == "graft ckpt boom")
+    assert(checkpointed.getCount == 0, "both siblings checkpointed first")
+    val leaked = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+  }
 }

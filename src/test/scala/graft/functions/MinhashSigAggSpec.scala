@@ -65,4 +65,18 @@ class MinhashSigAggSpec extends SparkSuite {
       .select(element_at(col("sig"), 1)).head()
     assert(empty.isNullAt(0))
   }
+
+  test("a call with the wrong arity names the two-argument signature") {
+    MinhashSigAgg.register(spark)
+    import spark.implicits._
+    val e = intercept[Exception](Seq(42L).toDF("shingle")
+      .agg(expr("graft_minhash_sig(shingle)")).collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    assert(!chain.exists(_.isInstanceOf[IndexOutOfBoundsException]))
+    assert(
+      chain.exists(t => String.valueOf(t.getMessage)
+        .contains("graft_minhash_sig(shingle, numHashes)")),
+      s"error must name the signature, got: $e")
+  }
 }

@@ -1225,6 +1225,38 @@ class StreamingSpec extends SparkSuite {
     assert(multi == want, "stream gate must equal the batch incremental")
   }
 
+  test("hamming gate keeps a re-delivered pair suppressed when its content changed") {
+    // The gate's state is pair-keyed and first-delivery-only: id 1
+    // re-arrives in a later micro-batch with a changed hash, still
+    // inside corpus id 10's hamming ball, and must not re-emit. A NEW
+    // pair in that same batch does emit, so the gate is live.
+    import spark.implicits._
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val x = 0x1234L
+    val corpus = graft.dedup.Dedup.simhashBanded(
+      Seq((10L, x)).toDF("id", "simhash"), 16, 4)
+    val in = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Long)]
+    val q = StreamingOps
+      .hammingGateStream(in.toDF().toDF("id", "simhash"), corpus, 16, 3, 4)
+      .writeStream
+      .outputMode("append")
+      .format("memory")
+      .queryName("hamming_redelivery")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("ckpt_hamming").toString)
+      .start()
+    try {
+      in.addData((1L, x))
+      q.processAllAvailable()
+      in.addData((1L, x ^ 1L), (2L, x ^ 3L))
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.table("hamming_redelivery").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got == Set((1L, 10L, 0L), (2L, 10L, 2L)))
+  }
+
   test("streaming alignment gate equals the batch scores through the real runtime") {
     // The stateless blob-map + frozen-projection gate must reproduce the
     // batch CLIP-filter verdicts verbatim (shared feature, projection
