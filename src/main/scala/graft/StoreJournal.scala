@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.util.sketch.BloomFilter
 
 /** The shared write-ahead JOURNAL of the table-backed stores
   * ([[graft.dedup.TableCommit]], [[graft.similarity.KnnStore]],
@@ -92,10 +94,36 @@ import org.apache.spark.sql.types.StructType
   * that becomes durable atomically with the marker CAS, so there is
   * no window at all (the Delta/Iceberg commit-log shape, in-journal).
   *
-  * The journal also owns the maintenance bookkeeping every store
-  * repeated: the delta byte/file counters behind the auto-compaction
-  * triggers ([[markBatch]] charges them; [[advance]] resets) and the
-  * crash-injection hook the recovery specs drive ([[crashPoint]]). */
+  * THE STORE KERNEL. The journal is also the one kernel the four stores
+  * run on. A store DECLARES each of its tables once
+  * ([[StoreJournal.Table]]: name, schema, write layout — by `part`, by
+  * `cell`, one file, or plain), its fixed-path deploy artifacts, and
+  * (a sharing [[graft.dedup.TableCommit]] only) the shared root whose
+  * generation-0 layers its reads union under its own. From that
+  * declaration the kernel owns the whole lifecycle:
+  *
+  *   - [[commitDeploy]]: the geometry `meta` and the generation-0
+  *     layers written staged and concurrently, published, and committed
+  *     by the deploy marker;
+  *   - [[commitBatch]]: a fold's or retract's per-table batch writes,
+  *     the `<kind>-before-marker` crash point and the batch marker;
+  *   - [[commitGeneration]]: the compaction/refresh swap — every
+  *     declared table written as generation N+1 by its layout, then
+  *     `<tag>-before-publish`, publish, `<tag>-before-marker`, the
+  *     generation marker, `<tag>-after-marker`, the driver flip and the
+  *     one-generation-retention GC;
+  *   - [[reopen]]: meta present, stored geometry equal to the requested
+  *     one, reload, the deployed-marker check, the delta recharge;
+  *   - the read faces ([[readAll]], [[readDelta]], [[tomb]],
+  *     [[readAt]]), the stored ∪ tombstoned id Bloom ([[idBloom]]),
+  *     [[vacuum]] over the declared tables, and the maintenance
+  *     bookkeeping: the delta byte/file counters ([[markBatch]] charges
+  *     them; [[advance]] resets), the baseline bytes, the
+  *     auto-compaction trigger and the crash-injection hook the
+  *     recovery specs drive ([[crashPoint]]).
+  *
+  * A store keeps only what is its own: its folds, retracts, refreshes
+  * and read faces. */
 private[graft] final class StoreJournal(
     spark: SparkSession,
     val base: String,
@@ -107,7 +135,16 @@ private[graft] final class StoreJournal(
       * every successful [[checkLease]]) is fresher than this — so an
       * operator can't accidentally fence a demonstrably-live writer.
       * 0 (default) keeps the forced takeover: opening IS the claim. */
-    val takeoverAfterMs: Long = 0L) {
+    val takeoverAfterMs: Long = 0L,
+    /** The store's generation-scoped tables, a `tomb` table among them. */
+    val tables: Seq[StoreJournal.Table] = Nil,
+    /** Artifacts written once at deploy at `<root>/<name>`, never
+      * compacted (TableCommit's frozen `span0`). */
+    fixed: Seq[StoreJournal.Table] = Nil,
+    /** A sharing store's shared root: its generation-0 layers, meta and
+      * fixed artifacts are read under this base's own layers. */
+    sharedRoot: Option[String] = None) {
+  import StoreJournal.{Layout, Table}
 
   @transient private lazy val hconf = spark.sessionState.newHadoopConf()
   private def hp(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -171,14 +208,14 @@ private[graft] final class StoreJournal(
     fsOf(r).exists(hp(r))
   }
 
-  def delete(path: String): Unit = {
+  private def delete(path: String): Unit = {
     val fs = fsOf(path)
     if (fs.exists(hp(path))) fs.delete(hp(path), true)
   }
 
   /** (bytes, parquet-file count) under a path — driver-side metadata
     * only, no jobs. */
-  def du(path0: String): (Long, Long) = {
+  private def du(path0: String): (Long, Long) = {
     val path = resolve(path0)
     val fs = fsOf(path)
     if (!fs.exists(hp(path))) (0L, 0L)
@@ -379,7 +416,7 @@ private[graft] final class StoreJournal(
   /** [[resolve]] under generation `g`'s OWN manifest — the time-travel
     * read path (a superseded generation's marker pins the physical
     * dirs it committed, exactly like its delta list). */
-  def resolveAt(path: String, g: Int): String = relOf(path) match {
+  private def resolveAt(path: String, g: Int): String = relOf(path) match {
     case Some(r) =>
       aliasesAtCache
         .getOrElseUpdate(g, {
@@ -395,7 +432,7 @@ private[graft] final class StoreJournal(
   /** Load a sharing store's corpus-root manifest so shared-layer reads
     * resolve in caslog mode (no-op for rename-mode roots — their
     * markers carry no `dir:` lines). */
-  def registerForeignRoot(root: String): Unit =
+  private def registerForeignRoot(root: String): Unit =
     if (!foreignRoots.contains(root)) {
       val gens = listMarkerNames(s"$root/_gens")
       foreignRoots(root) =
@@ -675,6 +712,8 @@ private[graft] final class StoreJournal(
   private val StagedRe = "\\.w[0-9a-f]{8}$".r
   private val TrashRe = "\\.t[0-9a-f]{8}$".r
 
+  private var corpusBytesKnown: Option[Long] = None
+  sharedRoot.foreach(registerForeignRoot)
   reload()
   if (!readOnly) acquireLease()
 
@@ -691,6 +730,7 @@ private[graft] final class StoreJournal(
     seenOps.values.foreach(_.clear())
     aliases.clear()
     aliasesAtCache.clear()
+    corpusBytesKnown = None
     gens.find(g => genOf(g._1) == gen).foreach { case (_, p) =>
       readMarker(p).split("\n").foreach { line =>
         if (line.startsWith("seen:")) {
@@ -715,14 +755,14 @@ private[graft] final class StoreJournal(
     this
   }
 
-  def newUuid(): String =
+  private def newUuid(): String =
     java.util.UUID.randomUUID().toString.take(12)
 
-  def batchPath(t: String, uuid: String): String =
+  private def batchPath(t: String, uuid: String): String =
     s"$base/$t/delta-g$gen/b_$uuid"
 
   /** The committed batch dirs holding table `t`, in commit order. */
-  def deltaPaths(t: String): Seq[String] =
+  private def deltaPaths(t: String): Seq[String] =
     committed.collect { case (u, ts) if ts(t) => batchPath(t, u) }.toSeq
 
   // ---- time travel (generation-scoped snapshot reads) ----------------
@@ -734,7 +774,7 @@ private[graft] final class StoreJournal(
     * the store served at the end of generation `g` — which is also
     * what generation `g+1`'s baseline folded in. Immutable for
     * `g < gen`; for the current generation it is the live face. */
-  def deltaPathsAt(t: String, g: Int): Seq[String] = {
+  private def deltaPathsAt(t: String, g: Int): Seq[String] = {
     val dir = s"$base/_batches/g$g"
     listMarkerNames(dir).flatMap { case (u, p) =>
       val lines = readMarker(p).split("\n").filter(_.nonEmpty)
@@ -742,21 +782,13 @@ private[graft] final class StoreJournal(
     }
   }
 
-  /** Whether generation `g`'s baseline dir exists, resolved through
-    * THAT generation's manifest — the time-travel retention probe. */
-  def existsAt(path: String, g: Int): Boolean = {
-    val r = resolveAt(path, g)
-    fsOf(r).exists(hp(r))
-  }
-
-  /** `baseline(g) + marked deltas(g)` of one table — the snapshot
-    * read. `corpusDir` is the store's baseline dir for generation `g`
-    * (layout is store-specific; resolved through generation `g`'s own
-    * manifest in caslog mode). */
-  def readAllAt(corpusDir: String, t: String, g: Int,
-      schema: StructType): DataFrame = {
+  /** Table `t` AS OF the end of generation `g` — the snapshot read:
+    * `baseline(g) + marked deltas(g)`, the baseline resolved through
+    * generation `g`'s own manifest in caslog mode. */
+  def readAt(t: String, g: Int): DataFrame = {
+    val schema = schemaOf(t)
     val deltas = deltaPathsAt(t, g)
-    val dir = resolveAt(corpusDir, g)
+    val dir = resolveAt(corpusDir(t, g), g)
     val baseDf =
       if (fsOf(dir).exists(hp(dir))) spark.read.schema(schema).parquet(dir)
       else emptyOf(schema)
@@ -764,10 +796,20 @@ private[graft] final class StoreJournal(
     else baseDf.unionByName(spark.read.schema(schema).parquet(deltas: _*))
   }
 
+  /** The time-travel retention probe: fails loudly, naming the store's
+    * `face`, once table `t`'s generation-`g` baseline aged out (GC'd or
+    * vacuumed), instead of letting [[readAt]] serve an empty frame. */
+  def requireRetained(face: String, t: String, g: Int): Unit = {
+    val r = resolveAt(corpusDir(t, g), g)
+    require(fsOf(r).exists(hp(r)),
+      s"$face($g): generation $g is not retained (GC'd or vacuumed) — " +
+        "raise gcRetainMs / vacuum retainMs to pin it")
+  }
+
   /** Commit one fold/retract: atomic marker rename (recording the
     * delivery id durably), then track it and charge the maintenance
     * counters. */
-  def markBatch(uuid: String, tables: Set[String], kind: String, id: Long): Unit = {
+  private def markBatch(uuid: String, tables: Set[String], kind: String, id: Long): Unit = {
     checkLease()
     commitMarker(batchesDir, s"$uuid.commit",
       s"op:$kind:$id\n" + tables.mkString("\n"))
@@ -785,6 +827,7 @@ private[graft] final class StoreJournal(
         (if (aliases.isEmpty) "" else "\n" + serializeAliases))
     gen = 0
     deployed = true
+    corpusBytesKnown = None
   }
 
   /** Commit generation `g2` — the compaction's atomic point. The
@@ -793,7 +836,7 @@ private[graft] final class StoreJournal(
     * old generation's batch markers). Driver state does NOT advance
     * here (the caller may crash-inject between marker and advance);
     * call [[advance]] after. */
-  def markGeneration(g2: Int): Unit = {
+  private def markGeneration(g2: Int): Unit = {
     checkLease()
     commitMarker(gensDir, f"g-$g2%05d.commit",
       "compact\n" + serializeSeen +
@@ -804,11 +847,12 @@ private[graft] final class StoreJournal(
     * folded in, so the batch list and the delta charge counters reset
     * (the seen-id sets persist — they are baselined in the generation
     * marker). */
-  def advance(g2: Int): Unit = {
+  private def advance(g2: Int): Unit = {
     gen = g2
     committed.clear()
     deltaBytes = 0L
     deltaFiles = 0L
+    corpusBytesKnown = None
     // Manifest hygiene: entries for generations older than the
     // one-generation keep set never serve current reads (time travel
     // reads THAT generation's marker, [[resolveAt]]) — prune them so
@@ -851,8 +895,8 @@ private[graft] final class StoreJournal(
     * predecessor — so lazy frames handed out before the LAST compaction
     * keep resolving, while a long-running auto-compacting store leaks
     * at most one superseded corpus copy instead of one per compaction.
-    * The stores run this right after every successful compaction;
-    * [[vacuum]] remains the aggressive manual sweep.
+    * [[commitGeneration]] runs this right after every successful
+    * generation swap; [[vacuum]] remains the aggressive manual sweep.
     *
     * `retainMs` adds the same age gate as [[vacuum]]'s: under frequent
     * AUTO-compaction, "two generations old" can be seconds old, and an
@@ -860,7 +904,7 @@ private[graft] final class StoreJournal(
     * vacuum was designed to protect — so a generation outside the
     * count-based keep set still survives until it has been superseded
     * for at least the window. */
-  def gcAged(tables: Seq[String], retainMs: Long = 0L): Unit = {
+  private def gcAged(retainMs: Long): Unit = {
     checkLease()
     val keep = Set(s"-g$gen", s"-g${gen - 1}")
     val mtimes = genMarkerMtimes
@@ -869,7 +913,7 @@ private[graft] final class StoreJournal(
     def genOfLayer(name: String): Int =
       name.substring(name.lastIndexOf("-g") + 2).toInt
     val live = liveAliasTargets()
-    for (t <- tables; d <- listChildDirs(s"$base/$t")) {
+    for (t <- tables.map(_.name); d <- listChildDirs(s"$base/$t")) {
       val name = d.substring(d.lastIndexOf('/') + 1)
       // In caslog mode committed layers LIVE under staged names — the
       // manifest, not the suffix, separates residue from state.
@@ -894,28 +938,191 @@ private[graft] final class StoreJournal(
     }
   }
 
-  def emptyOf(schema: StructType): DataFrame =
+  private def emptyOf(schema: StructType): DataFrame =
     spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
 
-  def readOr(path: String, schema: StructType): DataFrame = {
+  private def readOr(path: String, schema: StructType): DataFrame = {
     val r = resolve(path)
     if (fsOf(r).exists(hp(r))) spark.read.schema(schema).parquet(r)
     else emptyOf(schema)
   }
 
+  /** Per-op delta write: ONE plain parquet file, invisible to reads
+    * until the op's marker commits. */
+  private def writeBatch(df: DataFrame, t: String, uuid: String): Unit = {
+    requireWritable()
+    df.coalesce(1).write.mode("overwrite").parquet(batchPath(t, uuid))
+  }
+
+  // ---- the store kernel: declared tables, the commits, reopen ---------
+  private def declared(t: String): Table =
+    (tables ++ fixed).find(_.name == t).getOrElse(
+      throw new IllegalArgumentException(s"$t is not a table of $base"))
+  private def schemaOf(t: String): StructType = declared(t).schema.getOrElse(
+    throw new IllegalArgumentException(s"$t of $base is read as written"))
+
+  /** Where the deploy's layers, meta and fixed artifacts live: the
+    * shared root of a sharing store, else this base. */
+  private val layerRoot: String = sharedRoot.getOrElse(base)
+  private def metaDir = s"$layerRoot/meta"
+
+  /** Table `t`'s generation-`g` baseline under this base. */
+  private def corpusDir(t: String, g: Int = gen): String = s"$base/$t/corpus-g$g"
+
+  /** The baseline layer the corpus faces read: the shared root's
+    * generation-0 layer for a sharing store (immutable, pinned at
+    * deploy), else this base's current generation; a fixed artifact's
+    * one dir. */
+  private def baselineDir(t: String): String =
+    if (fixed.exists(_.name == t)) s"$layerRoot/$t"
+    else sharedRoot.fold(corpusDir(t))(r => s"$r/$t/corpus-g0")
+
+  /** The baseline layer of `t` alone — the readouts' corpus faces, and
+    * a trained artifact (read as written). */
+  def readBaseline(t: String): DataFrame = declared(t).schema match {
+    case Some(schema) => readOr(baselineDir(t), schema)
+    case None => spark.read.parquet(resolve(baselineDir(t)))
+  }
+
+  /** Staged write of one table layer by its declared layout: `part=`
+    * or `cell=` dirs with one file each, one file, or plain. */
+  private def writeLayer(df: DataFrame, layout: Layout, dir: String): Unit = {
+    val w = layout match {
+      case Layout.ByPart(parts) =>
+        df.repartition(parts, col("part")).write.partitionBy("part")
+      case Layout.ByCell =>
+        df.repartition(col("cell")).write.partitionBy("cell")
+      case Layout.OneFile => df.coalesce(1).write
+      case Layout.Plain => df.write
+    }
+    w.mode("overwrite").parquet(staged(dir))
+  }
+
   /** The marked (journal-committed) delta batches of one table. */
-  def readDelta(t: String, schema: StructType): DataFrame = {
+  def readDelta(t: String): DataFrame = {
+    val schema = schemaOf(t)
     val paths = deltaPaths(t)
     if (paths.isEmpty) emptyOf(schema)
     else spark.read.schema(schema).parquet(paths: _*)
   }
 
-  /** Per-op delta write: ONE plain parquet file, invisible to reads
-    * until the op's marker commits. */
-  def writeBatch(df: DataFrame, t: String, uuid: String): Unit = {
+  /** This base's layers of `t`: its current baseline + marked deltas. */
+  def readOwn(t: String): DataFrame =
+    readOr(corpusDir(t), schemaOf(t)).unionByName(readDelta(t))
+
+  /** Every layer of `t`: the shared baseline (sharing stores), then
+    * this base's own layers. */
+  def readAll(t: String): DataFrame = sharedRoot match {
+    case Some(_) => readBaseline(t).unionByName(readOwn(t))
+    case None => readOwn(t)
+  }
+
+  /** The tombstones. They persist across every compaction as their own
+    * compacted baseline, so the no-id-reuse law ("retracted ids may not
+    * be recommitted") outlives the physical drop of the tombstoned
+    * rows. Delete-sized. */
+  def tomb: DataFrame = readOwn("tomb")
+
+  /** A Bloom over the stored ∪ tombstoned ids of `t` — the id gates'
+    * prefilter: no false negatives, so an all-novel delivery skips the
+    * exact verify. */
+  def idBloom(t: String, idCol: String): BloomFilter = {
+    val ids = readAll(t).select(idCol)
+      .unionByName(tomb.select(idCol)).distinct()
+    ids.stat.bloomFilter(idCol, math.max(1L, ids.count()), 0.01)
+  }
+
+  /** The deploy commit: the geometry `meta` (one row) and each frame —
+    * a declared table's generation-0 layer or a fixed artifact — written
+    * under staging names concurrently with `alongside`, then published
+    * and committed by the deploy marker. */
+  def commitDeploy(meta: Seq[(String, Any)], frames: Seq[(String, DataFrame)],
+      alongside: (() => Unit)*): Unit = {
     requireWritable()
-    df.coalesce(1).write.mode("overwrite").parquet(batchPath(t, uuid))
+    val dirs = frames.map { case (t, _) => baselineDir(t) }
+    val metaRow = spark.createDataFrame(
+      java.util.List.of(Row.fromSeq(meta.map(_._2))),
+      StructType(meta.map {
+        case (k, _: Int) => StructField(k, IntegerType)
+        case (k, _: String) => StructField(k, StringType)
+      }))
+    Par.all(
+      (() => writeLayer(metaRow, Layout.OneFile, metaDir)) +:
+        frames.zip(dirs).map { case ((t, df), d) =>
+          () => writeLayer(df, declared(t).layout, d)
+        } ++: alongside: _*)
+    publishStaged(dirs :+ metaDir)
+    markDeploy()
+  }
+
+  /** One fold or retract: each frame written as this op's private batch
+    * of its table, concurrently with `alongside`, then the
+    * `<kind>-before-marker` crash point and the one batch marker that
+    * commits them all and records the delivery id. */
+  def commitBatch(kind: String, id: Long, frames: Seq[(String, DataFrame)],
+      alongside: (() => Unit)*): Unit = {
+    val uuid = newUuid()
+    Par.all(frames.map { case (t, df) => () => writeBatch(df, t, uuid) }
+      ++: alongside: _*)
+    crashPoint(s"$kind-before-marker")
+    markBatch(uuid, frames.map(_._1).toSet, kind, id)
+  }
+
+  /** The generation swap of a compaction or refresh: every declared
+    * table's frame (`tomb` defaults to the distinct tombstones, carried
+    * forward) written as generation `gen + 1` by its layout,
+    * concurrently; then `<tag>-before-publish`, the lease-checked
+    * publish, `<tag>-before-marker`, the ONE generation marker (which
+    * also baselines the seen-id sets), `<tag>-after-marker`, the driver
+    * flip and the one-generation-retention GC. A crash on either side of
+    * the marker reopens to one complete generation. */
+  def commitGeneration(tag: String, frames: Map[String, DataFrame],
+      retainMs: Long): Unit = {
+    checkLease() // fence stale writers before the deterministic-dir writes
+    val all = if (frames.contains("tomb")) frames
+      else frames + ("tomb" -> tomb.distinct())
+    require(all.keySet == tables.map(_.name).toSet,
+      s"a generation writes every table of $base: got " +
+        s"${all.keys.toSeq.sorted.mkString(", ")}")
+    val g2 = gen + 1
+    val dirs = tables.map(t => corpusDir(t.name, g2))
+    Par.all(tables.zip(dirs).map { case (t, d) =>
+      () => writeLayer(all(t.name), t.layout, d)
+    }: _*)
+    crashPoint(s"$tag-before-publish")
+    publishStaged(dirs)
+    crashPoint(s"$tag-before-marker")
+    markGeneration(g2)
+    crashPoint(s"$tag-after-marker")
+    advance(g2)
+    gcAged(retainMs)
+  }
+
+  /** The reopen prologue: reload, meta present, the stored geometry
+    * equal to the requested one, a committed deploy marker (a deploy
+    * writes meta before its marker, so meta alone may be a crashed
+    * deploy's), and the delta counters recharged. `store` names the
+    * store in the errors. */
+  def reopen(store: String, geometry: Seq[(String, Any)]): Unit = {
+    reload()
+    require(exists(metaDir),
+      s"$store.reopen: no store at $layerRoot (missing meta)")
+    val mt = spark.read.parquet(resolve(metaDir)).head()
+    val stored = geometry.map { case (k, _) => (k, mt.getAs[Any](k)) }
+    def show(g: Seq[(String, Any)]) =
+      g.map { case (k, v) => s"$k=$v" }.mkString(", ")
+    require(stored == geometry,
+      s"$store.reopen: stored geometry (${show(stored)}) != requested " +
+        s"(${show(geometry)}) — a mismatched parts would mis-prune every " +
+        "partition-pruned read; a mismatched hash or split geometry " +
+        "would break fold/decrement symmetry")
+    require(deployed ||
+        sharedRoot.exists(r => exists(s"$r/_gens/g-00000.commit")),
+      s"$store.reopen: store at $layerRoot has meta but no committed " +
+        "generation marker (deploy crashed before its atomic point) — " +
+        "refusing to serve a partially-deployed store")
+    rechargeDeltas()
   }
 
   // ---- maintenance bookkeeping (shared by all stores) -----------------
@@ -931,17 +1138,47 @@ private[graft] final class StoreJournal(
   }
 
   /** Re-charge the counters from the marked batches — the reopen path. */
-  def rechargeDeltas(): Unit = {
+  private def rechargeDeltas(): Unit = {
     deltaBytes = 0L
     deltaFiles = 0L
     committed.foreach { case (u, ts) => chargeDelta(u, ts) }
   }
 
+  /** Baseline bytes of the declared tables (a sharing store counts the
+    * shared layer and its own) — the denominator of the delta:corpus
+    * trigger; driver-side metadata, measured once per generation. */
+  private def corpusBytes: Long = corpusBytesKnown.getOrElse {
+    val n = tables.map { t =>
+      du(baselineDir(t.name))._1 +
+        (if (sharedRoot.isDefined) du(corpusDir(t.name))._1 else 0L)
+    }.sum
+    corpusBytesKnown = Some(n)
+    n
+  }
+
+  /** (corpus bytes, delta bytes, delta files, committed ops since the
+    * last generation swap, current generation). */
+  def maintenanceStats: (Long, Long, Long, Int, Int) =
+    (corpusBytes, deltaBytes, deltaFiles, committed.size, gen)
+
+  /** The size trigger: marked deltas outgrew `ratio` of the baseline
+    * bytes, or hold more than `maxFiles` files. */
+  def deltaOutgrows(ratio: Double, maxFiles: Long): Boolean =
+    deltaBytes > ratio * math.max(1L, corpusBytes) || deltaFiles > maxFiles
+
+  /** Auto-compaction after a committed fold or retract: `compact` runs
+    * when the store enabled it and its trigger `fires`. */
+  def maybeAutoCompact(enabled: Boolean, fires: => Boolean)(
+      compact: => Unit): Unit =
+    if (enabled && fires) compact
+
   /** Crash-injection hook for the recovery specs: the named point
     * throws after its phase completes, BEFORE the marker commits or any
     * driver state mutates — simulating process death there. Points:
-    * "fold-before-marker", "retract-before-marker",
-    * "compact-before-marker", "compact-after-marker". */
+    * "fold-before-marker", "retract-before-marker" ([[commitBatch]]),
+    * and "<tag>-before-publish", "<tag>-before-marker",
+    * "<tag>-after-marker" ([[commitGeneration]]) for the tags "compact"
+    * and "refresh". */
   var crashAt: Option[String] = None
   def crashPoint(name: String): Unit =
     if (crashAt.contains(name))
@@ -988,7 +1225,7 @@ private[graft] final class StoreJournal(
   }
 
   /** VACUUM — the aggressive manual sweep of journal garbage under
-    * `tables`: unmarked batch dirs of the current generation (crashed
+    * the declared tables: unmarked batch dirs of the current generation (crashed
     * mid-op residue — their markers never committed, so reads never see
     * them; always swept), every SUFFICIENTLY-AGED layer dir of a
     * non-current generation (including the one [[gcAged]] retains —
@@ -1006,7 +1243,7 @@ private[graft] final class StoreJournal(
     * long-lived reader holding a pre-compaction lazy frame survives an
     * unlucky auto-compact + vacuum as long as the window covers its
     * lifetime. The default 0 keeps the aggressive immediate sweep. */
-  def vacuum(tables: Seq[String], retainMs: Long = 0L): Long = {
+  def vacuum(retainMs: Long = 0L): Long = {
     checkLease()
     var removed = 0L
     val live = committed.map(_._1).toSet
@@ -1018,7 +1255,7 @@ private[graft] final class StoreJournal(
       name.substring(name.lastIndexOf("-g") + 2).toInt
     val liveLayers = liveAliasTargets()
     removed += sweepBaseResidue(liveLayers)
-    for (t <- tables) {
+    for (t <- tables.map(_.name)) {
       for (d <- listChildDirs(s"$base/$t")) {
         val name = d.substring(d.lastIndexOf('/') + 1)
         val stripped = stripResidue(name)
@@ -1049,5 +1286,32 @@ private[graft] final class StoreJournal(
       if (g != gen && aged(g)) { delete(p.toString); removed += 1 }
     }
     removed
+  }
+}
+
+private[graft] object StoreJournal {
+
+  /** How a table's generation layers are written. */
+  sealed trait Layout
+  object Layout {
+    /** Hive `part=<n>` dirs with one file each: a shuffle onto `part`
+      * across `parts` partitions, then `partitionBy("part")`. */
+    final case class ByPart(parts: Int) extends Layout
+    /** Hive `cell=<n>` dirs with one file each. */
+    case object ByCell extends Layout
+    /** One parquet file. */
+    case object OneFile extends Layout
+    /** As the frame is partitioned. */
+    case object Plain extends Layout
+  }
+
+  /** A store's table, declared once: its name (the directory under the
+    * base), the schema its layers are read with — None for a trained
+    * artifact the store reads as written — and its layout. */
+  final case class Table(
+      name: String, schema: Option[StructType], layout: Layout)
+  object Table {
+    def apply(name: String, schema: StructType, layout: Layout): Table =
+      Table(name, Some(schema), layout)
   }
 }

@@ -1882,7 +1882,19 @@ object Dedup {
       idCol: String,
       textCol: String,
       w: Int = 8
-  ): DataFrame = {
+  ): DataFrame =
+    spansIncremental(corpus, batch, idCol, textCol, w)._1
+
+  /** [[removeDuplicateSpansIncremental]] plus its checkpointed token
+    * frame, for a caller that materializes the result and can then
+    * release the tokens. */
+  private def spansIncremental(
+      corpus: DataFrame,
+      batch: DataFrame,
+      idCol: String,
+      textCol: String,
+      w: Int
+  ): (DataFrame, DataFrame) = {
     val toks = batch.select(col(idCol).as("id"), words(col(textCol)).as("wd"))
       .localCheckpoint(true)
     val bSpans = toks
@@ -1890,7 +1902,7 @@ object Dedup {
       .select(col("id"), col("ps.pos").as("pos"), hash60(col("ps.s")).as("fp"))
     val corpusFps = spanFpSet(corpus, idCol, textCol, w)
     val removable = bSpans.join(corpusFps, Seq("fp")).select("id", "pos")
-    exciseIntervals(toks, removable, w)
+    (exciseIntervals(toks, removable, w), toks)
   }
 
   /** The corpus SPAN-FINGERPRINT artifact: the distinct 60-bit hashes of
@@ -2028,10 +2040,14 @@ object Dedup {
         val acceptedRaw = batchDocs
           .join(verdicts.filter(col("verdict") === "new").select("id"),
             Seq("id"))
-        val acc = removeDuplicateSpansIncremental(
-          corpusDocs, acceptedRaw, "id", "text", w)
-          .select(col("id"), col("clean_text").as("text"))
-          .localCheckpoint(true)
+        val (cleaned, toks) =
+          spansIncremental(corpusDocs, acceptedRaw, "id", "text", w)
+        // The token frame is dead once the accepted frame materialized,
+        // on the success and on the id-clash path alike.
+        val acc =
+          try cleaned.select(col("id"), col("clean_text").as("text"))
+            .localCheckpoint(true)
+          finally graft.Ckpt.release(toks)
         // Id-disjointness is load-bearing, not hygiene: the gate dedups
         // by CONTENT fingerprint only, so a batch doc reusing a corpus
         // doc id with different text passes the gate, and the

@@ -57,66 +57,31 @@ class SentenceTable(
 
   import spark.implicits._
 
-  private val journal =
-    new graft.StoreJournal(spark, base, readOnly, takeoverAfterMs)
-  private def corpusPath(t: String) = s"$base/$t/corpus-g${journal.gen}"
   private def partOf(c: org.apache.spark.sql.Column) =
     pmod(hash(c), lit(parts))
 
-  private val docSchema = new StructType()
-    .add("id", LongType).add("text", StringType).add("part", IntegerType)
-  private val shSchema = new StructType()
-    .add("sh", LongType).add("w", LongType).add("part", IntegerType)
-  private val tombSchema = new StructType().add("id", LongType)
+  private val journal = {
+    import graft.StoreJournal.{Layout, Table}
+    new graft.StoreJournal(spark, base, readOnly, takeoverAfterMs, Seq(
+      Table("docs", new StructType().add("id", LongType)
+        .add("text", StringType).add("part", IntegerType), Layout.ByPart(parts)),
+      Table("sh", new StructType().add("sh", LongType).add("w", LongType)
+        .add("part", IntegerType), Layout.ByPart(parts)),
+      Table("tomb", new StructType().add("id", LongType), Layout.OneFile)))
+  }
 
   private var idBloom: org.apache.spark.util.sketch.BloomFilter = _
-  private var corpusBytes: Long = 0L
 
   /** Crash-injection hook — see [[graft.StoreJournal.crashPoint]]. */
   private[dedup] def crashAt: Option[String] = journal.crashAt
-  private[dedup] def crashAt_=(v: Option[String]): Unit =
-    journal.crashAt = v
-  private def crashPoint(name: String): Unit = journal.crashPoint(name)
-
-  private def schemaOf(t: String) = t match {
-    case "docs" => docSchema
-    case "sh" => shSchema
-    case "tomb" => tombSchema
-  }
-  private def readDelta(t: String) = journal.readDelta(t, schemaOf(t))
-  private def readAll(t: String) =
-    journal.readOr(corpusPath(t), schemaOf(t)).unionByName(readDelta(t))
-  private def tomb: DataFrame =
-    // Tombstones persist across compactions as their own compacted
-    // baseline — without it, the first compaction would let a
-    // tombstoned id re-commit and resurrect its deleted hashes.
-    journal.readOr(corpusPath("tomb"), tombSchema)
-      .unionByName(readDelta("tomb"))
+  private[dedup] def crashAt_=(v: Option[String]): Unit = journal.crashAt = v
 
   /** The deploy-time geometry persisted for [[SentenceTable.reopen]]
     * validation: a mismatched `parts` would mis-prune every gate and
     * takedown read (a takedown would silently no-op), and a different
     * `splitRegex` would regenerate takedown decrements that no longer
     * cancel the deploy-time +1 rows. */
-  private def metaPath = s"$base/meta"
-  private def writeMeta(): Unit = {
-    import spark.implicits._
-    Seq((parts, splitRegex)).toDF("parts", "splitRegex")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(journal.staged(metaPath))
-  }
-  private def validateMeta(): Unit = {
-    require(journal.exists(metaPath),
-      s"SentenceTable.reopen: no store at $base (missing meta)")
-    val mt = spark.read.parquet(journal.resolve(metaPath)).head()
-    val (sp, sr) = (mt.getAs[Int]("parts"), mt.getAs[String]("splitRegex"))
-    require(sp == parts && sr == splitRegex,
-      s"SentenceTable.reopen: stored geometry (parts=$sp, " +
-        s"splitRegex=$sr) != requested (parts=$parts, " +
-        s"splitRegex=$splitRegex) — a mismatched parts would mis-prune " +
-        "every pruned read; a different splitRegex would break " +
-        "decrement symmetry")
-  }
+  private def geometry = Seq("parts" -> parts, "splitRegex" -> splitRegex)
 
   /** One ±`sign` row per distinct (document, sentence hash) — the
     * multiset grain at which retraction is exact. */
@@ -130,22 +95,9 @@ class SentenceTable(
     val docs = corpus
       .select(col(idCol).as("id"), col(textCol).as("text"))
       .localCheckpoint(true)
-    writeMeta()
-    // Generation dirs write under writer-scoped staging names and
-    // publish (lease-checked renames) right before the marker.
-    graft.Par.all(
-      () => docs.withColumn("part", partOf(col("id")))
-        .repartition(parts, col("part"))
-        .write.mode("overwrite").partitionBy("part")
-        .parquet(journal.staged(corpusPath("docs"))),
-      () => shRows(docs, 1L)
-        .repartition(parts, col("part"))
-        .write.mode("overwrite").partitionBy("part")
-        .parquet(journal.staged(corpusPath("sh"))))
-    journal.publishStaged(
-      Seq("docs", "sh").map(corpusPath) :+ metaPath)
-    journal.markDeploy()
-    corpusBytes = Seq("docs", "sh").map(t => journal.du(corpusPath(t))._1).sum
+    journal.commitDeploy(geometry, Seq(
+      "docs" -> docs.withColumn("part", partOf(col("id"))),
+      "sh" -> shRows(docs, 1L)))
     idBloom = docs.stat.bloomFilter("id", math.max(1L, docs.count()), 0.01)
     graft.Ckpt.release(docs) // tables are on disk; blocks are dead
     this
@@ -172,9 +124,9 @@ class SentenceTable(
         val candDf = cand.toSeq.toDF("id")
           .withColumn("part", partOf(col("id"))).localCheckpoint(true)
         val cParts = candDf.select("part").distinct().as[Int].collect().toSeq
-        val present = readAll("docs")
+        val present = journal.readAll("docs")
           .filter(col("part").isin(cParts: _*)).select("id")
-          .unionByName(tomb.select("id"))
+          .unionByName(journal.tomb.select("id"))
           .join(broadcast(candDf.select("id")), Seq("id"), "left_semi")
           .distinct()
         val kept = raw.join(broadcast(present), Seq("id"), "left_anti")
@@ -186,14 +138,9 @@ class SentenceTable(
       journal.noteSeen("fold", batchId); graft.Ckpt.release(bb); return
     }
     val bIds = bb.select("id").distinct().as[Long].collect()
-    val uuid = journal.newUuid()
-    graft.Par.all(
-      () => journal.writeBatch(bb.withColumn("part", partOf(col("id"))),
-        "docs", uuid),
-      () => journal.writeBatch(shRows(bb, 1L), "sh", uuid))
-    val wrote = Set("docs", "sh")
-    crashPoint("fold-before-marker")
-    journal.markBatch(uuid, wrote, "fold", batchId)
+    journal.commitBatch("fold", batchId, Seq(
+      "docs" -> bb.withColumn("part", partOf(col("id"))),
+      "sh" -> shRows(bb, 1L)))
     bIds.foreach(idBloom.putLong)
     graft.Ckpt.release(bb) // committed — blocks are dead
     maybeAutoCompact()
@@ -206,14 +153,14 @@ class SentenceTable(
   def retractBatch(deleteIds: DataFrame, batchId: Long): Unit = synchronized {
     if (journal.seen("retract", batchId)) return
     val del = deleteIds.select(col("id")).distinct()
-      .join(tomb, Seq("id"), "left_anti")
+      .join(journal.tomb, Seq("id"), "left_anti")
       .withColumn("part", partOf(col("id")))
       .localCheckpoint(true)
     if (del.isEmpty) {
       journal.markNoop("retract", batchId); graft.Ckpt.release(del); return
     }
     val dParts = del.select("part").distinct().as[Int].collect().toSeq
-    val deleted = readAll("docs")
+    val deleted = journal.readAll("docs")
       .filter(col("part").isin(dParts: _*))
       .join(broadcast(del.select("id")), Seq("id"), "left_semi")
       .select("id", "text")
@@ -222,19 +169,17 @@ class SentenceTable(
       journal.markNoop("retract", batchId)
       graft.Ckpt.release(del, deleted); return
     }
-    val uuid = journal.newUuid()
-    graft.Par.all(
-      () => journal.writeBatch(deleted.select("id"), "tomb", uuid),
-      () => journal.writeBatch(shRows(deleted, -1L), "sh", uuid))
-    val wrote = Set("tomb", "sh")
-    crashPoint("retract-before-marker")
-    journal.markBatch(uuid, wrote, "retract", batchId)
+    journal.commitBatch("retract", batchId, Seq(
+      "tomb" -> deleted.select("id"),
+      "sh" -> shRows(deleted, -1L)))
     graft.Ckpt.release(del, deleted)
     maybeAutoCompact()
   }
 
   /** The committed sentence-hash set: `sum(w) > 0`. */
-  def presentHashes: DataFrame = readAll("sh")
+  def presentHashes: DataFrame = present(journal.readAll("sh"))
+
+  private def present(sh: DataFrame): DataFrame = sh
     .groupBy("sh").agg(sum(col("w")).as("n"))
     .filter(col("n") > 0)
     .select("sh")
@@ -248,92 +193,44 @@ class SentenceTable(
     * — immutable once superseded. An aged-out generation fails loudly
     * instead of serving an empty frame (round-14 VERDICT missing #3). */
   def presentHashesAt(g: Int): DataFrame = {
-    val dir = s"$base/sh/corpus-g$g"
-    require(journal.existsAt(dir, g),
-      s"SentenceTable.presentHashesAt($g): generation $g is not " +
-        "retained (GC'd or vacuumed) — raise gcRetainMs / vacuum " +
-        "retainMs to pin it")
-    journal.readAllAt(dir, "sh", g, shSchema)
-      .groupBy("sh").agg(sum(col("w")).as("n"))
-      .filter(col("n") > 0)
-      .select("sh")
+    journal.requireRetained("SentenceTable.presentHashesAt", "sh", g)
+    present(journal.readAt("sh", g))
   }
 
   /** The baseline (deploy until first compaction) distinct hash set —
     * the readouts' n_corpus face. */
   def corpusHashes: DataFrame =
-    journal.readOr(corpusPath("sh"), shSchema).select("sh").distinct()
+    journal.readBaseline("sh").select("sh").distinct()
 
   /** Maintenance readout: (corpus bytes, delta bytes, delta files,
     * committed ops since the last compaction, current generation). */
-  def maintenanceStats: (Long, Long, Long, Int, Int) =
-    (corpusBytes, journal.deltaBytes, journal.deltaFiles,
-      journal.committed.size, journal.gen)
+  def maintenanceStats: (Long, Long, Long, Int, Int) = journal.maintenanceStats
 
   /** GC of journal garbage — [[graft.StoreJournal.vacuum]];
     * `retainMs` age-gates the sweep of superseded generations. */
-  def vacuum(retainMs: Long = 0L): Long = synchronized {
-    journal.vacuum(Seq("docs", "sh", "tomb"), retainMs)
-  }
+  def vacuum(retainMs: Long = 0L): Long = synchronized { journal.vacuum(retainMs) }
 
-  private def maybeAutoCompact(): Unit =
-    if (autoCompact &&
-        (journal.deltaBytes > compactDeltaRatio * math.max(1L, corpusBytes) ||
-          journal.deltaFiles > compactMaxDeltaFiles)) compact()
+  private def maybeAutoCompact(): Unit = journal.maybeAutoCompact(autoCompact,
+    journal.deltaOutgrows(compactDeltaRatio, compactMaxDeltaFiles))(compact())
 
   /** Fold the marked deltas and tombstones into a fresh generation —
     * multiset rows compact to one summed row per surviving hash
     * (count-preserving), docs to their tombstone survivors; a
     * committed-face no-op, crash-atomic via the generation marker. */
   def compact(): Unit = synchronized {
-    journal.checkLease() // fence stale writers before the deterministic-dir writes
-    val g2 = journal.gen + 1
-    // Single-consumer frames write directly into the fresh generation
-    // (reads stay on the current one), three independent writes
-    // concurrently (graft.Par).
-    val sh = readAll("sh")
-      .groupBy("sh", "part").agg(sum(col("w")).as("w"))
-      .filter(col("w") > 0)
-      .select("sh", "w", "part")
-    val docs = readAll("docs").join(tomb, Seq("id"), "left_anti")
-      .select("id", "text", "part")
-    // Tombstones survive as their own compacted baseline — the
-    // no-id-reuse law must outlive the physical drop of the tombstoned
-    // rows (a re-committed id would resurrect its deleted hashes).
-    val tombAll = tomb.distinct()
-    def dst(t: String) = s"$base/$t/corpus-g$g2"
-    graft.Par.all(
-      () => sh.repartition(parts, col("part"))
-        .write.mode("overwrite").partitionBy("part")
-        .parquet(journal.staged(dst("sh"))),
-      () => docs.repartition(parts, col("part"))
-        .write.mode("overwrite").partitionBy("part")
-        .parquet(journal.staged(dst("docs"))),
-      () => tombAll.coalesce(1).write.mode("overwrite")
-        .parquet(journal.staged(dst("tomb"))))
-    crashPoint("compact-before-publish")
-    journal.publishStaged(Seq("sh", "docs", "tomb").map(dst))
-    crashPoint("compact-before-marker")
-    journal.markGeneration(g2)
-    crashPoint("compact-after-marker")
-    // One-generation retention GC (see graft.StoreJournal.gcAged).
-    journal.advance(g2)
-    corpusBytes = Seq("docs", "sh").map(t => journal.du(corpusPath(t))._1).sum
-    journal.gcAged(Seq("docs", "sh", "tomb"), gcRetainMs)
+    journal.commitGeneration("compact", Map(
+      "sh" -> journal.readAll("sh")
+        .groupBy("sh", "part").agg(sum(col("w")).as("w"))
+        .filter(col("w") > 0)
+        .select("sh", "w", "part"),
+      "docs" -> journal.readAll("docs")
+        .join(journal.tomb, Seq("id"), "left_anti")
+        .select("id", "text", "part")), gcRetainMs)
   }
 
   private[dedup] def restore(): SentenceTable = {
-    journal.reload()
-    validateMeta()
-    require(journal.deployed,
-      s"SentenceTable.reopen: store at $base has meta but no committed " +
-        "generation marker (deploy crashed before its atomic point) — " +
-        "refusing to serve a partially-deployed store")
-    corpusBytes = Seq("docs", "sh").map(t => journal.du(corpusPath(t))._1).sum
-    journal.rechargeDeltas()
-    val ids = readAll("docs").select("id")
-      .unionByName(tomb.select("id")).distinct()
-    idBloom = ids.stat.bloomFilter("id", math.max(1L, ids.count()), 0.01)
+    journal.reopen("SentenceTable", geometry)
+    idBloom = journal.idBloom("docs", "id")
     this
   }
 }

@@ -157,104 +157,60 @@ class TableCommit(
   private val fpc = graft.text.TextFunctions.fingerprintCol _
   private def partOf(c: Column): Column = pmod(hash(c), lit(parts))
 
-  private val cRoot = corpusRoot.getOrElse(base)
   private[dedup] def storeBase: String = base
   private[dedup] def sharedRoot: Option[String] = corpusRoot
 
-  // ---- journal (two-phase commit discipline: graft.StoreJournal) ----
-  private val journal =
-    new graft.StoreJournal(spark, base, readOnly, takeoverAfterMs)
-  // A sharing store's shared-layer reads resolve through the OWNER's
-  // manifest in caslog mode (no-op under the rename protocol).
-  corpusRoot.foreach(journal.registerForeignRoot)
-
-  /** The shared corpus layer is IMMUTABLE (a sharing store never
-    * rewrites it), so its generation is pinned at deploy time; a
-    * sharing store's compactions fold its deltas into an OWN baseline
-    * under ITS base at its own generation instead. */
-  private def corpusGen: Int = if (corpusRoot.isDefined) 0 else journal.gen
-
-  private def corpusPath(t: String) = s"$cRoot/$t/corpus-g$corpusGen"
-  /** The sharing store's own compacted baseline (shared stores only —
-    * for a plain store this path IS the corpus path). */
-  private def ownPath(t: String) = s"$base/$t/corpus-g${journal.gen}"
-  private def span0Path = s"$cRoot/span0"
-
-  // ---- maintenance counters (driver-side FS metadata only; the delta
-  // charge counters live on the journal — shared store plumbing) -------
-  private var corpusBytes: Long = 0L
-  private def tables = Seq("docs", "fp", "span", "bands", "simhash",
-    "ngramdf", "postings", "sets", "ledger", "tomb")
-  private def refreshCorpusBytes(): Unit = {
-    corpusBytes = tables.map(t => journal.du(corpusPath(t))._1).sum
-    if (corpusRoot.isDefined)
-      corpusBytes += tables.map(t => journal.du(ownPath(t))._1).sum
+  // ---- the store kernel (graft.StoreJournal): the tables, declared once.
+  // Content-keyed signed multisets (fp, span, ngramdf) and the ledger,
+  // id-keyed tables anti-joined against the tombstones, and the frozen
+  // span0 gate baseline, written once at deploy. A SHARING store reads
+  // the shared root's IMMUTABLE generation-0 layers under its own: its
+  // compactions fold only its own layers, into its own base.
+  private val journal = {
+    import graft.StoreJournal.{Layout, Table}
+    val byPart = Layout.ByPart(parts)
+    def t(name: String, layout: Layout, cols: (String, DataType)*) =
+      Table(name, StructType(cols.map { case (c, dt) => StructField(c, dt) }),
+        layout)
+    new graft.StoreJournal(spark, base, readOnly, takeoverAfterMs,
+      Seq(
+        t("docs", byPart, "id" -> LongType, "text" -> StringType,
+          "part" -> IntegerType),
+        t("fp", byPart, "fingerprint" -> StringType, "w" -> LongType,
+          "part" -> IntegerType),
+        t("span", byPart, "fp" -> LongType, "w" -> LongType,
+          "part" -> IntegerType),
+        t("bands", Layout.Plain, "id" -> LongType, "band" -> IntegerType,
+          "bh" -> StringType),
+        t("simhash", Layout.Plain, "id" -> LongType, "simhash" -> LongType,
+          "band" -> IntegerType, "bv" -> LongType),
+        t("ngramdf", Layout.Plain, "blk" -> LongType, "shingle" -> LongType,
+          "df" -> LongType),
+        t("postings", Layout.Plain, "blk" -> LongType,
+          "shingle" -> LongType, "id" -> LongType),
+        t("sets", Layout.Plain, "id" -> LongType,
+          "shingles" -> ArrayType(LongType)),
+        t("ledger", byPart, "fingerprint" -> StringType,
+          "part" -> IntegerType),
+        t("tomb", Layout.Plain, "id" -> LongType)),
+      fixed = Seq(t("span0", byPart, "fp" -> LongType, "part" -> IntegerType)),
+      sharedRoot = corpusRoot)
   }
 
-  // ---- schemas (for reading a layer that has no rows yet) ------------
-  private val docSchema = new StructType()
-    .add("id", LongType).add("text", StringType).add("part", IntegerType)
-  private val fpSchema = new StructType()
-    .add("fingerprint", StringType).add("w", LongType).add("part", IntegerType)
-  private val ledgerSchema = new StructType()
-    .add("fingerprint", StringType).add("part", IntegerType)
-  private val spanSchema = new StructType()
-    .add("fp", LongType).add("w", LongType).add("part", IntegerType)
-  private val span0Schema = new StructType()
-    .add("fp", LongType).add("part", IntegerType)
-  private val bandSchema = new StructType()
-    .add("id", LongType).add("band", IntegerType).add("bh", StringType)
-  private val simSchema = new StructType()
-    .add("id", LongType).add("simhash", LongType)
-    .add("band", IntegerType).add("bv", LongType)
-  private val dfSchema = new StructType()
-    .add("blk", LongType).add("shingle", LongType).add("df", LongType)
-  private val postSchema = new StructType()
-    .add("blk", LongType).add("shingle", LongType).add("id", LongType)
-  private val setSchema = new StructType()
-    .add("id", LongType).add("shingles", ArrayType(LongType))
-  private val tombSchema = new StructType().add("id", LongType)
-
-  private def readOr(path: String, schema: StructType): DataFrame =
-    journal.readOr(path, schema)
-  private def readDelta(t: String, schema: StructType): DataFrame =
-    journal.readDelta(t, schema)
-
-  /** All layers of a table: baseline corpus (+ the sharing store's own
-    * compacted baseline) + marked deltas. */
-  private def readAll(t: String, schema: StructType): DataFrame = {
-    val baseline =
-      if (corpusRoot.isDefined)
-        readOr(corpusPath(t), schema)
-          .unionByName(readOr(ownPath(t), schema))
-      else readOr(corpusPath(t), schema)
-    baseline.unionByName(readDelta(t, schema))
-  }
-
-  /** Corpus/baseline-layer write: one shuffle onto the part key so
-    * each partition dir gets exactly one file. Writes under the
-    * journal's writer-scoped STAGING name; the caller publishes all of
-    * a generation's dirs with ONE lease-checked
-    * [[graft.StoreJournal.publishStaged]] right before the marker, so
-    * a stale writer's in-flight generation never shadows the current
-    * lease holder's. */
-  private def writeCorpus(
-      df: DataFrame, t: String, partitioned: Boolean, g: Int,
-      root: String = cRoot): Unit = {
-    val dst = s"$root/$t/corpus-g$g"
-    val shaped =
-      if (partitioned) df.repartition(parts, col("part")) else df
-    val wtr = shaped.write.mode("overwrite")
-    (if (partitioned) wtr.partitionBy("part") else wtr)
-      .parquet(journal.staged(dst))
-  }
-
-  /** Per-fold delta write: ONE plain parquet file (`part` stays a data
-    * column — delta scans are batch-sized, so data filters suffice and
-    * the file count stays one per table per fold). Invisible to reads
-    * until the fold's marker commits. */
-  private def writeBatch(df: DataFrame, t: String, uuid: String): Unit =
-    journal.writeBatch(df, t, uuid)
+  /** The deploy-time geometry persisted next to the tables so
+    * [[TableCommit.reopen]] can VALIDATE the requested parameters: a
+    * silently different `parts` would mis-prune every partition-pruned
+    * gate and takedown read (the takedown would no-op instead of
+    * deleting), and different hash geometry (numHashes/bands/w/
+    * simhashBlocks/ngramN) would break every artifact's fold/decrement
+    * symmetry. `maxShingleDf` is stored for information but NOT
+    * validated — the cap is applied at read time against the summed df
+    * sidecar, so it is a legitimate reopen-time knob. `ngramBlockCol`
+    * is a Column and cannot be persisted; a reopen must pass the same
+    * expression (documented, like the batch faces). */
+  private def geometry = Seq("numHashes" -> numHashes, "bands" -> bands,
+    "w" -> w, "simhashBlocks" -> simhashBlocks, "ngramN" -> ngramN,
+    "parts" -> parts)
 
   // ---- per-doc artifact builders (shared by deploy and the folds) ----
   private def fpRows(docs: DataFrame, sign: Long): DataFrame = docs
@@ -290,9 +246,7 @@ class TableCommit(
   /** Crash-injection hook for the recovery specs — see
     * [[graft.StoreJournal.crashPoint]]. */
   private[dedup] def crashAt: Option[String] = journal.crashAt
-  private[dedup] def crashAt_=(v: Option[String]): Unit =
-    journal.crashAt = v
-  private def crashPoint(name: String): Unit = journal.crashPoint(name)
+  private[dedup] def crashAt_=(v: Option[String]): Unit = journal.crashAt = v
 
   private[dedup] def initBlooms(
       fp: org.apache.spark.util.sketch.BloomFilter,
@@ -300,81 +254,30 @@ class TableCommit(
       span: org.apache.spark.broadcast.Broadcast[
         org.apache.spark.util.sketch.BloomFilter]): TableCommit = {
     fpBloom = fp; idBloom = id; spanBloomBc = span
-    refreshCorpusBytes()
     this
   }
   private[dedup] def blooms = (fpBloom, idBloom, spanBloomBc)
 
-  /** Rebuild the driver-held journal and gate Blooms from the STORED
-    * tables — the crash-recovery path ([[TableCommit.reopen]]). The fp
-    * Bloom seeds from every add row plus the ledger (a retracted fp's
-    * stale bit is a false positive only — the exact verify still
-    * decides), the id Bloom from all doc ids plus tombstones (no id
-    * reuse), the span Bloom from the FROZEN `span0` table — never the
-    * compacted span layer, so the span-clean baseline stays the
-    * deploy-time one across any compact/crash history. */
+  /** Rebuild the driver-held gate Blooms from the STORED tables after
+    * the kernel's reopen prologue — the crash-recovery path
+    * ([[TableCommit.reopen]]). The fp Bloom seeds from every add row
+    * plus the ledger (a retracted fp's stale bit is a false positive
+    * only — the exact verify still decides), the id Bloom from all doc
+    * ids plus tombstones (no id reuse), the span Bloom from the FROZEN
+    * `span0` table — never the compacted span layer, so the span-clean
+    * baseline stays the deploy-time one across any compact/crash
+    * history. */
   private[dedup] def rebuild(): TableCommit = {
-    journal.reload()
-    validateMeta()
-    // A SHARED store's deploy marker lives at the layer root (its own
-    // base holds only deltas/_batches and may legitimately have no
-    // generation marker until its first compaction) — gate on the root
-    // that actually ran the deploy.
-    val sharedDeployed = corpusRoot.exists(r =>
-      journal.exists(s"$r/_gens/g-00000.commit"))
-    require(journal.deployed || sharedDeployed,
-      s"TableCommit.reopen: store at $cRoot has meta but no committed " +
-        "generation marker (deploy crashed before its atomic point) — " +
-        "refusing to serve a partially-deployed store")
-    refreshCorpusBytes()
-    journal.rechargeDeltas()
-    val fpRowsAll = readAll("fp", fpSchema).select("fingerprint")
-      .unionByName(readAll("ledger", ledgerSchema).select("fingerprint"))
+    journal.reopen("TableCommit", geometry)
+    val fpRowsAll = journal.readAll("fp").select("fingerprint")
+      .unionByName(journal.readAll("ledger").select("fingerprint"))
     fpBloom = fpRowsAll.stat.bloomFilter(
       "fingerprint", math.max(1L, fpRowsAll.count()), 0.01)
-    val idRows = readAll("docs", docSchema).select("id")
-      .unionByName(tomb.select("id"))
-    idBloom = idRows.stat.bloomFilter("id", math.max(1L, idRows.count()), 0.01)
-    val spanT = readOr(span0Path, span0Schema)
+    idBloom = journal.idBloom("docs", "id")
+    val spanT = journal.readBaseline("span0")
     spanBloomBc = spark.sparkContext.broadcast(
       spanT.stat.bloomFilter("fp", math.max(1L, spanT.count()), 0.01))
     this
-  }
-
-  /** The deploy-time geometry persisted next to the tables so
-    * [[TableCommit.reopen]] can VALIDATE the requested parameters: a
-    * silently different `parts` would mis-prune every partition-pruned
-    * gate and takedown read (the takedown would no-op instead of
-    * deleting), and different hash geometry (numHashes/bands/w/
-    * simhashBlocks/ngramN) would break every artifact's fold/decrement
-    * symmetry. `maxShingleDf` is stored for information but NOT
-    * validated — the cap is applied at read time against the summed df
-    * sidecar, so it is a legitimate reopen-time knob. `ngramBlockCol`
-    * is a Column and cannot be persisted; a reopen must pass the same
-    * expression (documented, like the batch faces). */
-  private def metaPath = s"$cRoot/meta"
-  private def writeMeta(): Unit = {
-    import spark.implicits._
-    Seq((numHashes, bands, w, simhashBlocks, ngramN, parts, maxShingleDf))
-      .toDF("numHashes", "bands", "w", "simhashBlocks", "ngramN", "parts",
-        "maxShingleDf")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(journal.staged(metaPath))
-  }
-  private def validateMeta(): Unit = {
-    require(journal.exists(metaPath),
-      s"TableCommit.reopen: no store at $cRoot (missing meta)")
-    val mt = spark.read.parquet(journal.resolve(metaPath)).head()
-    val stored = (mt.getAs[Int]("numHashes"), mt.getAs[Int]("bands"),
-      mt.getAs[Int]("w"), mt.getAs[Int]("simhashBlocks"),
-      mt.getAs[Int]("ngramN"), mt.getAs[Int]("parts"))
-    val requested = (numHashes, bands, w, simhashBlocks, ngramN, parts)
-    require(stored == requested,
-      s"TableCommit.reopen: stored geometry (numHashes, bands, w, " +
-        s"simhashBlocks, ngramN, parts) = $stored != requested " +
-        s"$requested — a mismatched parts would silently mis-prune " +
-        "every partition-pruned read; mismatched hash geometry would " +
-        "break fold/decrement symmetry")
   }
 
   /** One-time corpus load: write every corpus-layer table (generation
@@ -389,39 +292,19 @@ class TableCommit(
       .localCheckpoint(true)
     val span = spanRows(docs, 1L)
     val rows = ngramRows(docs).localCheckpoint(true)
-    // The nine corpus-layer writes (plus the 1-row geometry meta) share
-    // no dependency once docs and the shingle rows are checkpointed —
-    // submit them concurrently (graft.Par): sequential, each is one
-    // small job leaving most of the cluster idle plus a full scheduler
-    // round-trip in series. All land in writer-scoped staging dirs,
-    // published together (lease-checked renames) right before the
-    // deploy marker.
-    graft.Par.all(
-      () => writeMeta(),
-      () => writeCorpus(docs.withColumn("part", partOf(col("id"))),
-        "docs", partitioned = true, 0),
-      () => writeCorpus(fpRows(docs, 1L), "fp", partitioned = true, 0),
-      () => writeCorpus(span, "span", partitioned = true, 0),
-      () => span.select("fp", "part").distinct()
-        .repartition(parts, col("part"))
-        .write.mode("overwrite").partitionBy("part")
-        .parquet(journal.staged(span0Path)),
-      () => writeCorpus(Dedup.bandTable(docs, "id", "text", numHashes, bands),
-        "bands", partitioned = false, 0),
-      () => writeCorpus(
-        Dedup.simhashBandTable(docs, "id", "text", simhashBlocks),
-        "simhash", partitioned = false, 0),
-      () => writeCorpus(dfRows(rows, 1L), "ngramdf", partitioned = false, 0),
-      () => writeCorpus(rows.select("blk", "shingle", "id"), "postings",
-        partitioned = false, 0),
-      () => writeCorpus(Dedup.shingleSetsOfRows(rows), "sets",
-        partitioned = false, 0))
-    journal.publishStaged(
-      Seq("docs", "fp", "span", "bands", "simhash", "ngramdf",
-        "postings", "sets").map(t => s"$cRoot/$t/corpus-g0")
-        :+ span0Path :+ metaPath)
-    journal.markDeploy()
-    refreshCorpusBytes()
+    // The corpus-layer writes share no dependency once docs and the
+    // shingle rows are checkpointed — the kernel submits them
+    // concurrently and commits them with the deploy marker.
+    journal.commitDeploy(geometry :+ ("maxShingleDf" -> maxShingleDf), Seq(
+      "docs" -> docs.withColumn("part", partOf(col("id"))),
+      "fp" -> fpRows(docs, 1L),
+      "span" -> span,
+      "span0" -> span.select("fp", "part").distinct(),
+      "bands" -> Dedup.bandTable(docs, "id", "text", numHashes, bands),
+      "simhash" -> Dedup.simhashBandTable(docs, "id", "text", simhashBlocks),
+      "ngramdf" -> dfRows(rows, 1L),
+      "postings" -> rows.select("blk", "shingle", "id"),
+      "sets" -> Dedup.shingleSetsOfRows(rows)))
     // Gate Blooms built from the READ-BACK stored tables (columnar
     // scans; counts are parquet-metadata-fast). No distinct anywhere —
     // duplicate inserts only re-set bits, and the row count is a safe
@@ -432,14 +315,14 @@ class TableCommit(
     var spB: org.apache.spark.util.sketch.BloomFilter = null
     graft.Par.all(
       () => {
-        val fpT = readOr(corpusPath("fp"), fpSchema)
+        val fpT = journal.readBaseline("fp")
         fpB = fpT.stat.bloomFilter(
           "fingerprint", math.max(1L, fpT.count()), 0.01)
       },
       () => idB =
         docs.stat.bloomFilter("id", math.max(1L, docs.count()), 0.01),
       () => {
-        val spanT = readOr(span0Path, span0Schema)
+        val spanT = journal.readBaseline("span0")
         spB = spanT.stat.bloomFilter("fp", math.max(1L, spanT.count()), 0.01)
       })
     fpBloom = fpB
@@ -481,15 +364,15 @@ class TableCommit(
           .localCheckpoint(true)
         candRel = cand
         val candParts = cand.select("part").distinct().as[Int].collect().toSeq
-        def pruned(t: String, schema: StructType) =
-          readAll(t, schema).filter(col("part").isin(candParts: _*))
-        val present = pruned("fp", fpSchema)
+        def pruned(t: String) =
+          journal.readAll(t).filter(col("part").isin(candParts: _*))
+        val present = pruned("fp")
           .join(broadcast(cand.select("fingerprint")),
             Seq("fingerprint"), "left_semi")
           .groupBy("fingerprint").agg(sum(col("w")).as("n"))
           .filter(col("n") > 0).select("fingerprint")
           .unionByName(
-            pruned("ledger", ledgerSchema)
+            pruned("ledger")
               .join(broadcast(cand.select("fingerprint")),
                 Seq("fingerprint"), "left_semi")
               .select("fingerprint"))
@@ -515,7 +398,7 @@ class TableCommit(
         val candI = candIds.toSeq.toDF("id")
           .withColumn("part", partOf(col("id"))).localCheckpoint(true)
         val iParts = candI.select("part").distinct().as[Int].collect().toSeq
-        val n = readAll("docs", docSchema).filter(col("part").isin(iParts: _*))
+        val n = journal.readAll("docs").filter(col("part").isin(iParts: _*))
           .select("id")
           .unionByName(tomb.select("id"))
           .join(broadcast(candI.select("id")), Seq("id"), "left_semi")
@@ -534,40 +417,28 @@ class TableCommit(
     val accepted = cleanAgainstCorpusSpans(acceptedRaw.select("id", "text"))
     // COMMIT — batch-sized delta writes into this fold's private batch
     // dirs, then the one atomic marker.
-    val uuid = journal.newUuid()
     val rows = ngramRows(accepted, spread = false).localCheckpoint(true)
-    // Nine batch-sized delta writes with no mutual dependency —
-    // concurrent (graft.Par); the marker rename below still happens
-    // strictly after ALL of them. The Bloom-growth fingerprint collect
-    // rides the same barrier (it depends only on the checkpointed
-    // `accepted`): it was a serial post-marker job; the bloom itself
+    // Nine batch-sized delta writes with no mutual dependency run
+    // concurrently; the marker still follows ALL of them. The
+    // Bloom-growth fingerprint collect rides the same barrier (it
+    // depends only on the checkpointed `accepted`); the bloom itself
     // still grows only AFTER the marker commits below.
     var newFps: Array[String] = Array.empty
-    graft.Par.all(
+    journal.commitBatch("fold", batchId, Seq(
+      "docs" -> accepted.withColumn("part", partOf(col("id"))),
+      "ledger" -> acceptedRaw.select(col("fingerprint"),
+        partOf(col("fingerprint")).as("part")),
+      "fp" -> fpRows(accepted, 1L),
+      "span" -> spanRows(accepted, 1L),
+      "bands" -> Dedup.bandTable(accepted, "id", "text", numHashes, bands),
+      "simhash" ->
+        Dedup.simhashBandTable(accepted, "id", "text", simhashBlocks),
+      "ngramdf" -> dfRows(rows, 1L),
+      "postings" -> rows.select("blk", "shingle", "id"),
+      "sets" -> Dedup.shingleSetsOfRows(rows)),
       () => newFps = accepted.select(fpc(col("text")).as("f"))
         .filter(col("f").isNotNull)
-        .distinct().as[String].collect(),
-      () => writeBatch(accepted.withColumn("part", partOf(col("id"))),
-        "docs", uuid),
-      () => writeBatch(
-        acceptedRaw.select(col("fingerprint"),
-          partOf(col("fingerprint")).as("part")),
-        "ledger", uuid),
-      () => writeBatch(fpRows(accepted, 1L), "fp", uuid),
-      () => writeBatch(spanRows(accepted, 1L), "span", uuid),
-      () => writeBatch(
-        Dedup.bandTable(accepted, "id", "text", numHashes, bands),
-        "bands", uuid),
-      () => writeBatch(
-        Dedup.simhashBandTable(accepted, "id", "text", simhashBlocks),
-        "simhash", uuid),
-      () => writeBatch(dfRows(rows, 1L), "ngramdf", uuid),
-      () => writeBatch(rows.select("blk", "shingle", "id"), "postings", uuid),
-      () => writeBatch(Dedup.shingleSetsOfRows(rows), "sets", uuid))
-    val wrote = Set("docs", "ledger", "fp", "span", "bands", "simhash",
-      "ngramdf", "postings", "sets")
-    crashPoint("fold-before-marker")
-    journal.markBatch(uuid, wrote, "fold", batchId)
+        .distinct().as[String].collect())
     // Grow the gate Blooms: committed (cleaned) fps, raw-ledger fps, ids.
     newFps.foreach(fpBloom.putString)
     batchFps.foreach(fpBloom.putString)
@@ -600,7 +471,7 @@ class TableCommit(
       else {
         val hitParts = hits.select(partOf(col("fp")).as("part"))
           .distinct().as[Int].collect().toSeq
-        val present = readOr(span0Path, span0Schema)
+        val present = journal.readBaseline("span0")
           .filter(col("part").isin(hitParts: _*))
           .join(broadcast(hits.select("fp").distinct()), Seq("fp"),
             "left_semi")
@@ -641,7 +512,7 @@ class TableCommit(
     val iParts = fresh.select("part").distinct().as[Int].collect().toSeq
     // The stored texts of the deleted docs — the exact rows whose
     // artifact contributions must be inverted.
-    val deleted = readAll("docs", docSchema)
+    val deleted = journal.readAll("docs")
       .filter(col("part").isin(iParts: _*))
       .join(broadcast(fresh.select("id")), Seq("id"), "left_semi")
       .select("id", "text")
@@ -650,18 +521,14 @@ class TableCommit(
       journal.markNoop("retract", batchId)
       graft.Ckpt.release(del, fresh, deleted); return
     }
-    val uuid = journal.newUuid()
-    graft.Par.all(
-      () => writeBatch(deleted.select("id"), "tomb", uuid),
-      () => writeBatch(fpRows(deleted, -1L), "fp", uuid),
-      () => writeBatch(spanRows(deleted, -1L), "span", uuid),
-      () => writeBatch(dfRows(ngramRows(deleted, spread = false), -1L), "ngramdf", uuid))
     // Bands / simhash / sets / postings / accepted: the tombstone
     // anti-join IS the retraction. The ledger keeps the raw fps —
     // re-delivered taken-down content stays rejected.
-    val wrote = Set("tomb", "fp", "span", "ngramdf")
-    crashPoint("retract-before-marker")
-    journal.markBatch(uuid, wrote, "retract", batchId)
+    journal.commitBatch("retract", batchId, Seq(
+      "tomb" -> deleted.select("id"),
+      "fp" -> fpRows(deleted, -1L),
+      "span" -> spanRows(deleted, -1L),
+      "ngramdf" -> dfRows(ngramRows(deleted, spread = false), -1L)))
     graft.Ckpt.release(del, fresh, deleted)
     maybeAutoCompact()
   }
@@ -673,21 +540,13 @@ class TableCommit(
     .filter(col("n") > 0)
     .select(key.map(col): _*)
 
-  private def tomb: DataFrame =
-    // Tombstones PERSIST across EVERY compaction as their own compacted
-    // baseline: a sharing store's target rows in the immutable shared
-    // corpus, and for a plain store the no-id-reuse law ("retracted ids
-    // may not be recommitted") must survive the physical drop of the
-    // tombstoned rows — without the baseline, the first compaction
-    // would silently re-admit a retracted id. Delete-sized.
-    readOr(ownPath("tomb"), tombSchema)
-      .unionByName(readDelta("tomb", tombSchema))
+  private def tomb: DataFrame = journal.tomb
 
   private def antiTomb(df: DataFrame): DataFrame =
     df.join(tomb, Seq("id"), "left_anti")
 
   def committedFingerprints: DataFrame =
-    present(readAll("fp", fpSchema), Seq("fingerprint"))
+    present(journal.readAll("fp"), Seq("fingerprint"))
 
   /** TIME TRAVEL — the committed fingerprint set AS OF the end of
     * generation `g` (Delta's `versionAsOf` shape over the journal's
@@ -704,82 +563,76 @@ class TableCommit(
       "TableCommit.committedFingerprintsAt: time travel is not " +
         "supported on a sharing store (its baseline lives in the " +
         "shared layer)")
-    val dir = s"$base/fp/corpus-g$g"
-    require(journal.existsAt(dir, g),
-      s"TableCommit.committedFingerprintsAt($g): generation $g is not " +
-        "retained (GC'd or vacuumed) — raise gcRetainMs / vacuum " +
-        "retainMs to pin it")
-    present(journal.readAllAt(dir, "fp", g, fpSchema), Seq("fingerprint"))
+    journal.requireRetained("TableCommit.committedFingerprintsAt", "fp", g)
+    present(journal.readAt("fp", g), Seq("fingerprint"))
   }
   def committedSpanFps: DataFrame =
-    present(readAll("span", spanSchema), Seq("fp"))
+    present(journal.readAll("span"), Seq("fp"))
   def committedBands: DataFrame =
-    antiTomb(readAll("bands", bandSchema)).select("id", "band", "bh")
+    antiTomb(journal.readAll("bands")).select("id", "band", "bh")
   def committedSimhashBands: DataFrame =
-    antiTomb(readAll("simhash", simSchema))
+    antiTomb(journal.readAll("simhash"))
       .select("id", "simhash", "band", "bv")
-  def committedNgramDf: DataFrame = readAll("ngramdf", dfSchema)
+  def committedNgramDf: DataFrame = journal.readAll("ngramdf")
     .groupBy("blk", "shingle").agg(sum(col("df")).as("df"))
     .filter(col("df") > 0)
   /** Raw postings → read-time df cap: the lazy compaction. */
   def committedNgramPostings: DataFrame =
-    antiTomb(readAll("postings", postSchema))
+    antiTomb(journal.readAll("postings"))
       .join(committedNgramDf.filter(col("df") <= maxShingleDf)
         .select("blk", "shingle"), Seq("blk", "shingle"))
       .select("blk", "shingle", "id")
   def committedShingleSets: DataFrame =
-    antiTomb(readAll("sets", setSchema)).select("id", "shingles")
+    antiTomb(journal.readAll("sets")).select("id", "shingles")
   /** The stream-accepted documents — the rows this store's folds
     * added on top of its corpus layer. For a SHARING store (the
     * streaming queries' shape) the face is stable across compactions:
     * own baseline + deltas, anti-tombstoned. For a PLAIN store the
-    * face means "accepted since the last compaction" — compactPlain
+    * face means "accepted since the last compaction" — a plain store's compaction
     * merges the folded docs into the corpus layer, where deploy-time
     * and folded rows are indistinguishable by design (the committed
     * faces, not this readout, are the compaction-invariant surface). */
   def accepted: DataFrame = {
-    val d = readDelta("docs", docSchema)
     val all =
-      if (corpusRoot.isDefined)
-        readOr(ownPath("docs"), docSchema).unionByName(d)
-      else d
+      if (corpusRoot.isDefined) journal.readOwn("docs")
+      else journal.readDelta("docs")
     antiTomb(all).select("id", "text")
   }
 
   // Baseline-layer faces — the readouts' n_corpus column (the current
   // generation's corpus layer: the deploy until the first compaction).
   def corpusFingerprints: DataFrame =
-    readOr(corpusPath("fp"), fpSchema).select("fingerprint").distinct()
+    journal.readBaseline("fp").select("fingerprint").distinct()
   def corpusSpanFps: DataFrame =
-    readOr(corpusPath("span"), spanSchema).select("fp").distinct()
+    journal.readBaseline("span").select("fp").distinct()
   def corpusBands: DataFrame =
-    readOr(corpusPath("bands"), bandSchema).select("id", "band", "bh")
+    journal.readBaseline("bands").select("id", "band", "bh")
   def corpusSimhashBands: DataFrame =
-    readOr(corpusPath("simhash"), simSchema)
+    journal.readBaseline("simhash")
       .select("id", "simhash", "band", "bv")
-  def corpusNgramDf: DataFrame = readOr(corpusPath("ngramdf"), dfSchema)
+  def corpusNgramDf: DataFrame = journal.readBaseline("ngramdf")
     .select("blk", "shingle", "df")
   def corpusNgramPostings: DataFrame =
-    readOr(corpusPath("postings"), postSchema)
+    journal.readBaseline("postings")
       .join(corpusNgramDf.filter(col("df") <= maxShingleDf)
         .select("blk", "shingle"), Seq("blk", "shingle"))
       .select("blk", "shingle", "id")
   def corpusShingleSets: DataFrame =
-    readOr(corpusPath("sets"), setSchema).select("id", "shingles")
+    journal.readBaseline("sets").select("id", "shingles")
 
   // Delta faces — the readouts' n_delta column (positive adds only).
-  def deltaFingerprints: DataFrame = readDelta("fp", fpSchema)
+  def deltaFingerprints: DataFrame = journal.readDelta("fp")
     .filter(col("w") > 0).select("fingerprint").distinct()
-  def deltaSpanFps: DataFrame = readDelta("span", spanSchema)
+  def deltaSpanFps: DataFrame = journal.readDelta("span")
     .filter(col("w") > 0).select("fp").distinct()
   def deltaBands: DataFrame =
-    readDelta("bands", bandSchema).select("id", "band", "bh")
+    journal.readDelta("bands").select("id", "band", "bh")
   def deltaSimhashBands: DataFrame =
-    readDelta("simhash", simSchema).select("id", "simhash", "band", "bv")
+    journal.readDelta("simhash").select("id", "simhash", "band", "bv")
   def deltaNgramRows: DataFrame =
-    readDelta("postings", postSchema).select("blk", "shingle", "id")
+    journal.readDelta("postings").select("blk", "shingle", "id")
   def deltaShingleSets: DataFrame =
-    readDelta("sets", setSchema).select("id", "shingles")
+    journal.readDelta("sets").select("id", "shingles")
 
   /** The seven committed artifacts in [[Dedup.GateArtifacts]] shape. */
   def gateArtifacts: Dedup.GateArtifacts = Dedup.GateArtifacts(
@@ -794,27 +647,22 @@ class TableCommit(
   /** GC of journal garbage (crashed-op batch dirs, superseded
     * generations) — [[graft.StoreJournal.vacuum]]; committed-face
     * no-op, returns directories removed. */
-  def vacuum(retainMs: Long = 0L): Long =
-    synchronized { journal.vacuum(tables, retainMs) }
+  def vacuum(retainMs: Long = 0L): Long = synchronized { journal.vacuum(retainMs) }
 
   /** The gate's pruned fingerprint read, exposed for the plan-shape
     * spec: the corpus layer must show PartitionFilters (hive `part=`
     * dirs prune under the user-specified schema), the batch-sized
     * deltas take the same predicate as a data filter. */
   private[graft] def prunedFpRead(candParts: Seq[Int]): DataFrame =
-    readAll("fp", fpSchema).filter(col("part").isin(candParts: _*))
+    journal.readAll("fp").filter(col("part").isin(candParts: _*))
 
   /** Maintenance readout for the stress harness and the trigger:
     * (corpus bytes, delta bytes, delta files, committed folds since
     * the last compaction, current generation). */
-  def maintenanceStats: (Long, Long, Long, Int, Int) =
-    (corpusBytes, journal.deltaBytes, journal.deltaFiles,
-      journal.committed.size, journal.gen)
+  def maintenanceStats: (Long, Long, Long, Int, Int) = journal.maintenanceStats
 
-  private def maybeAutoCompact(): Unit =
-    if (autoCompact &&
-        (journal.deltaBytes > compactDeltaRatio * math.max(1L, corpusBytes) ||
-          journal.deltaFiles > compactMaxDeltaFiles)) compact()
+  private def maybeAutoCompact(): Unit = journal.maybeAutoCompact(autoCompact,
+    journal.deltaOutgrows(compactDeltaRatio, compactMaxDeltaFiles))(compact())
 
   /** COMPACTION — the deliberate corpus-scale lifecycle op the
     * delta-append design defers to: fold every marked delta and
@@ -838,142 +686,38 @@ class TableCommit(
     * the maintenance thresholds (`autoCompact`) or an explicit call,
     * never per delivery. */
   def compact(): Unit = synchronized {
-    journal.checkLease() // fence stale writers before the deterministic-dir writes
-    if (corpusRoot.isEmpty) compactPlain() else compactShared()
-  }
-
-  private def compactPlain(): Unit = {
-    val g2 = journal.gen + 1
-    // Each compacted frame feeds exactly ONE write into the fresh
-    // generation's dirs (reads stay on the current generation — no
-    // self-overwrite), so no checkpoint: the write IS the single
-    // evaluation, and the ten independent writes run concurrently
-    // (graft.Par) — the marker rename still follows all of them.
-    // Tombstones survive as their own compacted baseline (delete-sized)
-    // — the no-id-reuse law must outlive the physical drop of the
-    // tombstoned rows, else the first compaction silently re-admits a
-    // retracted id. Checkpointed once: five survivor frames anti-join
-    // it (reading the raw tomb union five times would multiply the
+    // The source is this store's OWN layers — for a plain store, every
+    // layer; a sharing store's shared corpus layer is immutable (other
+    // stores read it), so its marked deltas fold into its own baseline
+    // under its own base instead. There the signed multisets keep their
+    // NET rows under `!= 0`: a net-negative row cancels a +1 in the
+    // shared layer, and `> 0` would resurrect retracted content. Each
+    // compacted frame feeds exactly ONE write into the fresh generation
+    // (reads stay on the current one — no self-overwrite), so no
+    // checkpoint but the tombstones': five survivor frames anti-join
+    // them (reading the raw tomb union five times would multiply the
     // delete-layer I/O with takedown volume).
+    val kept: Column => Column =
+      if (corpusRoot.isDefined) _ =!= 0 else _ > 0
+    def net(t: String, w: String, key: String*) = journal.readOwn(t)
+      .groupBy(key.map(col): _*).agg(sum(col(w)).as(w)).filter(kept(col(w)))
     val tombAll = tomb.distinct().localCheckpoint(true)
-    def surv(df: DataFrame) = df.join(tombAll, Seq("id"), "left_anti")
-    val fp = readAll("fp", fpSchema)
-      .groupBy("fingerprint", "part").agg(sum(col("w")).as("w"))
-      .filter(col("w") > 0)
-      .select("fingerprint", "w", "part")
-    val span = readAll("span", spanSchema)
-      .groupBy("fp", "part").agg(sum(col("w")).as("w"))
-      .filter(col("w") > 0)
-      .select("fp", "w", "part")
-    val ndf = readAll("ngramdf", dfSchema)
-      .groupBy("blk", "shingle").agg(sum(col("df")).as("df"))
-      .filter(col("df") > 0)
-    val docs = surv(readAll("docs", docSchema))
-      .select("id", "text", "part")
-    val bandsT = surv(readAll("bands", bandSchema))
-      .select("id", "band", "bh")
-    val sim = surv(readAll("simhash", simSchema))
-      .select("id", "simhash", "band", "bv")
-    val posts = surv(readAll("postings", postSchema))
-      .select("blk", "shingle", "id")
-    val sets = surv(readAll("sets", setSchema))
-      .select("id", "shingles")
-    val ledger = readAll("ledger", ledgerSchema)
-      .select("fingerprint", "part").distinct()
-    graft.Par.all(
-      () => writeCorpus(fp, "fp", partitioned = true, g2),
-      () => writeCorpus(span, "span", partitioned = true, g2),
-      () => writeCorpus(ndf, "ngramdf", partitioned = false, g2),
-      () => writeCorpus(docs, "docs", partitioned = true, g2),
-      () => writeCorpus(bandsT, "bands", partitioned = false, g2),
-      () => writeCorpus(sim, "simhash", partitioned = false, g2),
-      () => writeCorpus(posts, "postings", partitioned = false, g2),
-      () => writeCorpus(sets, "sets", partitioned = false, g2),
-      () => writeCorpus(ledger, "ledger", partitioned = true, g2),
-      () => writeCorpus(tombAll, "tomb", partitioned = false, g2))
-    crashPoint("compact-before-publish")
-    journal.publishStaged(tables.map(t => s"$cRoot/$t/corpus-g$g2"))
-    crashPoint("compact-before-marker")
-    journal.markGeneration(g2)
-    crashPoint("compact-after-marker")
-    // The new generation is committed; the driver state flips to it.
-    // GC runs with ONE-generation retention (gcAged): lazy frames
-    // handed out before THIS compaction keep resolving against the
-    // retained predecessor, while anything older is deleted — bounding
-    // a long-running auto-compacting store's footprint at one
-    // superseded corpus copy. [[vacuum]] remains the aggressive sweep.
-    journal.advance(g2)
-    refreshCorpusBytes()
-    journal.gcAged(tables, gcRetainMs)
-    graft.Ckpt.release(tombAll)
-  }
-
-  /** A SHARING store's compaction: the memoized corpus layer is
-    * immutable (other stores read it), so the marked deltas fold into
-    * the store's OWN baseline under its base instead — same journal
-    * discipline, one generation marker, crash-atomic. Two semantic
-    * twists the shared shape forces: the signed multisets keep their
-    * NET rows under `!= 0` (a net-negative row cancels a +1 in the
-    * immutable corpus — the `> 0` filter would resurrect retracted
-    * content), and the tombstones PERSIST as their own compacted
-    * baseline (they target corpus rows no compaction may rewrite);
-    * only the store's own id-keyed rows drop physically. Committed
-    * faces are unchanged row-for-row (spec-pinned), and read
-    * amplification (delta unions, file count) resets exactly like the
-    * plain compaction. */
-  private def compactShared(): Unit = {
-    val g2 = journal.gen + 1
-    def ownAndDelta(t: String, schema: StructType) =
-      readOr(ownPath(t), schema).unionByName(readDelta(t, schema))
-    // Single-consumer frames write directly (no checkpoint — the write
-    // is the one evaluation; reads stay on the current generation);
-    // the ten independent writes run concurrently (graft.Par).
-    val fp = ownAndDelta("fp", fpSchema)
-      .groupBy("fingerprint", "part").agg(sum(col("w")).as("w"))
-      .filter(col("w") =!= 0)
-      .select("fingerprint", "w", "part")
-    val span = ownAndDelta("span", spanSchema)
-      .groupBy("fp", "part").agg(sum(col("w")).as("w"))
-      .filter(col("w") =!= 0)
-      .select("fp", "w", "part")
-    val ndf = ownAndDelta("ngramdf", dfSchema)
-      .groupBy("blk", "shingle").agg(sum(col("df")).as("df"))
-      .filter(col("df") =!= 0)
-    val tombAll = tomb.distinct().localCheckpoint(true)
-    def survivors(df: DataFrame) = df.join(tombAll, Seq("id"), "left_anti")
-    val docs = survivors(ownAndDelta("docs", docSchema))
-      .select("id", "text", "part")
-    val bandsT = survivors(ownAndDelta("bands", bandSchema))
-      .select("id", "band", "bh")
-    val sim = survivors(ownAndDelta("simhash", simSchema))
-      .select("id", "simhash", "band", "bv")
-    val posts = survivors(ownAndDelta("postings", postSchema))
-      .select("blk", "shingle", "id")
-    val sets = survivors(ownAndDelta("sets", setSchema))
-      .select("id", "shingles")
-    val ledger = ownAndDelta("ledger", ledgerSchema)
-      .select("fingerprint", "part").distinct()
-    graft.Par.all(
-      () => writeCorpus(fp, "fp", partitioned = true, g2, base),
-      () => writeCorpus(span, "span", partitioned = true, g2, base),
-      () => writeCorpus(ndf, "ngramdf", partitioned = false, g2, base),
-      () => writeCorpus(docs, "docs", partitioned = true, g2, base),
-      () => writeCorpus(bandsT, "bands", partitioned = false, g2, base),
-      () => writeCorpus(sim, "simhash", partitioned = false, g2, base),
-      () => writeCorpus(posts, "postings", partitioned = false, g2, base),
-      () => writeCorpus(sets, "sets", partitioned = false, g2, base),
-      () => writeCorpus(ledger, "ledger", partitioned = true, g2, base),
-      () => writeCorpus(tombAll, "tomb", partitioned = false, g2, base))
-    crashPoint("compact-before-publish")
-    journal.publishStaged(tables.map(t => s"$base/$t/corpus-g$g2"))
-    crashPoint("compact-before-marker")
-    journal.markGeneration(g2)
-    crashPoint("compact-after-marker")
-    // One-generation retention GC, as in compactPlain.
-    journal.advance(g2)
-    refreshCorpusBytes()
-    journal.gcAged(tables, gcRetainMs)
-    graft.Ckpt.release(tombAll)
+    def surv(t: String, cols: String*) = journal.readOwn(t)
+      .join(tombAll, Seq("id"), "left_anti").select(cols.map(col): _*)
+    try journal.commitGeneration("compact", Map(
+      "fp" -> net("fp", "w", "fingerprint", "part")
+        .select("fingerprint", "w", "part"),
+      "span" -> net("span", "w", "fp", "part").select("fp", "w", "part"),
+      "ngramdf" -> net("ngramdf", "df", "blk", "shingle"),
+      "docs" -> surv("docs", "id", "text", "part"),
+      "bands" -> surv("bands", "id", "band", "bh"),
+      "simhash" -> surv("simhash", "id", "simhash", "band", "bv"),
+      "postings" -> surv("postings", "blk", "shingle", "id"),
+      "sets" -> surv("sets", "id", "shingles"),
+      "ledger" -> journal.readOwn("ledger")
+        .select("fingerprint", "part").distinct(),
+      "tomb" -> tombAll), gcRetainMs)
+    finally graft.Ckpt.release(tombAll)
   }
 }
 

@@ -89,19 +89,18 @@ object Bloom {
     * it sizes the aggregation buffer, so it cannot vary per row);
     * `bloom_might_contain(key, filterBytes)` → boolean. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg", exprs => BloomBuildAgg(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg_sized", exprs => BloomBuildAgg(exprs.head,
+    SessionFunctions.register(spark, "bloom_agg")(
+      exprs => BloomBuildAgg(exprs.head))
+    SessionFunctions.register(spark, "bloom_agg_sized")(
+      exprs => BloomBuildAgg(exprs.head,
         numBits = exprs(1).eval(null) match {
           case i: java.lang.Integer => i.intValue()
           case l: java.lang.Long    => l.intValue()
           case other => throw new IllegalArgumentException(
             s"bloom_agg_sized numBits must be an int literal, got $other")
-        }), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => BloomMightContain(exprs.head, exprs(1)), "built-in")
+        }))
+    SessionFunctions.register(spark, "bloom_might_contain")(
+      exprs => BloomMightContain(exprs.head, exprs(1)))
   }
 }
 

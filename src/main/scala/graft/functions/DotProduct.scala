@@ -100,8 +100,6 @@ object DotProduct {
   /** Register `graft_dot(a, b)` in a session's function registry
     * (idempotent) — same pattern as [[RollingHashMin.register]]. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      exprs => DotProduct(exprs.head, exprs(1)),
-      "built-in")
+    SessionFunctions.register(spark, "graft_dot")(
+      exprs => DotProduct(exprs.head, exprs(1)))
 }

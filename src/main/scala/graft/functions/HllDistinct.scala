@@ -136,8 +136,6 @@ object HllDistinct {
   /** Register `hll_distinct(col)` (idempotent). The bare AggregateFunction
     * is returned; the analyzer wraps it in an AggregateExpression. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_distinct",
-      exprs => HllDistinct(exprs.head),
-      "built-in")
+    SessionFunctions.register(spark, "hll_distinct")(
+      exprs => HllDistinct(exprs.head))
 }

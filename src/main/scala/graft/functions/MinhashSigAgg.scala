@@ -142,8 +142,7 @@ object MinhashSigAgg {
   /** Register `graft_minhash_sig(shingle, numHashes)` (idempotent);
     * `numHashes` must be an integer literal. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_sig",
+    SessionFunctions.register(spark, "graft_minhash_sig")(
       exprs => {
         if (exprs.length != 2) throw new IllegalArgumentException(
           "graft_minhash_sig(shingle, numHashes) takes 2 arguments, got " +
@@ -155,6 +154,5 @@ object MinhashSigAgg {
             s"graft_minhash_sig: numHashes must be an integer literal, got $other")
         }
         MinhashSigAgg(exprs.head, n)
-      },
-      "built-in")
+      })
 }

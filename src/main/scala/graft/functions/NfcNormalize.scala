@@ -74,8 +74,6 @@ object NfcNormalize {
   /** Register `nfc_normalize(text)` in a session's function registry
     * (idempotent); mirrors [[RollingHashMin.register]]. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize",
-      exprs => NfcNormalize(exprs.head),
-      "built-in")
+    SessionFunctions.register(spark, "nfc_normalize")(
+      exprs => NfcNormalize(exprs.head))
 }

@@ -50,8 +50,6 @@ object OptimizerFence {
   /** Register `graft_fence(x)` in a session's function registry
     * (idempotent); mirrors [[NfcNormalize.register]]. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_fence",
-      exprs => OptimizerFence(exprs.head),
-      "built-in")
+    SessionFunctions.register(spark, "graft_fence")(
+      exprs => OptimizerFence(exprs.head))
 }

@@ -118,10 +118,8 @@ object RollingHashMin {
     * (idempotent). The SessionExtensions path does the same at session
     * build time; this covers sessions built without extensions. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_fingerprint",
-      exprs => RollingHashMin(exprs.head),
-      "built-in")
+    SessionFunctions.register(spark, "rolling_fingerprint")(
+      exprs => RollingHashMin(exprs.head))
 }
 
 /** SparkSessionExtensions hook: `SparkSession.builder()

@@ -70,10 +70,8 @@ object ZOrder {
   /** Register `graft_zorder(a, b)` in a session's function registry
     * (idempotent). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_zorder",
-      exprs => ZOrder(exprs.head, exprs(1)),
-      "built-in")
+    SessionFunctions.register(spark, "graft_zorder")(
+      exprs => ZOrder(exprs.head, exprs(1)))
 
   /** DuckDB twin of [[spread]] over SQL expression `x` (must already be
     * BIGINT ≥ 0): the identical mask-shift chain — BIGINT casts keep

@@ -103,16 +103,11 @@ object TopKPerKey {
         spark.experimental.extraOptimizations :+ TopKRewrite
   }
 
-  @volatile private var registered = Set.empty[String]
-
   /** Idempotently inject the planner strategy into this session. */
   def register(spark: SparkSession): Unit = synchronized {
-    val id = spark.sessionState.toString
-    if (!registered.contains(id)) {
+    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-      registered += id
-    }
   }
 }
 

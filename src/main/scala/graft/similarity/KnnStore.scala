@@ -134,64 +134,42 @@ class KnnStore(
     * hits pay the content-independent id-column read. */
   private var idBloom: org.apache.spark.util.sketch.BloomFilter = _
 
-  private def p(rel: String) = s"$base/$rel"
   private def partOf(c: org.apache.spark.sql.Column) =
     pmod(hash(c), lit(parts))
 
-  // ---- journal (two-phase commit discipline: graft.StoreJournal) ----
-  private val journal =
-    new graft.StoreJournal(spark, base, readOnly, takeoverAfterMs)
+  // ---- journal (the store kernel: graft.StoreJournal) -----------------
+  private val journal = {
+    import graft.StoreJournal.{Layout, Table}
+    new graft.StoreJournal(spark, base, readOnly, takeoverAfterMs, Seq(
+      Table("probes", new StructType()
+        .add("q_vec_id", LongType).add("q_emb", ArrayType(DoubleType))
+        .add("q_nrm", DoubleType).add("cell", LongType), Layout.ByCell),
+      Table("asg", new StructType()
+        .add("vec_id", LongType).add("emb", ArrayType(DoubleType))
+        .add("nrm", DoubleType).add("cell", LongType), Layout.ByCell),
+      Table("edges", new StructType()
+        .add("q_vec_id", LongType).add("vec_id", LongType)
+        .add("score", DoubleType).add("ver", LongType)
+        .add("part", IntegerType), Layout.ByPart(parts)),
+      Table("tomb", new StructType().add("vec_id", LongType), Layout.OneFile),
+      Table("cent", None, Layout.Plain)))
+  }
 
-  private def corpusPath(t: String) = s"$base/$t/corpus-g${journal.gen}"
   /** Crash-injection hook for the recovery specs — see
     * [[graft.StoreJournal.crashPoint]]. */
   private[graft] def crashAt: Option[String] = journal.crashAt
-  private[graft] def crashAt_=(v: Option[String]): Unit =
-    journal.crashAt = v
-  private def crashPoint(name: String): Unit = journal.crashPoint(name)
+  private[graft] def crashAt_=(v: Option[String]): Unit = journal.crashAt = v
 
-  // ---- schemas ---------------------------------------------------------
-  private val probeSchema = new StructType()
-    .add("q_vec_id", LongType).add("q_emb", ArrayType(DoubleType))
-    .add("q_nrm", DoubleType).add("cell", LongType)
-  private val asgSchema = new StructType()
-    .add("vec_id", LongType).add("emb", ArrayType(DoubleType))
-    .add("nrm", DoubleType).add("cell", LongType)
-  private val edgeSchema = new StructType()
-    .add("q_vec_id", LongType).add("vec_id", LongType)
-    .add("score", DoubleType).add("ver", LongType).add("part", IntegerType)
-  private val tombSchema = new StructType().add("vec_id", LongType)
-
-  private def emptyOf(schema: StructType): DataFrame = journal.emptyOf(schema)
-
-  private def readOr(path: String, schema: StructType): DataFrame =
-    journal.readOr(path, schema)
-
-  private def readDelta(t: String, schema: StructType): DataFrame =
-    journal.readDelta(t, schema)
-
-  private def readAll(t: String, schema: StructType): DataFrame =
-    readOr(corpusPath(t), schema).unionByName(readDelta(t, schema))
-
-  private def writeBatch(df: DataFrame, t: String, uuid: String): Unit =
-    journal.writeBatch(df, t, uuid)
-
-  private def tomb: DataFrame =
-    // Tombstones persist across compactions as their own compacted
-    // baseline — the no-id-reuse law ("retracted ids may not
-    // re-arrive") must outlive the physical drop of the tombstoned
-    // rows. Delete-sized.
-    readOr(corpusPath("tomb"), tombSchema)
-      .unionByName(readDelta("tomb", tombSchema))
+  private def tomb: DataFrame = journal.tomb
 
   /** Stored probe rows of SURVIVING queries. */
-  private def readProbes: DataFrame = readAll("probes", probeSchema)
+  private def readProbes: DataFrame = journal.readAll("probes")
     .join(tomb.select(col("vec_id").as("q_vec_id")), Seq("q_vec_id"),
       "left_anti")
   /** Stored cell members that survive the tombstones. */
   private def readAsg: DataFrame =
-    readAll("asg", asgSchema).join(tomb, Seq("vec_id"), "left_anti")
-  private def readEdgesRaw: DataFrame = readAll("edges", edgeSchema)
+    journal.readAll("asg").join(tomb, Seq("vec_id"), "left_anti")
+  private def readEdgesRaw: DataFrame = journal.readAll("edges")
   private[similarity] def debugRawEdges: DataFrame = readEdgesRaw
 
   /** Each surviving query's rows under its highest version, with
@@ -225,21 +203,6 @@ class KnnStore(
     centArr = cent
       .agg(collect_list(struct(col("cell"), col("cemb"))).as("cents"))
       .localCheckpoint(true)
-    // Persist the frozen quantizer AND the store geometry next to the
-    // index tables so crash recovery restores the complete store and
-    // can VALIDATE the reopen parameters (a silently different `parts`
-    // would mis-prune every stored partition). The quantizer is
-    // GENERATION-SCOPED like every index table — [[refresh]] swaps a
-    // retrained one in under the same atomic generation marker. All
-    // generation dirs write under writer-scoped STAGING names and
-    // publish (lease-checked renames) right before the marker.
-    centArr.write.mode("overwrite")
-      .parquet(journal.staged(corpusPath("cent")))
-    // meta stages too: a fenced writer redeploying with DIFFERENT
-    // geometry must not clobber the live store's validation record.
-    Seq((nProbe, k, parts)).toDF("nProbe", "k", "parts")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(journal.staged(p("meta")))
     val c0 = Ivf.prepDouble(corpus)
     // The probe and assignment materializations are independent given
     // c0 — submit them concurrently (guide §2.6; they were two serial
@@ -251,39 +214,23 @@ class KnnStore(
       () => Ivf.knnAsgFrame(c0, centArr)
         .withColumn("cell", col("cell").cast("long"))
         .localCheckpoint(true))
-    // Three independent writes off the checkpointed probe/assignment
-    // frames — concurrent (graft.Par); the deploy marker follows all.
-    graft.Par.all(
-      // Cluster by the partition column before the partitionBy write
-      // (guide §6, the swapGeneration shape): writing straight from the
-      // core-spread checkpoint opens a parquet writer per (task, cell)
-      // pair — tasks × cells tiny files that every later readProbes/
-      // readAsg job re-lists and re-opens (profiled round 17: the two
-      // writes were the top stages of q_stream_knn_refresh_cells at
-      // 24 s + 15 s task time). One cell-keyed exchange of the
-      // metadata-sized frame buys one file per cell dir.
-      () => probes.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(journal.staged(corpusPath("probes"))),
-      () => asg.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(journal.staged(corpusPath("asg"))),
-      () => Ivf.knnEdgesCore(probes, asg, k)
+    // The frozen quantizer is GENERATION-SCOPED like every index table
+    // ([[refresh]] swaps a retrained one in under the same atomic
+    // generation marker), and the geometry meta lets [[KnnStore.reopen]]
+    // validate the reopen parameters (a silently different `parts`
+    // would mis-prune every stored partition). The gate Bloom depends
+    // only on the checkpointed assignment, so it builds inside the
+    // deploy's write barrier.
+    journal.commitDeploy(geometry, Seq(
+      "cent" -> centArr,
+      "probes" -> probes,
+      "asg" -> asg,
+      "edges" -> Ivf.knnEdgesCore(probes, asg, k)
         .select("q_vec_id", "vec_id", "score")
         .withColumn("ver", lit(0L))
-        .withColumn("part", partOf(col("q_vec_id")))
-        .coalesce(4)
-        .write.mode("overwrite").partitionBy("part")
-        .parquet(journal.staged(corpusPath("edges"))),
-      // The gate Bloom depends only on the checkpointed assignment —
-      // build it INSIDE the barrier instead of as two serial jobs after
-      // the marker (it was the deploy's tail; identical bits either way,
-      // and on any sibling failure the whole deploy throws unusable).
+        .withColumn("part", partOf(col("q_vec_id")))),
       () => idBloom = asg.stat.bloomFilter(
         "vec_id", math.max(1L, asg.count()), 0.01))
-    journal.publishStaged(
-      Seq("cent", "probes", "asg", "edges").map(corpusPath) :+ p("meta"))
-    journal.markDeploy()
     graft.Ckpt.release(probes, asg) // tables are on disk; blocks are dead
     this
   }
@@ -350,7 +297,7 @@ class KnnStore(
       require(tombClash == 0L,
         s"KnnStore: $tombClash arrival vec_id(s) are tombstoned — " +
           "retracted ids may not be recommitted")
-      val storedClashes = readAll("asg", asgSchema)
+      val storedClashes = journal.readAll("asg")
         .select("vec_id")
         .join(broadcast(candDf), Seq("vec_id"), "left_semi")
         .count()
@@ -389,18 +336,12 @@ class KnnStore(
     val merged = Similarity
       .rankTopK(oldTopK.unionByName(newCand), k)
       .select("q_vec_id", "vec_id", "score")
-    val uuid = journal.newUuid()
-    graft.Par.all(
-      () => writeBatch(
-        bEdges.unionByName(merged)
-          .withColumn("ver", lit(ver))
-          .withColumn("part", partOf(col("q_vec_id"))),
-        "edges", uuid),
-      () => writeBatch(bProbes, "probes", uuid),
-      () => writeBatch(bAsg, "asg", uuid))
-    val wrote = Set("edges", "probes", "asg")
-    crashPoint("fold-before-marker")
-    journal.markBatch(uuid, wrote, "fold", batchId)
+    journal.commitBatch("fold", batchId, Seq(
+      "edges" -> bEdges.unionByName(merged)
+        .withColumn("ver", lit(ver))
+        .withColumn("part", partOf(col("q_vec_id"))),
+      "probes" -> bProbes,
+      "asg" -> bAsg))
     bIds.foreach(idBloom.putLong)
     // The delivery is committed — release its checkpoint blocks NOW
     // instead of leaving them to GC + ContextCleaner lag: across a
@@ -420,7 +361,7 @@ class KnnStore(
     if (journal.seen("retract", batchId)) return
     val del = deleteIds.select(col("vec_id")).distinct().localCheckpoint(true)
     val fresh = del.join(tomb, Seq("vec_id"), "left_anti")
-      .join(readAll("asg", asgSchema).select("vec_id"), Seq("vec_id"),
+      .join(journal.readAll("asg").select("vec_id"), Seq("vec_id"),
         "left_semi")
       .localCheckpoint(true)
     if (fresh.isEmpty) {
@@ -447,8 +388,8 @@ class KnnStore(
       .join(broadcast(affIds), Seq("q_vec_id"), "left_semi")
       .localCheckpoint(true)
     val rescored =
-      if (affProbes.isEmpty) emptyOf(edgeSchema).select(
-        "q_vec_id", "vec_id", "score")
+      if (affProbes.isEmpty)
+        Seq.empty[(Long, Long, Double)].toDF("q_vec_id", "vec_id", "score")
       else {
         val cells = affProbes.select("cell").distinct()
           .as[Long].collect().toSeq
@@ -458,17 +399,11 @@ class KnnStore(
             .join(broadcast(fresh), Seq("vec_id"), "left_anti"),
           k).select("q_vec_id", "vec_id", "score")
       }
-    val uuid = journal.newUuid()
-    graft.Par.all(
-      () => writeBatch(fresh.select("vec_id"), "tomb", uuid),
-      () => writeBatch(
-        rescored
-          .withColumn("ver", lit(ver))
-          .withColumn("part", partOf(col("q_vec_id"))),
-        "edges", uuid))
-    val wrote = Set("tomb", "edges")
-    crashPoint("retract-before-marker")
-    journal.markBatch(uuid, wrote, "retract", batchId)
+    journal.commitBatch("retract", batchId, Seq(
+      "tomb" -> fresh.select("vec_id"),
+      "edges" -> rescored
+        .withColumn("ver", lit(ver))
+        .withColumn("part", partOf(col("q_vec_id")))))
     graft.Ckpt.release(del, fresh, affIds, affProbes)
     maybeAutoCompact()
   }
@@ -486,13 +421,8 @@ class KnnStore(
     * superseded generation for as long as it stays retained, and an
     * aged-out one fails loudly instead of serving an empty frame. */
   def directedEdgesAt(g: Int): DataFrame = {
-    val edgesDir = s"$base/edges/corpus-g$g"
-    require(journal.existsAt(edgesDir, g),
-      s"KnnStore.directedEdgesAt($g): generation $g is not retained " +
-        "(GC'd or vacuumed) — raise gcRetainMs / vacuum retainMs to pin it")
-    def at(t: String, schema: StructType) =
-      journal.readAllAt(s"$base/$t/corpus-g$g", t, g, schema)
-    currentEdgesOver(at("edges", edgeSchema), at("tomb", tombSchema))
+    journal.requireRetained("KnnStore.directedEdgesAt", "edges", g)
+    currentEdgesOver(journal.readAt("edges", g), journal.readAt("tomb", g))
   }
 
   /** The mutual graph the store currently encodes. */
@@ -501,9 +431,7 @@ class KnnStore(
   /** GC of journal garbage (crashed-op batch dirs, superseded
     * generations) — [[graft.StoreJournal.vacuum]]; committed-face
     * no-op, returns directories removed. */
-  def vacuum(retainMs: Long = 0L): Long = synchronized {
-    journal.vacuum(Seq("probes", "asg", "edges", "tomb", "cent"), retainMs)
-  }
+  def vacuum(retainMs: Long = 0L): Long = synchronized { journal.vacuum(retainMs) }
 
   /** The fold's cell-pruned assignment read, exposed for the
     * plan-shape spec (the baseline must show PartitionFilters). */
@@ -515,43 +443,17 @@ class KnnStore(
   def maintenanceStats: (Long, Long, Int, Int) =
     (ver, journal.deltaFiles, journal.committed.size, journal.gen)
 
-  private def maybeAutoCompact(): Unit =
-    if (autoCompact &&
-        (ver >= compactMaxVersions ||
-          journal.deltaFiles > compactMaxDeltaFiles))
-      compact()
+  private def maybeAutoCompact(): Unit = journal.maybeAutoCompact(autoCompact,
+    ver >= compactMaxVersions || journal.deltaFiles > compactMaxDeltaFiles)(compact())
+
+  private def geometry = Seq("nProbe" -> nProbe, "k" -> k, "parts" -> parts)
 
   private[similarity] def restore(): KnnStore = {
-    require(journal.exists(p("meta")),
-      s"KnnStore.reopen: no store at $base (missing meta)")
-    val m = spark.read.parquet(journal.resolve(p("meta"))).head()
-    val (sN, sK, sP) = (m.getAs[Int]("nProbe"), m.getAs[Int]("k"),
-      m.getAs[Int]("parts"))
-    require(sN == nProbe && sK == k && sP == parts,
-      s"KnnStore.reopen: stored geometry (nProbe=$sN, k=$sK, parts=$sP) " +
-        s"!= requested (nProbe=$nProbe, k=$k, parts=$parts) — a mismatched " +
-        "parts would silently mis-prune every stored partition")
-    journal.reload()
-    require(journal.deployed,
-      s"KnnStore.reopen: store at $base has meta but no committed " +
-        "generation marker (deploy crashed before its atomic point) — " +
-        "refusing to serve a partially-deployed store")
+    journal.reopen("KnnStore", geometry)
     // The quantizer of the COMMITTED generation — a crash on either
     // side of a refresh's marker reopens artifacts and tables in step.
-    // LAYOUT NOTE (intentional break, round-14): the quantizer moved
-    // from a fixed path to generation-scoped `cent/corpus-g<N>` when
-    // refresh() made it a swappable artifact; stores deployed by a
-    // pre-refresh code revision (fixed `cent` path) are not reopenable
-    // and must be redeployed — no production store predates the layout.
-    centArr = spark.read.parquet(journal.resolve(corpusPath("cent")))
-      .localCheckpoint(true)
-    journal.rechargeDeltas()
-    // The gate Bloom rebuilds from stored ∪ tombstoned ids (compaction
-    // drops tombstoned rows physically, but the tomb baseline keeps
-    // their ids — no id reuse across any compact/crash history).
-    val ids = readAll("asg", asgSchema).select("vec_id")
-      .unionByName(tomb.select("vec_id")).distinct()
-    idBloom = ids.stat.bloomFilter("vec_id", math.max(1L, ids.count()), 0.01)
+    centArr = journal.readBaseline("cent").localCheckpoint(true)
+    idBloom = journal.idBloom("asg", "vec_id")
     // Guard the empty-edges case (deploy over a corpus producing no
     // edges): max(ver) is null there, not a row to getLong.
     val mx = readEdgesRaw.agg(max(col("ver"))).head()
@@ -572,61 +474,27 @@ class KnnStore(
     * are left for [[vacuum]] — lazy frames handed out before the
     * compaction keep resolving. */
   def compact(): Unit = synchronized {
-    journal.checkLease() // fence stale writers before the deterministic-dir writes
     // Single-consumer frames write directly into the fresh generation
     // (reads stay on the current one — no self-overwrite, no
     // checkpoint). The quantizer carries forward UNCHANGED (K rows —
     // metadata-sized) so the new generation is self-contained.
-    swapGeneration(
-      "compact",
-      probesG = readProbes,
-      asgG = readAsg,
-      edgesG = directedEdges
-        .withColumn("ver", lit(0L))
-        .withColumn("part", partOf(col("q_vec_id")))
-        .repartition(parts, col("part")),
-      tombG = tomb.distinct(),
-      centG = centArr)
+    swapGeneration("compact", readProbes, readAsg, directedEdges, centArr)
   }
 
-  /** Write (probes, asg, edges, tomb, quantizer) as generation
-    * `gen + 1` — five independent concurrent writes (graft.Par) — and
-    * commit the swap with ONE atomic marker rename: the shared
-    * epilogue of [[compact]] (artifact carried forward) and
-    * [[refresh]] (artifact retrained); `tag` names the crash points.
-    * The edges frame must already carry (ver, part). */
-  private def swapGeneration(
-      tag: String,
-      probesG: DataFrame,
-      asgG: DataFrame,
-      edgesG: DataFrame,
-      tombG: DataFrame,
-      centG: DataFrame): Unit = {
-    val g2 = journal.gen + 1
-    def dst(t: String) = s"$base/$t/corpus-g$g2"
-    graft.Par.all(
-      () => probesG.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(journal.staged(dst("probes"))),
-      () => asgG.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(journal.staged(dst("asg"))),
-      () => edgesG.write.mode("overwrite").partitionBy("part")
-        .parquet(journal.staged(dst("edges"))),
-      () => tombG.coalesce(1).write.mode("overwrite")
-        .parquet(journal.staged(dst("tomb"))),
-      () => centG.write.mode("overwrite")
-        .parquet(journal.staged(dst("cent"))))
-    crashPoint(s"$tag-before-publish")
-    journal.publishStaged(
-      Seq("probes", "asg", "edges", "tomb", "cent").map(dst))
-    crashPoint(s"$tag-before-marker")
-    journal.markGeneration(g2)
-    crashPoint(s"$tag-after-marker")
-    // One-generation retention GC (see graft.StoreJournal.gcAged).
-    journal.advance(g2)
+  /** Commit (probes, asg, edges, quantizer) as generation `gen + 1`:
+    * the shared epilogue of [[compact]] (artifact carried forward) and
+    * the refreshes (artifact retrained); `tag` names the crash points.
+    * Edges restart at version 0. */
+  private def swapGeneration(tag: String, probesG: DataFrame,
+      asgG: DataFrame, edgesG: DataFrame, centG: DataFrame): Unit = {
+    journal.commitGeneration(tag, Map(
+      "probes" -> probesG,
+      "asg" -> asgG,
+      "edges" -> edgesG
+        .withColumn("ver", lit(0L))
+        .withColumn("part", partOf(col("q_vec_id"))),
+      "cent" -> centG), gcRetainMs)
     ver = 0L
-    journal.gcAged(Seq("probes", "asg", "edges", "tomb", "cent"), gcRetainMs)
   }
 
   /** TRAINED-ARTIFACT REFRESH — the retrain-and-swap face the drift
@@ -676,17 +544,9 @@ class KnnStore(
       () => Ivf.knnAsgFrame(c0, centArr2)
         .withColumn("cell", col("cell").cast("long"))
         .localCheckpoint(true))
-    swapGeneration(
-      "refresh",
-      probesG = probes2,
-      asgG = asg2,
-      edgesG = Ivf.knnEdgesCore(probes2, asg2, k)
-        .select("q_vec_id", "vec_id", "score")
-        .withColumn("ver", lit(0L))
-        .withColumn("part", partOf(col("q_vec_id")))
-        .coalesce(4),
-      tombG = tomb.distinct(),
-      centG = centArr2)
+    swapGeneration("refresh", probes2, asg2,
+      Ivf.knnEdgesCore(probes2, asg2, k).select("q_vec_id", "vec_id", "score"),
+      centArr2)
     // The generation marker committed — the rebuild inputs' checkpoint
     // blocks (survivor frame + re-derived probe/assignment) are dead,
     // as is the SUPERSEDED quantizer; release them now (round-14
@@ -839,16 +699,7 @@ class KnnStore(
             asg2, k).select("q_vec_id", "vec_id", "score")
           carried.unionByName(rescored)
         }
-      swapGeneration(
-        "refresh",
-        probesG = probes2,
-        asgG = asg2,
-        edgesG = edgesFace
-          .withColumn("ver", lit(0L))
-          .withColumn("part", partOf(col("q_vec_id")))
-          .repartition(parts, col("part")),
-        tombG = tomb.distinct(),
-        centG = centArr2)
+      swapGeneration("refresh", probes2, asg2, edgesFace, centArr2)
       graft.Ckpt.release(c0, probes2, asg2, affected)
       if (centArr ne centArr2) graft.Ckpt.release(centArr)
       centArr = centArr2

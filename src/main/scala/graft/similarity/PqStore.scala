@@ -55,40 +55,28 @@ class PqStore(
 
   import spark.implicits._
 
-  private val journal =
-    new graft.StoreJournal(spark, base, readOnly, takeoverAfterMs)
-  private def p(rel: String) = s"$base/$rel"
-  private def corpusPath(t: String) = s"$base/$t/corpus-g${journal.gen}"
   private def partOf(c: org.apache.spark.sql.Column) =
     pmod(hash(c), lit(parts))
 
-  private val codeSchema = new StructType()
-    .add("vec_id", LongType).add("sub", IntegerType)
-    .add("code", LongType).add("part", IntegerType)
-  private val tombSchema = new StructType().add("vec_id", LongType)
+  private val journal = {
+    import graft.StoreJournal.{Layout, Table}
+    new graft.StoreJournal(spark, base, readOnly, takeoverAfterMs, Seq(
+      Table("codes", new StructType().add("vec_id", LongType)
+        .add("sub", IntegerType).add("code", LongType)
+        .add("part", IntegerType), Layout.ByPart(parts)),
+      Table("tomb", new StructType().add("vec_id", LongType), Layout.OneFile),
+      Table("cb", None, Layout.Plain)))
+  }
 
   private var codebooks: DataFrame = _
   private var idBloom: org.apache.spark.util.sketch.BloomFilter = _
-  private var corpusBytes: Long = 0L
 
   /** Crash-injection hook — see [[graft.StoreJournal.crashPoint]]. */
   private[similarity] def crashAt: Option[String] = journal.crashAt
-  private[similarity] def crashAt_=(v: Option[String]): Unit =
-    journal.crashAt = v
-  private def crashPoint(name: String): Unit = journal.crashPoint(name)
+  private[similarity] def crashAt_=(v: Option[String]): Unit = journal.crashAt = v
   private[similarity] def storeBase: String = base
 
-  private def readDelta(t: String) = journal.readDelta(t, schemaOf(t))
-  private def readAll(t: String) =
-    journal.readOr(corpusPath(t), schemaOf(t)).unionByName(readDelta(t))
-  private def schemaOf(t: String) =
-    if (t == "tomb") tombSchema else codeSchema
-  private def tomb: DataFrame =
-    // Tombstones persist across compactions as their own compacted
-    // baseline — the no-id-reuse law must outlive the physical drop of
-    // the tombstoned rows. Delete-sized.
-    journal.readOr(corpusPath("tomb"), tombSchema)
-      .unionByName(readDelta("tomb"))
+  private def geometry = Seq("dims" -> dims, "m" -> m, "parts" -> parts)
 
   /** Deploy the trained artifacts: frozen codebooks + the corpus code
     * postings, committed as generation 0. The codebooks are
@@ -97,26 +85,10 @@ class PqStore(
   def deploy(corpusCodes: DataFrame, cb: DataFrame): PqStore = {
     journal.requireWritable()
     codebooks = cb.localCheckpoint(true)
-    // Generation dirs write under writer-scoped staging names and
-    // publish (lease-checked renames) right before the marker.
-    graft.Par.all(
-      () => codebooks.write.mode("overwrite")
-        .parquet(journal.staged(corpusPath("cb"))),
-      () => Seq((dims, m, parts)).toDF("dims", "m", "parts")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(journal.staged(p("meta"))),
-      () => corpusCodes
-        .withColumn("part", partOf(col("vec_id")))
-        .repartition(parts, col("part"))
-        .write.mode("overwrite").partitionBy("part")
-        .parquet(journal.staged(corpusPath("codes"))))
-    journal.publishStaged(
-      Seq("cb", "codes").map(corpusPath) :+ p("meta"))
-    journal.markDeploy()
-    corpusBytes = journal.du(corpusPath("codes"))._1
-    val ids = journal.readOr(corpusPath("codes"), codeSchema)
-      .select("vec_id").distinct()
-    idBloom = ids.stat.bloomFilter("vec_id", math.max(1L, ids.count()), 0.01)
+    journal.commitDeploy(geometry, Seq(
+      "cb" -> codebooks,
+      "codes" -> corpusCodes.withColumn("part", partOf(col("vec_id")))))
+    idBloom = journal.idBloom("codes", "vec_id")
     this
   }
 
@@ -140,10 +112,10 @@ class PqStore(
           .withColumn("part", partOf(col("vec_id")))
           .localCheckpoint(true)
         val cParts = candDf.select("part").distinct().as[Int].collect().toSeq
-        val n = readAll("codes")
+        val n = journal.readAll("codes")
           .filter(col("part").isin(cParts: _*))
           .select("vec_id")
-          .unionByName(tomb.select("vec_id"))
+          .unionByName(journal.tomb.select("vec_id"))
           .join(broadcast(candDf.select("vec_id")), Seq("vec_id"),
             "left_semi")
           .count()
@@ -153,14 +125,9 @@ class PqStore(
     require(clashes == 0L,
       s"PqStore: $clashes arrival vec_id(s) already stored or tombstoned " +
         "— ids must be disjoint")
-    val uuid = journal.newUuid()
-    journal.writeBatch(
+    journal.commitBatch("fold", batchId, Seq("codes" ->
       Ivf.encodePq(bb, codebooks, dims, m)
-        .withColumn("part", partOf(col("vec_id"))),
-      "codes", uuid)
-    val wrote = Set("codes")
-    crashPoint("fold-before-marker")
-    journal.markBatch(uuid, wrote, "fold", batchId)
+        .withColumn("part", partOf(col("vec_id")))))
     bIds.foreach(idBloom.putLong)
     graft.Ckpt.release(bb) // committed — blocks are dead
     maybeAutoCompact()
@@ -176,8 +143,8 @@ class PqStore(
       .localCheckpoint(true)
     val dParts = del.select("part").distinct().as[Int].collect().toSeq
     val fresh = del.select("vec_id")
-      .join(tomb, Seq("vec_id"), "left_anti")
-      .join(readAll("codes").filter(col("part").isin(dParts: _*))
+      .join(journal.tomb, Seq("vec_id"), "left_anti")
+      .join(journal.readAll("codes").filter(col("part").isin(dParts: _*))
           .select("vec_id"),
         Seq("vec_id"), "left_semi")
       .localCheckpoint(true)
@@ -185,18 +152,14 @@ class PqStore(
       journal.markNoop("retract", batchId)
       graft.Ckpt.release(del, fresh); return
     }
-    val uuid = journal.newUuid()
-    journal.writeBatch(fresh, "tomb", uuid)
-    val wrote = Set("tomb")
-    crashPoint("retract-before-marker")
-    journal.markBatch(uuid, wrote, "retract", batchId)
+    journal.commitBatch("retract", batchId, Seq("tomb" -> fresh))
     graft.Ckpt.release(del, fresh)
     maybeAutoCompact()
   }
 
   /** The posting rows an ADC search could still scan. */
-  def postings: DataFrame = readAll("codes")
-    .join(tomb, Seq("vec_id"), "left_anti")
+  def postings: DataFrame = journal.readAll("codes")
+    .join(journal.tomb, Seq("vec_id"), "left_anti")
     .select("vec_id", "sub", "code")
 
   /** TIME TRAVEL — the posting rows AS OF the end of generation `g`
@@ -211,108 +174,48 @@ class PqStore(
     * the snapshot is decodable, not just enumerable. An aged-out
     * generation fails loudly instead of serving an empty frame. */
   def postingsAt(g: Int): DataFrame = {
-    val dir = s"$base/codes/corpus-g$g"
-    require(journal.existsAt(dir, g),
-      s"PqStore.postingsAt($g): generation $g is not retained (GC'd " +
-        "or vacuumed) — raise gcRetainMs / vacuum retainMs to pin it")
-    def at(t: String) =
-      journal.readAllAt(s"$base/$t/corpus-g$g", t, g, schemaOf(t))
-    at("codes")
-      .join(at("tomb"), Seq("vec_id"), "left_anti")
+    journal.requireRetained("PqStore.postingsAt", "codes", g)
+    journal.readAt("codes", g)
+      .join(journal.readAt("tomb", g), Seq("vec_id"), "left_anti")
       .select("vec_id", "sub", "code")
   }
 
   /** Maintenance readout: (corpus bytes, delta bytes, delta files,
     * committed ops since the last compaction, current generation). */
-  def maintenanceStats: (Long, Long, Long, Int, Int) =
-    (corpusBytes, journal.deltaBytes, journal.deltaFiles,
-      journal.committed.size, journal.gen)
+  def maintenanceStats: (Long, Long, Long, Int, Int) = journal.maintenanceStats
 
   /** GC of journal garbage — [[graft.StoreJournal.vacuum]];
     * `retainMs` age-gates the sweep of superseded generations. */
-  def vacuum(retainMs: Long = 0L): Long =
-    synchronized { journal.vacuum(Seq("codes", "tomb", "cb"), retainMs) }
+  def vacuum(retainMs: Long = 0L): Long = synchronized { journal.vacuum(retainMs) }
 
-  private def maybeAutoCompact(): Unit =
-    if (autoCompact &&
-        (journal.deltaBytes > compactDeltaRatio * math.max(1L, corpusBytes) ||
-          journal.deltaFiles > compactMaxDeltaFiles)) compact()
+  private def maybeAutoCompact(): Unit = journal.maybeAutoCompact(autoCompact,
+    journal.deltaOutgrows(compactDeltaRatio, compactMaxDeltaFiles))(compact())
 
   private[similarity] def restore(): PqStore = {
-    require(journal.exists(p("meta")),
-      s"PqStore.reopen: no store at $base (missing meta)")
-    val mt = spark.read.parquet(journal.resolve(p("meta"))).head()
-    val (sd, sm, sp) = (mt.getAs[Int]("dims"), mt.getAs[Int]("m"),
-      mt.getAs[Int]("parts"))
-    require(sd == dims && sm == m && sp == parts,
-      s"PqStore.reopen: stored geometry (dims=$sd, m=$sm, parts=$sp) != " +
-        s"requested (dims=$dims, m=$m, parts=$parts)")
-    journal.reload()
-    require(journal.deployed,
-      s"PqStore.reopen: store at $base has meta but no committed " +
-        "generation marker (deploy crashed before its atomic point) — " +
-        "refusing to serve a partially-deployed store")
+    journal.reopen("PqStore", geometry)
     // The codebooks of the COMMITTED generation — a crash on either
     // side of a refresh's marker reopens artifacts and postings in step.
-    codebooks = spark.read.parquet(journal.resolve(corpusPath("cb")))
-      .localCheckpoint(true)
-    corpusBytes = journal.du(corpusPath("codes"))._1
-    journal.rechargeDeltas()
-    val ids = readAll("codes").select("vec_id")
-      .unionByName(tomb.select("vec_id")).distinct()
-    idBloom = ids.stat.bloomFilter("vec_id", math.max(1L, ids.count()), 0.01)
+    codebooks = journal.readBaseline("cb").localCheckpoint(true)
+    idBloom = journal.idBloom("codes", "vec_id")
     this
   }
 
   /** Fold the marked deltas and tombstones into a fresh generation of
     * the posting baseline — a committed-face no-op, crash-atomic via
-    * the generation marker. */
+    * the generation marker. The codebooks carry forward UNCHANGED (K·m
+    * rows — metadata-sized) so the new generation is self-contained. */
   def compact(): Unit = synchronized {
-    journal.checkLease() // fence stale writers before the deterministic-dir writes
-    // Single-consumer frames write directly into the fresh generation
-    // (reads stay on the current one); tombstones survive as their own
-    // compacted baseline — the no-id-reuse law must outlive the
-    // physical drop of the tombstoned rows. The codebooks carry
-    // forward UNCHANGED (K·m rows — metadata-sized) so the new
-    // generation is self-contained.
-    swapGeneration(
-      "compact",
-      codesG = postings.withColumn("part", partOf(col("vec_id"))),
-      tombG = tomb.distinct(),
-      cbG = codebooks)
+    swapGeneration("compact", postings, codebooks)
   }
 
-  /** Write (codes, tomb, codebooks) as generation `gen + 1` — three
-    * independent concurrent writes (graft.Par) — and commit the swap
-    * with ONE atomic marker rename: the shared epilogue of [[compact]]
-    * (codebooks carried forward) and [[refresh]] (codebooks
-    * retrained); `tag` names the crash points. */
-  private def swapGeneration(
-      tag: String,
-      codesG: DataFrame,
-      tombG: DataFrame,
-      cbG: DataFrame): Unit = {
-    val g2 = journal.gen + 1
-    def dst(t: String) = s"$base/$t/corpus-g$g2"
-    graft.Par.all(
-      () => codesG
-        .repartition(parts, col("part"))
-        .write.mode("overwrite").partitionBy("part")
-        .parquet(journal.staged(dst("codes"))),
-      () => tombG.coalesce(1).write.mode("overwrite")
-        .parquet(journal.staged(dst("tomb"))),
-      () => cbG.write.mode("overwrite")
-        .parquet(journal.staged(dst("cb"))))
-    crashPoint(s"$tag-before-publish")
-    journal.publishStaged(Seq("codes", "tomb", "cb").map(dst))
-    crashPoint(s"$tag-before-marker")
-    journal.markGeneration(g2)
-    crashPoint(s"$tag-after-marker")
-    // One-generation retention GC (see graft.StoreJournal.gcAged).
-    journal.advance(g2)
-    corpusBytes = journal.du(corpusPath("codes"))._1
-    journal.gcAged(Seq("codes", "tomb", "cb"), gcRetainMs)
-  }
+  /** Commit (postings, codebooks) as generation `gen + 1` — the shared
+    * epilogue of [[compact]] (codebooks carried forward) and the
+    * refreshes (codebooks retrained); `tag` names the crash points. */
+  private def swapGeneration(tag: String, codes: DataFrame,
+      cb: DataFrame): Unit =
+    journal.commitGeneration(tag, Map(
+      "codes" -> codes.withColumn("part", partOf(col("vec_id"))),
+      "cb" -> cb), gcRetainMs)
 
   /** TRAINED-ARTIFACT REFRESH — the retrain-and-swap face the drift
     * monitors (q_cell_drift / q_fertility_drift / q_ann_recall) exist
@@ -346,11 +249,7 @@ class PqStore(
     val cover = src.join(survivors, Seq("vec_id"), "left_semi")
     val (cb2, codes2) = Ivf.pqArtifacts(cover, centroidIds, dims, m, iters)
     val cb2c = cb2.localCheckpoint(true)
-    swapGeneration(
-      "refresh",
-      codesG = codes2.withColumn("part", partOf(col("vec_id"))),
-      tombG = tomb.distinct(),
-      cbG = cb2c)
+    swapGeneration("refresh", codes2, cb2c)
     // Marker committed — the survivor frame and the SUPERSEDED
     // codebooks' blocks are dead; release now (round-14 VERDICT #2).
     graft.Ckpt.release(survivors)
@@ -404,13 +303,9 @@ class PqStore(
     val cb2 = codebooks.filter(!col("sub").isin(subVals: _*))
       .unionByName(cbNew)
       .localCheckpoint(true)
-    swapGeneration(
-      "refresh",
-      codesG = postings.filter(!col("sub").isin(subVals: _*))
-        .unionByName(codesNew)
-        .withColumn("part", partOf(col("vec_id"))),
-      tombG = tomb.distinct(),
-      cbG = cb2)
+    swapGeneration("refresh",
+      postings.filter(!col("sub").isin(subVals: _*)).unionByName(codesNew),
+      cb2)
     graft.Ckpt.release(survivors)
     if (codebooks ne cb2) graft.Ckpt.release(codebooks)
     codebooks = cb2

@@ -191,4 +191,23 @@ class CommitArtifactsSpec extends SparkSuite {
     val a = Dedup.commitArtifacts(c, sameText, "doc_id", "text", 8, 4, 8)
     assert(a.accepted.count() == 0L)
   }
+
+  test("a call refused for an id clash leaves no persisted RDD behind, with no GC wait") {
+    import spark.implicits._
+    val c = Seq(
+      (1L, "alpha bravo charlie delta echo foxtrot golf hotel india"),
+      (2L, "juliet kilo lima mike november oscar papa quebec romeo"))
+      .toDF("doc_id", "text")
+    val clash = Seq((2L, "sierra tango uniform victor whiskey xray yankee zulu"))
+      .toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    val baseline = sc.getPersistentRDDs.keySet
+    intercept[IllegalArgumentException] {
+      Dedup.commitArtifacts(c, clash, "doc_id", "text", 8, 4, 8)
+    }
+    // Read at once: a frame left for the ContextCleaner would still be
+    // registered here.
+    val left = sc.getPersistentRDDs.keySet -- baseline
+    assert(left.isEmpty, s"persisted RDDs left by the refused call: $left")
+  }
 }
