@@ -36,6 +36,16 @@ object Ckpt {
     }
   }
 
+  /** [[release]] for every checkpoint `df`'s plan reads — for a frame
+    * DERIVED from checkpoints (a projection of one, a union of several),
+    * which [[release]] itself leaves alone. */
+  def releaseInputs(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+
   /** LEAK CANARY — the count of RDDs still registered as persisted
     * once GC + the async ContextCleaner have settled. The release
     * discipline this object documents is call-site manual; nothing

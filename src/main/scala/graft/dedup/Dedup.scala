@@ -971,8 +971,11 @@ object Dedup {
     * array in place (zero exchanges in the plan). HOF lambdas are
     * CodegenFallback, so whether this beats the fully-codegen'd
     * explode+hashAggregate is an empirical question per Spark version —
-    * measured at parity on Spark 4.1/local[32] (tools.ProfileDedup: the
-    * interpreted lambdas give back what the saved shuffle gains), so
+    * measured at parity on Spark 4.1/local[32] (a same-session noop-sink
+    * A/B of both forms over the sf0.1 documents: the interpreted lambdas
+    * give back what the saved shuffle gains; `graft.Bench`'s `profile`
+    * row for q_dedup_simhash carries the default form's task time and
+    * shuffle bytes), so
     * [[simhash]] stays the default; on a real cluster where the shuffle
     * costs network rather than memory bandwidth, this variant wins. */
   def simhashNoShuffle(df: DataFrame, idCol: String, textCol: String): DataFrame = {

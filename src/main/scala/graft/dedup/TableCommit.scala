@@ -94,10 +94,9 @@ import org.apache.spark.sql.types._
   * gate read unions the marked deltas) and the delta FILE count
   * (`compactMaxDeltaFiles` — each fold adds one file per table, so file
   * count is the per-delivery listing/open cost). Both are driver-side
-  * filesystem metadata (no jobs). The fold-count stress stage
-  * (ScaleStress r13) measures per-delivery cost vs delivery index with
-  * and without the trigger; TableCommitSpec pins trigger-fired ==
-  * manual == no-op on the committed faces.
+  * filesystem metadata (no jobs). TableCommitSpec pins trigger-fired ==
+  * manual == no-op on the committed faces; `graft.Bench`'s `ladder`
+  * times a deploy plus one fold at two corpus sizes.
   *
   * Per-delivery gate reads are kept SUB-corpus two ways: a driver-held
   * Bloom filter over committed fingerprints ∪ ledger (no false

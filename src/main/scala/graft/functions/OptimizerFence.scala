@@ -26,6 +26,11 @@ import org.apache.spark.sql.types.DataType
   * use — it exists for the gate builders, which compose it via
   * [[OptimizerFence.register]] + `expr("graft_fence(...)")`.
   *
+  * Fence a PROJECTED column only: CheckAnalysis refuses a
+  * non-deterministic expression written into a join condition or a
+  * sort order, while a fenced column referenced there as a join or
+  * sort key analyzes and returns the unfenced rows (OptimizerFenceSpec).
+  *
   * Evaluation IS deterministic (identity); the flag is a declared lie
   * whose only effect is disabling expression-duplicating rewrites.
   * Safe here because the fenced column is itself a pure function of

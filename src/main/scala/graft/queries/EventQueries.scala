@@ -489,7 +489,7 @@ object EventQueries {
 
   /** [[windowFamily]]'s core over any (event_id, event_type,
     * value_cents) frame with unique event_id (exposed for the
-    * WindowFamilySpec equality test and ScaleStress). */
+    * WindowFamilySpec equality test). */
   private[graft] def windowFamilyFrom(ev: DataFrame): DataFrame = {
     val bkt = graft.operators.PrefixSum.adaptiveRangeBucket(
       ev, col("event_id"), 12)

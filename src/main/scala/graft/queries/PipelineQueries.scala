@@ -2079,7 +2079,7 @@ object PipelineQueries {
 
   /** The fixed-point power-iteration recurrence over an arbitrary
     * undirected edge set and vertex frame (one `v` column) — exposed
-    * for the ScaleStress harness. */
+    * for PagerankPropertySpec. */
   private[graft] def pagerankOverEdges(
       edges: DataFrame,
       verts: DataFrame
@@ -2211,20 +2211,9 @@ object PipelineQueries {
     val oldEdges = graft.similarity.Ivf
       .mutualKnnEdges(corpusEmb, IvfCentroidIds, IvfNProbe, KnnGraphK)
       .select("id_a", "id_b")
-    pagerankIncrementalOverEdges(
-      oldEdges,
-      corpusEmb.select(col("vec_id").as("v")),
-      mutualEdgesMemo(s, d).select("id_a", "id_b"),
-      emb.select(col("vec_id").as("v")))
-      .orderBy("vec_id")
-  }
-
-  private[graft] def pagerankIncrementalOverEdges(
-      oldEdges: DataFrame,
-      oldVerts: DataFrame,
-      edges: DataFrame,
-      verts: DataFrame
-  ): DataFrame = {
+    val oldVerts = corpusEmb.select(col("vec_id").as("v"))
+    val edges = mutualEdgesMemo(s, d).select("id_a", "id_b")
+    val verts = emb.select(col("vec_id").as("v"))
     // Warm phase inlined (rather than via pagerankOverEdges) so the OLD
     // graph's checkpointed dir/deg tables can be released the moment
     // the warm ranks materialize into the warm-start checkpoint below
@@ -2275,6 +2264,7 @@ object PipelineQueries {
     }
     graft.Ckpt.release(prev, prevAffected, dir, deg)
     rank.select(col("v").as("vec_id"), col("r").as("rank_micros"))
+      .orderBy("vec_id")
   }
 
   /** One unrolled exact-integer power-iteration chain as DuckDB CTEs —
@@ -3892,17 +3882,9 @@ object PipelineQueries {
     * assignment row by row; same-group ⇒ same-split holds by
     * construction on both engines. */
   def leakageSafeSplit(s: SparkSession, d: String): DataFrame =
-    leakageSafeSplitFrom(
-      documents(s, d).select("doc_id"),
-      dupComponents(s, d).withColumnRenamed("id", "doc_id"))
-
-  /** [[leakageSafeSplit]]'s core over explicit (doc_id) and
-    * (doc_id, component) frames (exposed for ScaleStress, which feeds a
-    * replicated corpus rather than the memoized per-dir components). */
-  private[graft] def leakageSafeSplitFrom(
-      docIds: DataFrame, cc: DataFrame): DataFrame = {
-    docIds
-      .join(cc, Seq("doc_id"), "left")
+    documents(s, d).select("doc_id")
+      .join(dupComponents(s, d).withColumnRenamed("id", "doc_id"),
+        Seq("doc_id"), "left")
       .withColumn("group_id", coalesce(col("component"), col("doc_id")))
       .withColumn(
         "h",
@@ -3914,7 +3896,6 @@ object PipelineQueries {
           .otherwise("test"))
       .select("doc_id", "group_id", "split")
       .orderBy("doc_id")
-  }
 
   def leakageSafeSplitOracle: String =
     s"""WITH RECURSIVE $minhashPairsCtes,

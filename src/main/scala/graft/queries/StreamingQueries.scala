@@ -605,8 +605,8 @@ object StreamingQueries {
   }
 
   /** [[streamDecontam]]'s gate over any arrivals frame (streaming or
-    * batch), frozen centroid table and holdout frame — exposed for
-    * ScaleStress. Collects the two deploy-time artifacts and returns
+    * batch), frozen centroid table and holdout frame. Collects the two
+    * deploy-time artifacts and returns
     * the per-row verdict transform. */
   private[graft] def decontamGateStream(
       arrivals: DataFrame,

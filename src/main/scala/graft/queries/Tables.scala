@@ -50,7 +50,7 @@ object Tables {
       // REPO-WIDE CONTRACT: a LongType ts is raw NANOSECONDS — the shape
       // the legacy nanosAsLong conf produces from TIMESTAMP(NANOS)
       // parquet, and the unit every synthetic drop-dir writer emits
-      // (millis × 1e6: ScaleStress and the gap-session property specs).
+      // (millis × 1e6: the gap-session property specs).
       // A µs-long routed through here would come out 1000× in the past;
       // there is no cheap runtime check (a magnitude probe would need a
       // scan, impossible on a stream), so the unit is enforced by

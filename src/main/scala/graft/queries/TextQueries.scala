@@ -180,7 +180,7 @@ object TextQueries {
       graft.textanalysis.Bpe.MergesWordFull).orderBy("doc_id")
 
   /** [[tokenBpeMerges]]'s core over an arbitrary documents frame and
-    * merges table (exposed for the ScaleStress harness). */
+    * merges table (shared with the held-out and stream faces). */
   private[graft] def tokenBpeMergesDocs(
       docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
     import graft.textanalysis.Bpe
@@ -405,7 +405,7 @@ object TextQueries {
     * [[tokenBpe512]]. Same distinct-type + join-back shape; encode runs
     * the priority-merge `encodeLocal` path, whose per-type cost depends
     * on token LENGTH, not table size — the claim the 8× table-size jump
-    * from 512 exists to measure (ScaleStress has the A/B stage). */
+    * from 512 exists to measure. */
   def tokenBpe4k(s: SparkSession, d: String): DataFrame = {
     import graft.textanalysis.Bpe
     val tok = Bpe.hexTokenStream(documents(s, d))
@@ -667,13 +667,8 @@ object TextQueries {
     * with fewer than two tokens have no transitions and no row (same in
     * the oracle). At web scale the string join keys would be hashed to
     * 60-bit longs pre-shuffle like every dedup key in this repo. */
-  def lmBigram(s: SparkSession, d: String): DataFrame =
-    lmBigramDocs(documents(s, d)).orderBy("doc_id")
-
-  /** [[lmBigram]]'s core over an arbitrary documents frame (exposed for
-    * the ScaleStress harness). */
-  private[graft] def lmBigramDocs(docs: DataFrame): DataFrame = {
-    val clean = docs
+  def lmBigram(s: SparkSession, d: String): DataFrame = {
+    val clean = documents(s, d)
       .select(col("doc_id"),
         expr("filter(split(lower(text), '\\\\s+'), x -> x <> '')").as("wd"))
     val uni = clean
@@ -702,6 +697,7 @@ object TextQueries {
         count(lit(1)).as("n_bigrams"),
         round((-sum(col("lp"))).cast("double") / count(lit(1)), 0)
           .cast("long").as("mean_nll_micro"))
+      .orderBy("doc_id")
   }
 
   def lmBigramOracle: String =
@@ -735,13 +731,8 @@ object TextQueries {
     * ≤ k rows per (source, partition) BEFORE the shuffle, so a 100×
     * over-quota domain ships k·partitions rows, not its whole corpus —
     * the shape a row_number window cannot give you. */
-  def domainQuota(s: SparkSession, d: String): DataFrame =
-    domainQuotaDocs(documents(s, d)).orderBy("source", "rnk")
-
-  /** [[domainQuota]]'s core over an arbitrary documents frame (exposed
-    * for the ScaleStress harness). */
-  private[graft] def domainQuotaDocs(docs: DataFrame): DataFrame = {
-    val hashed = docs
+  def domainQuota(s: SparkSession, d: String): DataFrame = {
+    val hashed = documents(s, d)
       .withColumn(
         "h",
         graft.dedup.Dedup
@@ -754,6 +745,7 @@ object TextQueries {
         ordering = Seq(col("h").asc, col("doc_id").asc),
         k = QuotaPerSource)
       .select("source", "rnk", "doc_id")
+      .orderBy("source", "rnk")
   }
 
   def domainQuotaOracle: String =
@@ -789,13 +781,8 @@ object TextQueries {
     * partial-aggregated groupBy on the (tiny) domain key, a 1-row total
     * broadcast back — the corpus shuffles nothing but its per-domain
     * partial sums. */
-  def mixWeights(s: SparkSession, d: String): DataFrame =
-    mixWeightsDocs(documents(s, d))
-
-  /** [[mixWeights]]' core over an arbitrary documents frame (exposed for
-    * the ScaleStress harness). Requires (source, n_chars). */
-  private[graft] def mixWeightsDocs(docs: DataFrame): DataFrame = {
-    val per = docs
+  def mixWeights(s: SparkSession, d: String): DataFrame = {
+    val per = documents(s, d)
       .groupBy("source")
       .agg(
         count(lit(1)).as("n_docs"),
@@ -844,12 +831,8 @@ object TextQueries {
     * per-doc pass is one map (hash + compare) and a source-keyed
     * partial-agg rollup — one corpus scan, no joins beyond the
     * broadcast. */
-  def epochSchedule(s: SparkSession, d: String): DataFrame =
-    epochScheduleDocs(documents(s, d))
-
-  /** [[epochSchedule]]'s core over any (doc_id, source, n_chars) frame
-    * (exposed for ScaleStress). */
-  private[graft] def epochScheduleDocs(docs: DataFrame): DataFrame = {
+  def epochSchedule(s: SparkSession, d: String): DataFrame = {
+    val docs = documents(s, d)
     val per = docs
       .groupBy("source")
       .agg(
@@ -1003,13 +986,8 @@ object TextQueries {
     * assignment + a (doc, window)-keyed bounded collect; the ranker's
     * own scale story (broadcast query terms, df/tf partial aggs, heap
     * top-k) is unchanged. */
-  def bm25Passages(s: SparkSession, d: String): DataFrame =
-    bm25PassagesDocs(s, documents(s, d))
-
-  /** [[bm25Passages]]' core over an arbitrary documents frame (exposed
-    * for the ScaleStress harness). */
-  private[graft] def bm25PassagesDocs(
-      s: SparkSession, docs: DataFrame): DataFrame = {
+  def bm25Passages(s: SparkSession, d: String): DataFrame = {
+    val docs = documents(s, d)
     import s.implicits._
     val P = PassageLen
     val S = PassageStride
@@ -1109,13 +1087,8 @@ object TextQueries {
     * aggregation then shuffles (batch_id)-keyed partial aggs only.
     * fill_micros is exact-integer-input arithmetic (sum·1e6 / n·max,
     * both ≤ 2^53), deterministic cross-engine. */
-  def lengthBatches(s: SparkSession, d: String): DataFrame =
-    lengthBatchesDocs(documents(s, d))
-
-  /** [[lengthBatches]]' core over an arbitrary documents frame (exposed
-    * for the ScaleStress harness). Requires (doc_id, n_chars). */
-  private[graft] def lengthBatchesDocs(docsIn: DataFrame): DataFrame = {
-    val docs = docsIn.select("doc_id", "n_chars")
+  def lengthBatches(s: SparkSession, d: String): DataFrame = {
+    val docs = documents(s, d).select("doc_id", "n_chars")
     val bucket =
       graft.operators.PrefixSum.adaptiveRangeBucket(docs, col("n_chars"), 10)
     graft.operators.PrefixSum
@@ -1543,13 +1516,8 @@ object TextQueries {
     * a broadcast left join + per-doc aggregation. The only corpus-sized
     * shuffles are the vocab count and the per-doc agg — both partial-agg
     * friendly. */
-  def lmScore(s: SparkSession, d: String): DataFrame =
-    lmScoreDocs(documents(s, d))
-
-  /** [[lmScore]]'s core over any (doc_id, text) frame (exposed for
-    * ScaleStress). */
-  private[graft] def lmScoreDocs(docs: DataFrame): DataFrame = {
-    val w = docs
+  def lmScore(s: SparkSession, d: String): DataFrame = {
+    val w = documents(s, d)
       .select(col("doc_id"),
         explode(split(lower(col("text")), "\\s+")).as("word"))
       .filter(col("word") =!= "")
@@ -1627,7 +1595,7 @@ object TextQueries {
     trainSequencesDocs(s, documents(s, d))
 
   /** [[trainSequences]]' core over any (doc_id, lang, text) frame
-    * (exposed for ScaleStress). */
+    * (shared with [[PipelineQueries.cleanPack]]). */
   private[graft] def trainSequencesDocs(
       s: SparkSession, docs: DataFrame): DataFrame = {
     val (placed, _) = trainSeqPlacedDocs(s, docs)

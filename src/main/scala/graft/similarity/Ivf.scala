@@ -1125,7 +1125,9 @@ object Ivf {
     * frozen-codebook encode must reuse) and the corpus code postings
     * `(vec_id, sub, code)`. These are the two stored tables a 100-TB
     * ADC deployment serves from; [[commitPqCodes]] folds arrivals into
-    * the postings under the frozen codebooks. */
+    * the postings under the frozen codebooks. The codebooks are a
+    * checkpoint and the postings a projection of one: a caller done with
+    * them frees them with `Ckpt.release` / `Ckpt.releaseInputs`. */
   def pqArtifacts(
       corpus: DataFrame,
       centroidIds: Seq[Long],
@@ -1133,7 +1135,8 @@ object Ivf {
       m: Int,
       iters: Int
   ): (DataFrame, DataFrame) = {
-    val (_, centPrev, codes) = pqTrain(corpus, centroidIds, dims, m, iters)
+    val (cent, centPrev, codes) = pqTrain(corpus, centroidIds, dims, m, iters)
+    graft.Ckpt.release(cent) // the final codebooks encode nothing here
     (centPrev, codes)
   }
 
@@ -1156,8 +1159,9 @@ object Ivf {
       iters: Int,
       subs: Seq[Int]
   ): (DataFrame, DataFrame) = {
-    val (_, centPrev, codes) =
+    val (cent, centPrev, codes) =
       pqTrain(corpus, centroidIds, dims, m, iters, Some(subs))
+    graft.Ckpt.release(cent)
     (centPrev, codes)
   }
 
@@ -1363,6 +1367,10 @@ object Ivf {
     // pqTopK exactly.
     var centPrev: DataFrame = cent
     for (_ <- 1 to iters) {
+      // The codebook two iterations back and the previous assignment
+      // are superseded by materialized checkpoints: release them now.
+      if (centPrev ne cent) graft.Ckpt.release(centPrev)
+      graft.Ckpt.release(asg)
       centPrev = cent
       // min(struct(dist, code, qe)): code is unique per (vec, sub), so
       // the struct order never reaches the array field (the lloydIntTrain
@@ -1389,6 +1397,7 @@ object Ivf {
           coalesce(col("ce_new"), col("ce")).as("ce"))
         .localCheckpoint(true)
     }
+    graft.Ckpt.release(q)
     (cent, centPrev, asg.select("vec_id", "sub", "code"))
   }
 

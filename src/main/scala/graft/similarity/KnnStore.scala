@@ -86,9 +86,7 @@ import org.apache.spark.sql.types._
   * max-ver window over ALL versions ever written — round-12 VERDICT
   * finding) and the per-fold delta files. `autoCompact = true` bounds
   * both: compact when `ver` reaches `compactMaxVersions` or the delta
-  * file count crosses `compactMaxDeltaFiles`. The fold-count stress
-  * stage (ScaleStress r13) measures per-delivery cost vs delivery
-  * index with and without the trigger.
+  * file count crosses `compactMaxDeltaFiles`.
   *
   * KnnStoreSpec pins the chain law (N folded deliveries read back the
   * from-scratch [[Ivf.knnEdges]] of corpus ∪ all arrivals) against both
@@ -530,29 +528,39 @@ class KnnStore(
     // already double, so prepDouble inside fixedCentroidsDouble is an
     // identity cast and cell numbering resolves exactly as at deploy.
     val c0 = readAsg.select("vec_id", "emb").localCheckpoint(true)
-    Similarity.ensureFunctions(c0)
-    val cent2 = Ivf.fixedCentroidsDouble(
-      c0.select(col("vec_id"), col("emb").as("embedding")), newCentroidIds)
-    val centArr2 = cent2
-      .agg(collect_list(struct(col("cell"), col("cemb"))).as("cents"))
-      .localCheckpoint(true)
-    // Independent given (c0, centArr2) — concurrent like deploy's.
-    val Seq(probes2, asg2) = graft.Par.checkpointAll(
-      () => Ivf.knnProbeFrame(c0, centArr2, nProbe)
-        .withColumn("cell", col("cell").cast("long"))
-        .localCheckpoint(true),
-      () => Ivf.knnAsgFrame(c0, centArr2)
-        .withColumn("cell", col("cell").cast("long"))
-        .localCheckpoint(true))
-    swapGeneration("refresh", probes2, asg2,
-      Ivf.knnEdgesCore(probes2, asg2, k).select("q_vec_id", "vec_id", "score"),
-      centArr2)
-    // The generation marker committed — the rebuild inputs' checkpoint
-    // blocks (survivor frame + re-derived probe/assignment) are dead,
-    // as is the SUPERSEDED quantizer; release them now (round-14
-    // VERDICT #2) instead of holding |survivors|-sized blocks for the
-    // session lifetime.
-    graft.Ckpt.release(c0, probes2, asg2)
+    var centArr2: DataFrame = null
+    var rebuilt = Seq.empty[DataFrame]
+    try {
+      Similarity.ensureFunctions(c0)
+      val cent2 = Ivf.fixedCentroidsDouble(
+        c0.select(col("vec_id"), col("emb").as("embedding")), newCentroidIds)
+      centArr2 = cent2
+        .agg(collect_list(struct(col("cell"), col("cemb"))).as("cents"))
+        .localCheckpoint(true)
+      // Independent given (c0, centArr2) — concurrent like deploy's.
+      rebuilt = graft.Par.checkpointAll(
+        () => Ivf.knnProbeFrame(c0, centArr2, nProbe)
+          .withColumn("cell", col("cell").cast("long"))
+          .localCheckpoint(true),
+        () => Ivf.knnAsgFrame(c0, centArr2)
+          .withColumn("cell", col("cell").cast("long"))
+          .localCheckpoint(true))
+      val Seq(probes2, asg2) = rebuilt
+      swapGeneration("refresh", probes2, asg2,
+        Ivf.knnEdgesCore(probes2, asg2, k).select("q_vec_id", "vec_id", "score"),
+        centArr2)
+    } catch { case e: Throwable =>
+      // Not committed: the store keeps its quantizer.
+      graft.Ckpt.release(centArr2)
+      throw e
+    } finally {
+      // Committed or not, the rebuild inputs' checkpoint blocks
+      // (survivor frame + re-derived probe/assignment) are dead; release
+      // them now (round-14 VERDICT #2) instead of holding
+      // |survivors|-sized blocks for the session lifetime.
+      graft.Ckpt.release(c0 +: rebuilt: _*)
+    }
+    // The generation marker committed — the SUPERSEDED quantizer is dead.
     if (centArr ne centArr2) graft.Ckpt.release(centArr)
     centArr = centArr2
   }
@@ -616,94 +624,103 @@ class KnnStore(
         "refreshCells: empty replacement set — nothing to retrain")
       import spark.implicits._
       val c0 = readAsg.select("vec_id", "emb").localCheckpoint(true)
-      Similarity.ensureFunctions(c0)
-      // Current centroids, unpacked driver-side (K rows).
-      val oldCents: Seq[(Long, Seq[Double])] = centArr
-        .select(explode(col("cents")).as("c"))
-        .select(col("c.cell").as("cell"), col("c.cemb").as("cemb"))
-        .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
-      val unknown = replacements.keySet -- oldCents.map(_._1).toSet
-      require(unknown.isEmpty,
-        s"refreshCells: unknown cell(s) ${unknown.mkString(", ")}")
-      // Replacement centroids must be SURVIVING stored vectors — the
-      // retrain is self-contained like the full refresh's.
-      val wantIds = replacements.values.toSeq.distinct
-      val newEmbs: Map[Long, Seq[Double]] = c0
-        .filter(col("vec_id").isin(wantIds: _*))
-        .as[(Long, Seq[Double])].collect().toMap
-      val missing = wantIds.filterNot(newEmbs.contains)
-      require(missing.isEmpty,
-        s"refreshCells: replacement centroid id(s) ${missing.mkString(", ")} " +
-          "are not surviving stored vectors")
-      val centArr2 = oldCents
-        .map { case (cell, cemb) =>
-          (cell, replacements.get(cell).map(newEmbs).getOrElse(cemb))
-        }
-        .toDF("cell", "cemb")
-        .agg(collect_list(struct(col("cell"), col("cemb"))).as("cents"))
-        .localCheckpoint(true)
-      // Independent given (c0, centArr2) — concurrent like deploy's.
-      val Seq(probes2, asg2) = graft.Par.checkpointAll(
-        () => Ivf.knnProbeFrame(c0, centArr2, nProbe)
-          .withColumn("cell", col("cell").cast("long"))
-          .localCheckpoint(true),
-        () => Ivf.knnAsgFrame(c0, centArr2)
-          .withColumn("cell", col("cell").cast("long"))
-          .localCheckpoint(true))
-      // Cells whose membership changed (≤ K values — driver-sized).
-      val movedCells: Seq[Long] = readAsg
-        .select(col("vec_id"), col("cell").as("oc"))
-        .join(asg2.select(col("vec_id"), col("cell").as("nc")), Seq("vec_id"))
-        .filter(col("oc") =!= col("nc"))
-        .select(explode(array(col("oc"), col("nc"))).as("cell"))
-        .distinct().as[Long].collect().toSeq
-      // Queries whose probe set changed — exact symmetric difference.
-      val oldP = readProbes.select(col("q_vec_id"), col("cell"))
-      val newP = probes2.select(col("q_vec_id"), col("cell"))
-      val changedProbeQs = oldP.withColumn("o", lit(1))
-        .join(newP.withColumn("n", lit(1)), Seq("q_vec_id", "cell"),
-          "full_outer")
-        .filter(col("o").isNull || col("n").isNull)
-        .select("q_vec_id")
-      val affected = changedProbeQs
-        .unionByName(
-          if (movedCells.isEmpty) changedProbeQs.limit(0)
-          else newP.filter(col("cell").isin(movedCells: _*))
-            .select("q_vec_id"))
-        .distinct()
-        .localCheckpoint(true)
-      // Regime decision BEFORE any edge work: one single-column
-      // distinct count over the (cell-partitioned) probe table vs the
-      // affected count — two independent driver scalars, concurrent.
-      var nAffected = 0L
-      var nQueries = 1L
-      graft.Par.all(
-        () => nAffected = affected.count(),
-        () => nQueries = math.max(1L,
-          oldP.select("q_vec_id").distinct().count()))
-      val edgesFace =
-        if (nAffected >= fullRebuildFraction * nQueries)
-          // Drift is (near-)uniform: carry would re-score almost
-          // everything anyway — rebuild every edge from the new
-          // probes/assignment directly (identical face, no carry
-          // bookkeeping, no max-ver window over the old edges).
-          Ivf.knnEdgesCore(probes2, asg2, k)
-            .select("q_vec_id", "vec_id", "score")
-        else {
-          val carried = currentEdges(readEdgesRaw)
-            .join(broadcast(affected), Seq("q_vec_id"), "left_anti")
-            .select("q_vec_id", "vec_id", "score")
-          val rescored = Ivf.knnEdgesCore(
-            probes2.join(broadcast(affected), Seq("q_vec_id"), "left_semi")
-              .select(probes2.columns.map(col): _*),
-            asg2, k).select("q_vec_id", "vec_id", "score")
-          carried.unionByName(rescored)
-        }
-      swapGeneration("refresh", probes2, asg2, edgesFace, centArr2)
-      graft.Ckpt.release(c0, probes2, asg2, affected)
+      var centArr2: DataFrame = null
+      var rebuilt = Seq.empty[DataFrame]
+      val result = try {
+        Similarity.ensureFunctions(c0)
+        // Current centroids, unpacked driver-side (K rows).
+        val oldCents: Seq[(Long, Seq[Double])] = centArr
+          .select(explode(col("cents")).as("c"))
+          .select(col("c.cell").as("cell"), col("c.cemb").as("cemb"))
+          .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
+        val unknown = replacements.keySet -- oldCents.map(_._1).toSet
+        require(unknown.isEmpty,
+          s"refreshCells: unknown cell(s) ${unknown.mkString(", ")}")
+        // Replacement centroids must be SURVIVING stored vectors — the
+        // retrain is self-contained like the full refresh's.
+        val wantIds = replacements.values.toSeq.distinct
+        val newEmbs: Map[Long, Seq[Double]] = c0
+          .filter(col("vec_id").isin(wantIds: _*))
+          .as[(Long, Seq[Double])].collect().toMap
+        val missing = wantIds.filterNot(newEmbs.contains)
+        require(missing.isEmpty,
+          s"refreshCells: replacement centroid id(s) ${missing.mkString(", ")} " +
+            "are not surviving stored vectors")
+        centArr2 = oldCents
+          .map { case (cell, cemb) =>
+            (cell, replacements.get(cell).map(newEmbs).getOrElse(cemb))
+          }
+          .toDF("cell", "cemb")
+          .agg(collect_list(struct(col("cell"), col("cemb"))).as("cents"))
+          .localCheckpoint(true)
+        // Independent given (c0, centArr2) — concurrent like deploy's.
+        rebuilt = graft.Par.checkpointAll(
+          () => Ivf.knnProbeFrame(c0, centArr2, nProbe)
+            .withColumn("cell", col("cell").cast("long"))
+            .localCheckpoint(true),
+          () => Ivf.knnAsgFrame(c0, centArr2)
+            .withColumn("cell", col("cell").cast("long"))
+            .localCheckpoint(true))
+        val Seq(probes2, asg2) = rebuilt
+        // Cells whose membership changed (≤ K values — driver-sized).
+        val movedCells: Seq[Long] = readAsg
+          .select(col("vec_id"), col("cell").as("oc"))
+          .join(asg2.select(col("vec_id"), col("cell").as("nc")), Seq("vec_id"))
+          .filter(col("oc") =!= col("nc"))
+          .select(explode(array(col("oc"), col("nc"))).as("cell"))
+          .distinct().as[Long].collect().toSeq
+        // Queries whose probe set changed — exact symmetric difference.
+        val oldP = readProbes.select(col("q_vec_id"), col("cell"))
+        val newP = probes2.select(col("q_vec_id"), col("cell"))
+        val changedProbeQs = oldP.withColumn("o", lit(1))
+          .join(newP.withColumn("n", lit(1)), Seq("q_vec_id", "cell"),
+            "full_outer")
+          .filter(col("o").isNull || col("n").isNull)
+          .select("q_vec_id")
+        val affected = changedProbeQs
+          .unionByName(
+            if (movedCells.isEmpty) changedProbeQs.limit(0)
+            else newP.filter(col("cell").isin(movedCells: _*))
+              .select("q_vec_id"))
+          .distinct()
+          .localCheckpoint(true)
+        rebuilt :+= affected
+        // Regime decision BEFORE any edge work: one single-column
+        // distinct count over the (cell-partitioned) probe table vs the
+        // affected count — two independent driver scalars, concurrent.
+        var nAffected = 0L
+        var nQueries = 1L
+        graft.Par.all(
+          () => nAffected = affected.count(),
+          () => nQueries = math.max(1L,
+            oldP.select("q_vec_id").distinct().count()))
+        val edgesFace =
+          if (nAffected >= fullRebuildFraction * nQueries)
+            // Drift is (near-)uniform: carry would re-score almost
+            // everything anyway — rebuild every edge from the new
+            // probes/assignment directly (identical face, no carry
+            // bookkeeping, no max-ver window over the old edges).
+            Ivf.knnEdgesCore(probes2, asg2, k)
+              .select("q_vec_id", "vec_id", "score")
+          else {
+            val carried = currentEdges(readEdgesRaw)
+              .join(broadcast(affected), Seq("q_vec_id"), "left_anti")
+              .select("q_vec_id", "vec_id", "score")
+            val rescored = Ivf.knnEdgesCore(
+              probes2.join(broadcast(affected), Seq("q_vec_id"), "left_semi")
+                .select(probes2.columns.map(col): _*),
+              asg2, k).select("q_vec_id", "vec_id", "score")
+            carried.unionByName(rescored)
+          }
+        swapGeneration("refresh", probes2, asg2, edgesFace, centArr2)
+        (nAffected, movedCells.size.toLong)
+      } catch { case e: Throwable =>
+        graft.Ckpt.release(centArr2) // not committed: keep the quantizer
+        throw e
+      } finally graft.Ckpt.release(c0 +: rebuilt: _*)
       if (centArr ne centArr2) graft.Ckpt.release(centArr)
       centArr = centArr2
-      (nAffected, movedCells.size.toLong)
+      result
     }
 }
 

@@ -3,8 +3,9 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Ad-hoc plan probe for INTERNAL builder frames (dev tool; the declared
-  * queries go through [[PlanDump]]). Each named probe builds one frame
+/** Ad-hoc plan probe for INTERNAL builder frames (dev tool; a declared
+  * query's plan is `SparkEntry.queries(name)(spark, dir).explain()`).
+  * Each named probe builds one frame
   * the optimization work needs to see the executed plan of; add probes
   * as investigations need them. Usage:
   *

@@ -368,15 +368,24 @@ class KnnStoreSpec extends SparkSuite {
     }
     val (_, oldTwin) = prep("old")
     val refreshedTwin = mk(emb)
+    // A crashed refresh releases the rebuild inputs and the new
+    // quantizer it checkpointed: no persisted RDD outlives the call.
+    def leakedBy(f: => Unit): Set[Int] = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      f
+      spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    }
     val (b1, v1) = prep("pre")
     v1.crashAt = Some("refresh-before-marker")
-    intercept[IllegalStateException](v1.refresh(centroidIds))
+    assert(leakedBy(intercept[IllegalStateException](v1.refresh(centroidIds))).isEmpty,
+      "a pre-marker refresh crash must leave no persisted RDD behind")
     val r1 = KnnStore.reopen(spark, b1, nProbe = 2, k = k)
     assert(edges(r1.directedEdges) == edges(oldTwin.directedEdges),
       "pre-marker refresh crash must serve the OLD quantizer and tables")
     val (b2, v2) = prep("post")
     v2.crashAt = Some("refresh-after-marker")
-    intercept[IllegalStateException](v2.refresh(centroidIds))
+    assert(leakedBy(intercept[IllegalStateException](v2.refresh(centroidIds))).isEmpty,
+      "a post-marker refresh crash must leave no persisted RDD behind")
     val r2 = KnnStore.reopen(spark, b2, nProbe = 2, k = k)
     assert(edges(r2.directedEdges) == edges(refreshedTwin.directedEdges),
       "post-marker refresh crash must serve the NEW quantizer and tables")

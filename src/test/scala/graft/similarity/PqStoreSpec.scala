@@ -224,16 +224,31 @@ class PqStoreSpec extends SparkSuite {
     }
     val survivors = emb.filter(col("vec_id") % 10 =!= 3)
     val (_, codes2) = Ivf.pqArtifacts(survivors, centroidIds, Dims, M, 2)
+    // A crashed or refused refresh releases the survivor frame and the
+    // new codebooks it checkpointed: no persisted RDD outlives the call.
+    def leakedBy(f: => Unit): Set[Int] = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      f
+      spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    }
     val pre = prep()
     val preFace = pre.postings.localCheckpoint(true)
     pre.crashAt = Some("refresh-before-marker")
-    intercept[IllegalStateException](pre.refresh(emb, centroidIds, 2))
+    assert(leakedBy(intercept[IllegalStateException](pre.refresh(emb, centroidIds, 2))).isEmpty,
+      "a pre-marker refresh crash must leave no persisted RDD behind")
     val r1 = PqStore.reopen(spark, pre.storeBase, Dims, M)
     assert(symDiff(r1.postings, preFace) == 0,
       "pre-marker refresh crash must serve the OLD (codebooks, postings)")
+    // An embedding source missing a survivor is refused before any commit.
+    assert(leakedBy(intercept[IllegalArgumentException](
+      r1.refresh(emb.filter(col("vec_id") =!= 0L), centroidIds, 2))).isEmpty,
+      "a refused refresh must leave no persisted RDD behind")
+    assert(symDiff(r1.postings, preFace) == 0,
+      "a refused refresh must keep serving the committed face")
     val post = prep()
     post.crashAt = Some("refresh-after-marker")
-    intercept[IllegalStateException](post.refresh(emb, centroidIds, 2))
+    assert(leakedBy(intercept[IllegalStateException](post.refresh(emb, centroidIds, 2))).isEmpty,
+      "a post-marker refresh crash must leave no persisted RDD behind")
     val r2 = PqStore.reopen(spark, post.storeBase, Dims, M)
     assert(symDiff(r2.postings, codes2) == 0,
       "post-marker refresh crash must serve the NEW (codebooks, postings)")
