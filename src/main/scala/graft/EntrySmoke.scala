@@ -1,10 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder("local[4]")
+      .config("spark.sql.shuffle.partitions", "4").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val n = df.count()

@@ -1,4 +1,4 @@
-package graft.testfs
+package graft
 
 import java.nio.file.{Files, LinkOption}
 import java.nio.file.attribute.{PosixFileAttributes, PosixFilePermission}
@@ -9,8 +9,8 @@ import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsCon
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
-/** The local `file:` filesystem the specs' Spark session runs on
-  * (`spark.hadoop.fs.file.impl` in [[graft.SparkSuite]]): Hadoop's own
+/** The local `file:` filesystem every engine session runs on
+  * (`spark.hadoop.fs.file.impl` in [[GraftSession]]): Hadoop's own
   * checksummed `LocalFileSystem`, except that permission bits are set and
   * read in-process through `java.nio`.
   *

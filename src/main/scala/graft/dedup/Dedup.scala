@@ -488,15 +488,6 @@ object Dedup {
   private def jaccardRounded: Column =
     round(col("n_inter") / (col("size_a") + col("size_b") - col("n_inter")), 6)
 
-  def jaccardVerify(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      candidates: DataFrame,
-      threshold: Double
-  ): DataFrame =
-    jaccardVerifyShingles(shingleRows(df, idCol, textCol), candidates, threshold)
-
   /** Signature aggregation over a precomputed shingle set. Each md5 digest
     * (32 hex chars) yields TWO 60-bit hashes — chars 1-15 and 16-30 — so
     * k signatures cost k/2 md5 calls per shingle (Catalyst's
@@ -516,7 +507,6 @@ object Dedup {
     // shared-digest rewrite was tried and measured SLOWER — hex strings
     // materialized per row and aggregate fusion lost; the aggregate-level
     // rewrite is the form that wins.)
-    graft.functions.MinhashSigAgg.register(sh.sparkSession)
     sh.groupBy("id")
       .agg(expr(s"graft_minhash_sig(shingle, $numHashes)").as("__sig"))
       .select(
@@ -917,7 +907,6 @@ object Dedup {
         // cardinality it will be a shuffled hash/SMJ anti-join).
         corpus.join(dropKeys, Seq(idCol), "left_anti")
       case Some(numBits) =>
-        graft.functions.Bloom.register(corpus.sparkSession)
         val filterBytes = dropKeys
           .agg(call_function("bloom_agg_sized", col(idCol), lit(numBits)))
           .head().getAs[Array[Byte]](0)
@@ -2764,7 +2753,6 @@ object Dedup {
       // Round-17: the one-buffer imperative aggregate, same rewrite as
       // [[signatureOfShingles]] (bit-identical slots; min over a multiset
       // == min over its set, so the RAW stream feeds it unchanged).
-      graft.functions.MinhashSigAgg.register(src.sparkSession)
       src.agg(expr(s"graft_minhash_sig(shingle, $numHashes)").as("__sig"))
         .select((0 until numHashes)
           .map(i => element_at(col("__sig"), i + 1).as(s"$pre$i")): _*)

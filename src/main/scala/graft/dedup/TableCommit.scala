@@ -633,16 +633,6 @@ class TableCommit(
   def deltaShingleSets: DataFrame =
     journal.readDelta("sets").select("id", "shingles")
 
-  /** The seven committed artifacts in [[Dedup.GateArtifacts]] shape. */
-  def gateArtifacts: Dedup.GateArtifacts = Dedup.GateArtifacts(
-    fingerprints = committedFingerprints,
-    bandTable = committedBands,
-    spanFps = committedSpanFps,
-    simhashBands = committedSimhashBands,
-    ngramPostings = committedNgramPostings,
-    ngramDf = committedNgramDf,
-    shingleSets = committedShingleSets)
-
   /** GC of journal garbage (crashed-op batch dirs, superseded
     * generations) — [[graft.StoreJournal.vacuum]]; committed-face
     * no-op, returns directories removed. */

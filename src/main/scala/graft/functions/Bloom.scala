@@ -82,26 +82,6 @@ object Bloom {
     val bb = java.nio.ByteBuffer.wrap(bytes)
     Array.fill(bytes.length / 8)(bb.getLong)
   }
-
-  /** Register the functions (idempotent). `bloom_agg(key)` →
-    * binary; `bloom_agg_sized(key, numBits)` → binary with an explicit
-    * power-of-two filter size (numBits must be a foldable int literal —
-    * it sizes the aggregation buffer, so it cannot vary per row);
-    * `bloom_might_contain(key, filterBytes)` → boolean. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    SessionFunctions.register(spark, "bloom_agg")(
-      exprs => BloomBuildAgg(exprs.head))
-    SessionFunctions.register(spark, "bloom_agg_sized")(
-      exprs => BloomBuildAgg(exprs.head,
-        numBits = exprs(1).eval(null) match {
-          case i: java.lang.Integer => i.intValue()
-          case l: java.lang.Long    => l.intValue()
-          case other => throw new IllegalArgumentException(
-            s"bloom_agg_sized numBits must be an int literal, got $other")
-        }))
-    SessionFunctions.register(spark, "bloom_might_contain")(
-      exprs => BloomMightContain(exprs.head, exprs(1)))
-  }
 }
 
 /** Distributed Bloom-filter build: buffer = the bit array itself; update

@@ -26,8 +26,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   *   - any null element → null; both empty → 0.0; null array → null.
   *
   * Training-data-pipeline surface (SURVEY §2 extensions): similarity
-  * search / semantic dedup scoring. Registered as SQL `graft_dot` via
-  * [[GraftExtensions]] or [[DotProduct.register]].
+  * search / semantic dedup scoring. SQL `graft_dot` in every session
+  * built with [[GraftExtensions]].
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -93,13 +93,4 @@ case class DotProduct(left: Expression, right: Expression)
       newLeft: Expression,
       newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object DotProduct {
-
-  /** Register `graft_dot(a, b)` in a session's function registry
-    * (idempotent) — same pattern as [[RollingHashMin.register]]. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    SessionFunctions.register(spark, "graft_dot")(
-      exprs => DotProduct(exprs.head, exprs(1)))
 }

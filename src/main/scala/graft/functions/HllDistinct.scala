@@ -132,10 +132,4 @@ object HllDistinct {
     if (raw <= 2.5 * M && zeros > 0) M * math.log(M.toDouble / zeros)
     else raw
   }
-
-  /** Register `hll_distinct(col)` (idempotent). The bare AggregateFunction
-    * is returned; the analyzer wraps it in an AggregateExpression. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    SessionFunctions.register(spark, "hll_distinct")(
-      exprs => HllDistinct(exprs.head))
 }

@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -136,23 +136,4 @@ case class MinhashSigAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): MinhashSigAgg =
     copy(child = newChildren.head)
-}
-
-object MinhashSigAgg {
-  /** Register `graft_minhash_sig(shingle, numHashes)` (idempotent);
-    * `numHashes` must be an integer literal. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    SessionFunctions.register(spark, "graft_minhash_sig")(
-      exprs => {
-        if (exprs.length != 2) throw new IllegalArgumentException(
-          "graft_minhash_sig(shingle, numHashes) takes 2 arguments, got " +
-            exprs.length)
-        val n = exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case Literal(v: Long, LongType) => v.toInt
-          case other => throw new IllegalArgumentException(
-            s"graft_minhash_sig: numHashes must be an integer literal, got $other")
-        }
-        MinhashSigAgg(exprs.head, n)
-      })
 }

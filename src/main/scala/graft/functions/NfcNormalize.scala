@@ -69,11 +69,3 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
-
-object NfcNormalize {
-  /** Register `nfc_normalize(text)` in a session's function registry
-    * (idempotent); mirrors [[RollingHashMin.register]]. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    SessionFunctions.register(spark, "nfc_normalize")(
-      exprs => NfcNormalize(exprs.head))
-}

@@ -22,9 +22,9 @@ import org.apache.spark.sql.types.DataType
   *
   * Unlike the object round trip it replaces, this stays inside
   * whole-stage codegen (the generated code is a plain assignment) and
-  * pays no serde. It is NOT registered as a SQL function for general
-  * use — it exists for the gate builders, which compose it via
-  * [[OptimizerFence.register]] + `expr("graft_fence(...)")`.
+  * pays no serde. It exists for the gate builders, which compose it as
+  * `expr("graft_fence(...)")`: [[GraftExtensions]] installs
+  * `graft_fence` with the engine's other session functions.
   *
   * Fence a PROJECTED column only: CheckAnalysis refuses a
   * non-deterministic expression written into a join condition or a
@@ -49,12 +49,4 @@ case class OptimizerFence(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object OptimizerFence {
-  /** Register `graft_fence(x)` in a session's function registry
-    * (idempotent); mirrors [[NfcNormalize.register]]. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    SessionFunctions.register(spark, "graft_fence")(
-      exprs => OptimizerFence(exprs.head))
 }

@@ -113,64 +113,4 @@ object RollingHashMin {
     }
     min
   }
-
-  /** Register `rolling_fingerprint(text)` in a session's function registry
-    * (idempotent). The SessionExtensions path does the same at session
-    * build time; this covers sessions built without extensions. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    SessionFunctions.register(spark, "rolling_fingerprint")(
-      exprs => RollingHashMin(exprs.head))
-}
-
-/** SparkSessionExtensions hook: `SparkSession.builder()
-  * .withExtensions(new GraftExtensions)` (or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`) makes the
-  * engine's custom functions available to plain SQL. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction(
-      (
-        new org.apache.spark.sql.catalyst.FunctionIdentifier("rolling_fingerprint"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[RollingHashMin].getName, "rolling_fingerprint"),
-        (exprs: Seq[Expression]) => RollingHashMin(exprs.head)
-      )
-    )
-    e.injectFunction(
-      (
-        new org.apache.spark.sql.catalyst.FunctionIdentifier("nfc_normalize"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[NfcNormalize].getName, "nfc_normalize"),
-        (exprs: Seq[Expression]) => NfcNormalize(exprs.head)
-      )
-    )
-    e.injectFunction(
-      (
-        new org.apache.spark.sql.catalyst.FunctionIdentifier("hll_distinct"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[HllDistinct].getName, "hll_distinct"),
-        (exprs: Seq[Expression]) => HllDistinct(exprs.head)
-      )
-    )
-    e.injectFunction(
-      (
-        new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[DotProduct].getName, "graft_dot"),
-        (exprs: Seq[Expression]) => DotProduct(exprs.head, exprs(1))
-      )
-    )
-    e.injectFunction(
-      (
-        new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_zorder"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[ZOrder].getName, "graft_zorder"),
-        (exprs: Seq[Expression]) => ZOrder(exprs.head, exprs(1))
-      )
-    )
-    // Whole-operator rewrite: window-rank-filter idiom → bounded-heap
-    // TopKPerKey (rule + the strategy that plans its logical node).
-    e.injectOptimizerRule(_ => graft.plans.TopKRewrite)
-    e.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
-  }
 }

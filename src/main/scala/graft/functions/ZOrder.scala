@@ -67,12 +67,6 @@ object ZOrder {
   def interleave(a: Long, b: Long): Long =
     spread(a) | (spread(b) << 1)
 
-  /** Register `graft_zorder(a, b)` in a session's function registry
-    * (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    SessionFunctions.register(spark, "graft_zorder")(
-      exprs => ZOrder(exprs.head, exprs(1)))
-
   /** DuckDB twin of [[spread]] over SQL expression `x` (must already be
     * BIGINT ≥ 0): the identical mask-shift chain — BIGINT casts keep
     * DuckDB's overflow-checked `<<` in 64-bit the whole way. */

@@ -51,7 +51,6 @@ object TopKPerKey {
   ): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = df.sparkSession
-    register(spark)
     val analyzed = df.queryExecution.analyzed
     val keyExprs = keys.map(c => resolve(df, c))
     val sortOrders = ordering.map { c =>
@@ -82,32 +81,22 @@ object TopKPerKey {
   private def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     GraftSqlBridge.ofRows(spark, plan)
 
-  /** Apply [[TopKRewrite]] to ONE frame's analyzed plan (strategy
-    * registered as a side effect). The deterministic, session-state-free
-    * face of the optimizer rule — query surfaces use this; SQL sessions
-    * get the same rule globally via `GraftExtensions` /
-    * [[registerRewrite]]. */
-  def viaRewrite(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    register(spark)
-    GraftSqlBridge.ofRows(spark, TopKRewrite(df.queryExecution.analyzed))
-  }
+  /** Apply [[TopKRewrite]] to ONE frame's analyzed plan. The
+    * deterministic, session-state-free face of the optimizer rule — query
+    * surfaces use this; the rewritten frame plans through the
+    * [[TopKPerKeyStrategy]] every session built with
+    * `graft.functions.GraftExtensions` carries. A session opts into the
+    * rule for all of its queries with [[registerRewrite]]. */
+  def viaRewrite(df: DataFrame): DataFrame =
+    GraftSqlBridge.ofRows(df.sparkSession, TopKRewrite(df.queryExecution.analyzed))
 
   /** Inject [[TopKRewrite]] session-wide: every subsequent query in the
     * session with the window-rank-filter idiom plans through the heap
     * operator. */
   def registerRewrite(spark: SparkSession): Unit = synchronized {
-    register(spark)
     if (!spark.experimental.extraOptimizations.contains(TopKRewrite))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ TopKRewrite
-  }
-
-  /** Idempotently inject the planner strategy into this session. */
-  def register(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
   }
 }
 

@@ -20,9 +20,10 @@ import org.apache.spark.sql.types.IntegerType
   * k·keys·partitions and never sorts more than k rows per key
   * (O(n log k)). Spark's own `InferWindowGroupLimit` mitigates the same
   * pattern but keeps the sort-based Window; this rule replaces the whole
-  * operator — the `SparkSessionExtensions.injectOptimizerRule` face of the
-  * engine (see `GraftExtensions`), also applicable deterministically to a
-  * single frame via [[TopKPerKey.viaRewrite]].
+  * operator. It is opt-in: one frame at a time, deterministically, via
+  * [[TopKPerKey.viaRewrite]], or every query of a session via
+  * [[TopKPerKey.registerRewrite]]. `GraftExtensions` installs only the
+  * strategy that plans the operator, never this rule.
   *
   * Fires only when the rewrite is provably output-identical:
   *   - exactly one window expression, a plain `row_number()` (rank/

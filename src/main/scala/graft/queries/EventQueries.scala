@@ -432,7 +432,6 @@ object EventQueries {
     * context. The estimate is bit-deterministic (md5 registers,
     * integer-exact harmonic sum), so the DuckDB oracle reproduces it. */
   def hllDistinct(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HllDistinct.register(s)
     events(s, d)
       .groupBy("event_type")
       .agg(
@@ -527,7 +526,6 @@ object EventQueries {
     * write, making parquet row-group min/max selective for box
     * predicates on BOTH dimensions. */
   def zorderStats(s: SparkSession, d: String): DataFrame = {
-    graft.functions.ZOrder.register(s)
     events(s, d)
       .filter(col("event_type").isNotNull)
       .withColumn(

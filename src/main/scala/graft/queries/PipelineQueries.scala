@@ -1823,7 +1823,6 @@ object PipelineQueries {
     * list_dot_product bit-for-bit), so the gate adds no new
     * cross-engine arithmetic. Row-local map work; nothing shuffles. */
   def embeddingQuality(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     val planted = s.sql(
       s"""SELECT CAST($EmbBadZeroId AS BIGINT) AS vec_id,
          |  transform(sequence(1, $Dims), x -> CAST(0.0 AS FLOAT)) AS embedding
@@ -1841,8 +1840,7 @@ object PipelineQueries {
   }
 
   /** The row-local battery core over any (vec_id, embedding) frame —
-    * shared by the batch face and the streaming ingest gate (the
-    * caller registers `graft_dot`). */
+    * shared by the batch face and the streaming ingest gate. */
   private[graft] def embeddingBattery(df: DataFrame): DataFrame =
     df
       .withColumn("emb", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
@@ -2729,7 +2727,6 @@ object PipelineQueries {
 
   /** Winnowing fingerprint via the custom codegen Expression. */
   def rollingFingerprint(s: SparkSession, d: String): DataFrame = {
-    graft.functions.RollingHashMin.register(s)
     documents(s, d)
       .filter(length(col("text")) >= graft.functions.RollingHashMin.DefaultWindow)
       .selectExpr("doc_id", "rolling_fingerprint(text) AS fingerprint")
@@ -2769,7 +2766,6 @@ object PipelineQueries {
     * another. The md5 of the normalized text pins the exact composed
     * bytes against DuckDB's utf8proc `nfc_normalize`. */
   def unicodeNfc(s: SparkSession, d: String): DataFrame = {
-    graft.functions.NfcNormalize.register(s)
     documents(s, d)
       .withColumn("t", concat(col("text"), lit(NfcSuffix)))
       .selectExpr("doc_id", "length(t) AS len_raw",
@@ -7153,7 +7149,6 @@ object PipelineQueries {
     * join is doc-keyed; the score is row-local `graft_dot` arithmetic.
     * No stage touches corpus × corpus. */
   def imgtextAlign(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     alignScores(
       imageFeatureFrame(
         graft.multimodal.Multimodal.mediaFromDocuments(s, d)),
@@ -7194,7 +7189,7 @@ object PipelineQueries {
   /** Row-local alignment scoring over (doc_id, ih) ⋈ (doc_id, tf):
     * integer-micros cosine + keep verdict. Works identically on a batch
     * ifeat frame and a streaming one (pure equi-join + per-row
-    * expressions — append-mode safe). Callers register `graft_dot`. */
+    * expressions — append-mode safe). */
   private[graft] def alignScores(
       ifeat: DataFrame, tfeat: DataFrame): DataFrame =
     ifeat.join(tfeat, Seq("doc_id"))
@@ -7300,7 +7295,6 @@ object PipelineQueries {
     * clip-keyed groupBy; the score join is doc-keyed with row-local
     * `graft_dot` arithmetic. No corpus × corpus stage. */
   def audiotextAlign(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     alignScores(audioEnergyFrame(s, d), textProjection(embeddings(s, d)))
       .orderBy("doc_id")
   }
@@ -7364,7 +7358,6 @@ object PipelineQueries {
     * one scan routes the same projected vectors through the IVF family
     * instead. */
   def crossmodalTopK(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     val index = imageFeatureFrame(
         graft.multimodal.Multimodal.mediaFromDocuments(s, d))
       .select(col("doc_id").as("vec_id"), col("ih").as("emb"))
@@ -7416,7 +7409,6 @@ object PipelineQueries {
     * [[textProjection]] verbatim, so baseline and scale path search the
     * identical space. */
   def crossmodalIvf(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     val index = imageFeatureFrame(
         graft.multimodal.Multimodal.mediaFromDocuments(s, d))
       .select(col("doc_id").as("vec_id"), col("ih").as("embedding"))

@@ -219,7 +219,6 @@ object Relational {
     * filter is pure pruning (same contract as Spark's own
     * InjectRuntimeFilter, surfaced as an explicit operator). */
   def bloomPrune(s: SparkSession, d: String): DataFrame = {
-    graft.functions.Bloom.register(s)
     val dim = supplier(s, d)
       .join(broadcast(nation(s, d)), col("s_nationkey") === col("n_nationkey"))
       .join(broadcast(region(s, d)), col("n_regionkey") === col("r_regionkey"))

@@ -632,7 +632,6 @@ object StreamingQueries {
       .map(r => HoldLit(
         r.getLong(0), r.getLong(1), r.getSeq[Double](2), r.getDouble(3)))
       .toSeq
-    graft.functions.DotProduct.register(s)
     val probedSql =
       s"transform(slice(array_sort(${ivf.cellStructsDblSql("emb")}), " +
         s"1, $SemDecontamNProbe), p -> p.cell)"
@@ -965,7 +964,6 @@ object StreamingQueries {
     * batch battery over the real table (the planted broken rows stay on
     * the batch face, where every verdict branch is oracle-exercised). */
   def streamEmbeddingQuality(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     val gated = PipelineQueries.embeddingBattery(
       StreamingOps.readEmbeddings(s, embeddingsStreamDir(d))
         .select("vec_id", "embedding"))
@@ -1037,7 +1035,6 @@ object StreamingQueries {
     * [[PipelineQueries.alignScores]], so the two cannot drift. Shares
     * the batch oracle verbatim. */
   def streamAlign(s: SparkSession, d: String): DataFrame = {
-    graft.functions.DotProduct.register(s)
     val arrivals = StreamingOps.readDocuments(s, docsStreamDir(d))
     val ifeat = PipelineQueries.imageFeatureFrame(
       graft.multimodal.Multimodal.mediaFromDocs(arrivals))

@@ -758,18 +758,13 @@ object TextQueries {
        |WHERE rnk <= $QuotaPerSource
        |ORDER BY source, rnk""".stripMargin
 
-  /** Temperature exponent for [[mixWeights]] is pinned at α = 1/2:
-    * `sqrt` is correctly rounded under IEEE 754 in BOTH engines (a
-    * general `pow(x, α)` is not), so the weights are bit-deterministic
-    * cross-engine with no tolerance games. */
-  val MixTemperature = 0.5
-
   /** Temperature-based domain mixing weights — the sampling-mix step of
     * every multi-domain training run (GPT-3/LLaMA-style): domain d is
     * sampled ∝ n_d^α with α < 1, upweighting small domains relative to
-    * raw token share. Output per source: doc/token counts, the
-    * unnormalized score in exact integer micros, and the normalized
-    * sampling weight.
+    * raw token share. α is pinned at 1/2: `sqrt` is correctly rounded
+    * under IEEE 754 in both engines, a general `pow(x, α)` is not.
+    * Output per source: doc/token counts, the unnormalized score in
+    * exact integer micros, and the normalized sampling weight.
     *
     * Determinism discipline: tokens are the engine's canonical integer
     * estimator (chars div 4 — the reference's documented fallback,
@@ -1017,7 +1012,7 @@ object TextQueries {
               .cast("long"))).as("doc_id"),
         expr("array_join(transform(ts, t -> t.tok), ' ')").as("text"))
     bm25QueriesDf(
-      s, passages, Bm25QueryFixture.toDF("query_id", "qtext"), RrfTopK)
+      passages, Bm25QueryFixture.toDF("query_id", "qtext"), RrfTopK)
   }
 
   def bm25PassagesOracle: String = {
@@ -1195,10 +1190,8 @@ object TextQueries {
     * (one row per doc) and the query-term posting rows. The posting
     * checkpoint is OCCURRENCE-sized — one row per occurrence of any
     * query term corpus-wide, not |Q|-sized — so for frequent terms at
-    * 100 TB it is a large executor-disk write; [[Bm25CheckpointConf]]
-    * trades it back for a third text scan (tf and df each re-explode),
-    * same flag discipline as [[TrainSeqCheckpointConf]]. Two text scans
-    * total by default, everything downstream replays bounded frames.
+    * 100 TB it is a large executor-disk write, bought back as two text
+    * scans in total; everything downstream replays bounded frames.
     * Corpus stats (N, avgdl) broadcast as a 1-row frame. Per-(doc,term)
     * scores are rounded to integer MICROS before the final per-doc sum,
     * so the double sum is order-insensitive and the result hash-stable
@@ -1215,11 +1208,7 @@ object TextQueries {
     val stats = dl.agg(
       count(lit(1)).as("n"),
       avg(col("dl").cast("double")).as("avgdl"))
-    val qwRaw = w.filter(col("word").isin(BM25Terms: _*))
-    val qw =
-      if (s.conf.get(Bm25CheckpointConf, "true").toBoolean)
-        qwRaw.localCheckpoint(true)
-      else qwRaw
+    val qw = w.filter(col("word").isin(BM25Terms: _*)).localCheckpoint(true)
     val tf = qw.groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
     val df = qw.groupBy("word").agg(countDistinct("doc_id").as("df"))
     tf.join(df, Seq("word"))
@@ -1244,10 +1233,6 @@ object TextQueries {
   val BM25K1 = 1.2
   val BM25B = 0.75
 
-  /** Session conf gating [[bm25]]/[[bm25Queries]]' query-term posting
-    * checkpoint (default true — see the scale-shape note on [[bm25]]). */
-  val Bm25CheckpointConf = "spark.graft.bm25.checkpointPostings"
-
   /** Fixture query table for [[bm25Queries]]' oracle row: multi-term,
     * duplicate-term (dedup'd by the DISTINCT), and fully-OOV (drops out
     * of the inner joins on both engines) queries. */
@@ -1268,7 +1253,7 @@ object TextQueries {
     * Scale shape: one text scan feeds the checkpointed doc lengths, one
     * more the query-term postings — the union of ALL queries' terms
     * broadcast-joined into the explode so only matching occurrences
-    * survive the scan (checkpoint conf-gated, [[Bm25CheckpointConf]]).
+    * survive the scan (checkpointed, as in [[bm25]]).
     * tf/df aggregate the postings once; the fan-out to (query, doc)
     * pairs is a broadcast join against the exploded query-term table
     * (MB-sized while queries are; Catalyst picks a shuffle join past
@@ -1282,14 +1267,13 @@ object TextQueries {
       queries: Seq[(Long, String)] = Bm25QueryFixture,
       k: Int = 10): DataFrame = {
     import s.implicits._
-    bm25QueriesDf(s, documents(s, d), queries.toDF("query_id", "qtext"), k)
+    bm25QueriesDf(documents(s, d), queries.toDF("query_id", "qtext"), k)
   }
 
   /** [[bm25Queries]]' core over arbitrary (doc_id, text) corpus and
     * (query_id, qtext) query FRAMES — the form a real user calls with a
     * query table read from storage. */
   def bm25QueriesDf(
-      s: SparkSession,
       corpus: DataFrame,
       queries: DataFrame,
       k: Int = 10): DataFrame = {
@@ -1309,11 +1293,8 @@ object TextQueries {
     val stats = dl.agg(
       count(lit(1)).as("n"),
       avg(col("dl").cast("double")).as("avgdl"))
-    val qwRaw = w.join(broadcast(qt.select("word").distinct()), Seq("word"))
-    val qw =
-      if (s.conf.get(Bm25CheckpointConf, "true").toBoolean)
-        qwRaw.localCheckpoint(true)
-      else qwRaw
+    val qw = w.join(broadcast(qt.select("word").distinct()), Seq("word"))
+      .localCheckpoint(true)
     val tf = qw.groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
     val df = qw.groupBy("word").agg(countDistinct("doc_id").as("df"))
     val per = tf.join(df, Seq("word"))
@@ -1403,7 +1384,7 @@ object TextQueries {
   def hybridRrf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val lex = bm25QueriesDf(
-      s, documents(s, d), Bm25QueryFixture.toDF("query_id", "qtext"), RrfTopK)
+      documents(s, d), Bm25QueryFixture.toDF("query_id", "qtext"), RrfTopK)
       .select(col("query_id"), col("doc_id"), col("rnk").as("rnk_lex"))
     val emb = Tables.embeddings(s, d)
     val qids = Bm25QueryFixture.map(_._1)
@@ -1559,18 +1540,6 @@ object TextQueries {
     * would give hashed ids one bucket per doc and explode the stitch. */
   val TrainSeqBucketBits = 12
 
-  /** Session conf gating [[trainSequences]]' token-stream checkpoint
-    * (default true). The checkpoint trades ONE tokenizing scan plus a
-    * token-stream-sized executor-disk write (≈ bytes(text) × 2: per
-    * token an 8-byte doc_id, an 8-byte pos, the token bytes, and the
-    * lang code — measured 1.9× the parquet text column at sf0.1)
-    * against THREE full tokenizing scans of the corpus (per-doc counts,
-    * vocabulary, id-encode). At bench scale the checkpoint wins
-    * outright; at 100 TB the write is corpus-sized, so the re-scan
-    * alternative is one flag away rather than a rewrite. Both plans are
-    * pinned equal-output in PlanSpec. */
-  val TrainSeqCheckpointConf = "spark.graft.trainSequences.checkpointTokens"
-
   /** Contiguous training-sequence assembly — the LAST step of a training
     * data pipeline: per language, documents are tokenized against the
     * broadcast top-[[VocabSize]] dictionary (unk = −1), terminated with
@@ -1621,18 +1590,16 @@ object TextQueries {
     // keeps zero-token documents as a null row (they still need an EOS
     // and an offset). The eager localCheckpoint materializes the token
     // stream once and every downstream branch reads it (PlanSpec pins:
-    // no parquet rescan); [[TrainSeqCheckpointConf]]=false trades it
-    // back for three scans when a corpus-sized executor-disk write is
-    // the scarcer resource.
-    val tokRaw = docs.select(
+    // no parquet rescan). It trades one tokenizing scan plus a
+    // token-stream-sized executor-disk write (measured 1.9× the parquet
+    // text column at sf0.1) against three full tokenizing scans (per-doc
+    // counts, vocabulary, id-encode).
+    val tokAll = docs.select(
       col("doc_id"), col("lang"),
       posexplode_outer(
         regexp_extract_all(col("text"), lit(BpePattern), lit(0)))
         .as(Seq("pos", "tok")))
-    val tokAll =
-      if (s.conf.get(TrainSeqCheckpointConf, "true").toBoolean)
-        tokRaw.localCheckpoint(true)
-      else tokRaw
+      .localCheckpoint(true)
     // count(tok) skips the null of an empty doc → n = 0 for it. One
     // small row per doc, materialized because FOUR consumers read it
     // (EOS rows, the offset cumsum's windows + totals, the per-lang

@@ -105,7 +105,6 @@ object Ivf {
       corpus: DataFrame,
       centroidIds: Seq[Long]
   ): (DataFrame, DataFrame) = {
-    Similarity.ensureFunctions(corpus)
     val dot = Similarity.dotSql _
     val c0 = corpus.select(
       col("vec_id"),
@@ -162,7 +161,6 @@ object Ivf {
       k: Int,
       excludeSelf: Boolean = true
   ): DataFrame = {
-    Similarity.ensureFunctions(queries)
     val dot = Similarity.dotSql _
     val probes = nearestCellsIn(
       cent,
@@ -201,7 +199,6 @@ object Ivf {
       centroidIds: Seq[Long],
       threshold: Double
   ): DataFrame = {
-    Similarity.ensureFunctions(corpus)
     val dot = Similarity.dotSql _
     val c0 = corpus.select(
       col("vec_id"),
@@ -274,7 +271,6 @@ object Ivf {
       centroidIds: Seq[Long],
       threshold: Double
   ): DataFrame = {
-    Similarity.ensureFunctions(corpus)
     val dot = Similarity.dotSql _
     def prep(df: DataFrame) = df.select(
       col("vec_id"),
@@ -338,7 +334,6 @@ object Ivf {
       // discipline; this call site was missed then and PlanSpec's
       // no-vec_id-shuffle fold pin caught it).
       spread: Boolean = true): DataFrame = {
-    Similarity.ensureFunctions(src)
     val centArr = cent.agg(
       collect_list(struct(col("cell"), col("cemb"))).as("cents"))
     prepDouble(src, spread = spread)
@@ -413,7 +408,6 @@ object Ivf {
       cent: DataFrame,
       threshold: Double
   ): DataFrame = {
-    Similarity.ensureFunctions(corpus)
     val dot = Similarity.dotSql _
     val centArr = cent.agg(
       collect_list(struct(col("cell"), col("cemb"))).as("cents"))
@@ -498,7 +492,6 @@ object Ivf {
       k: Int
   ): DataFrame = {
     require(nProbe >= 1, s"need nProbe >= 1, got $nProbe")
-    Similarity.ensureFunctions(corpus)
     val cent = fixedCentroidsDouble(corpus, centroidIds)
     val centArr = cent.agg(
       collect_list(struct(col("cell"), col("cemb"))).as("cents"))
@@ -577,7 +570,6 @@ object Ivf {
       k: Int
   ): KnnIndex = {
     require(nProbe >= 1, s"need nProbe >= 1, got $nProbe")
-    Similarity.ensureFunctions(corpus)
     val cent = fixedCentroidsDouble(corpus, centroidIds)
     val centArr = cent.agg(
       collect_list(struct(col("cell"), col("cemb"))).as("cents"))
@@ -599,7 +591,6 @@ object Ivf {
     * arrivals and the stored probe rows that hit an arrival cell;
     * everything else is kept verbatim by id anti-join. */
   def knnIndexFold(index: KnnIndex, batch: DataFrame): KnnIndex = {
-    Similarity.ensureFunctions(batch)
     val b0 = prepDouble(batch, spread = false)
     val batchProbes =
       knnProbeFrame(b0, index.centArr, index.nProbe).localCheckpoint(true)
@@ -729,7 +720,6 @@ object Ivf {
     * the K-row table to every downstream consumer. */
   def fixedCentroidsDouble(
       corpus: DataFrame, centroidIds: Seq[Long]): DataFrame = {
-    Similarity.ensureFunctions(corpus)
     val c0 = prepDouble(corpus)
     val cellOf = centroidIds.sorted.zipWithIndex
       .map { case (cid, i) => (cid, i.toLong) }
@@ -764,7 +754,6 @@ object Ivf {
       nProbe: Int
   ): DataFrame = {
     require(nProbe >= 1, s"need nProbe >= 1, got $nProbe")
-    Similarity.ensureFunctions(corpus)
     val dot = Similarity.dotSql _
     val c0 = prepDouble(corpus)
     val h0 = prepDouble(holdout)
@@ -803,7 +792,6 @@ object Ivf {
     * cell, h_emb, h_nrm) against the frozen centroid table. */
   def holdoutAssignments(
       holdout: DataFrame, cent: DataFrame): DataFrame = {
-    Similarity.ensureFunctions(holdout)
     val dot = Similarity.dotSql _
     val centArr = cent.agg(
       collect_list(struct(col("cell"), col("cemb"))).as("cents"))
@@ -969,7 +957,6 @@ object Ivf {
       nProbe: Int,
       k: Int
   ): DataFrame = {
-    Similarity.ensureFunctions(corpus)
     val dot = Similarity.dotSql _
     val (cent, asg) = lloydIntTrain(corpus, centroidIds, iters)
     val c = corpus.select(
@@ -1023,7 +1010,6 @@ object Ivf {
       nProbe: Int
   ): DataFrame = {
     import spark.implicits._
-    graft.functions.DotProduct.register(spark)
     val dot = Similarity.dotSql _
     // K rows, driver-held by construction (MLlib cluster centers).
     val centDf = index.centroids.toSeq.toDF("cell", "cemb")
@@ -1632,7 +1618,6 @@ object Ivf {
       nProbe: Int,
       kNeg: Int
   ): DataFrame = {
-    Similarity.ensureFunctions(corpus)
     val dot = Similarity.dotSql _
     val (cent, asg) = lloydIntTrain(corpus, centroidIds, iters)
     val base = corpus.select(
@@ -1703,7 +1688,6 @@ object Ivf {
       nProbe: Int,
       k: Int
   ): DataFrame = {
-    Similarity.ensureFunctions(corpus)
     val dot = Similarity.dotSql _
     val (cent, asg) = lloydIntTrain(corpus, centroidIds, iters)
     val base = corpus.select(

@@ -168,7 +168,6 @@ class KnnStore(
   private def readAsg: DataFrame =
     journal.readAll("asg").join(tomb, Seq("vec_id"), "left_anti")
   private def readEdgesRaw: DataFrame = journal.readAll("edges")
-  private[similarity] def debugRawEdges: DataFrame = readEdgesRaw
 
   /** Each surviving query's rows under its highest version, with
     * tombstoned MEMBERS erased — exact because a query holding a
@@ -196,7 +195,6 @@ class KnnStore(
   ): KnnStore = {
     journal.requireWritable()
     require(nProbe >= 1, s"need nProbe >= 1, got $nProbe")
-    Similarity.ensureFunctions(corpus)
     val cent = Ivf.fixedCentroidsDouble(corpus, centroidIds)
     centArr = cent
       .agg(collect_list(struct(col("cell"), col("cemb"))).as("cents"))
@@ -241,7 +239,6 @@ class KnnStore(
     * rename); every job is batch-sized or a partition-pruned read. */
   def foldBatch(batch: DataFrame, batchId: Long): Unit = synchronized {
     if (journal.seen("fold", batchId)) return
-    Similarity.ensureFunctions(batch)
     val b0 = Ivf.prepDouble(batch, spread = false).localCheckpoint(true)
     if (b0.isEmpty) {
       journal.noteSeen("fold", batchId); graft.Ckpt.release(b0); return
@@ -531,7 +528,6 @@ class KnnStore(
     var centArr2: DataFrame = null
     var rebuilt = Seq.empty[DataFrame]
     try {
-      Similarity.ensureFunctions(c0)
       val cent2 = Ivf.fixedCentroidsDouble(
         c0.select(col("vec_id"), col("emb").as("embedding")), newCentroidIds)
       centArr2 = cent2
@@ -627,7 +623,6 @@ class KnnStore(
       var centArr2: DataFrame = null
       var rebuilt = Seq.empty[DataFrame]
       val result = try {
-        Similarity.ensureFunctions(c0)
         // Current centroids, unpacked driver-side (K rows).
         val oldCents: Seq[(Long, Seq[Double])] = centArr
           .select(explode(col("cents")).as("c"))

@@ -31,15 +31,10 @@ object Similarity {
     * bit-identical (same left-to-right accumulation) to the HOF form
     * `aggregate(zip_with(a, b, (x,y) -> x*y), 0.0, (acc,v) -> acc+v)` it
     * replaced, but fused into whole-stage codegen instead of interpreted
-    * lambda dispatch (HOFs are CodegenFallback). Callers must ensure
-    * [[ensureFunctions]] ran on the session first. */
+    * lambda dispatch (HOFs are CodegenFallback). It resolves in every
+    * session built with [[graft.functions.GraftExtensions]]. */
   def dotSql(a: String, b: String): String =
     s"graft_dot($a, $b)"
-
-  /** Idempotently register the custom scoring functions in the frame's
-    * session (sessions built via `GraftExtensions` already have them). */
-  private[similarity] def ensureFunctions(df: DataFrame): Unit =
-    graft.functions.DotProduct.register(df.sparkSession)
 
   private def toDoubleSql(c: String): String =
     s"transform($c, x -> CAST(x AS DOUBLE))"
@@ -52,7 +47,6 @@ object Similarity {
     * operator): the embedding arrays are projected away BEFORE ranking,
     * so the heap/shuffle carries (q_vec_id, vec_id, score) triples only. */
   def cosineTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    ensureFunctions(corpus)
     // The corpus side of the broadcast nested loop carries |corpus| ×
     // |queries| dot products — spread it to core count first (round-16,
     // guide §2.5: the fixture embeddings file is one row group, so the
@@ -105,7 +99,6 @@ object Similarity {
     }
 
   def crossTopK(index: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    ensureFunctions(index)
     val c = spreadCorpus(index.select(col("vec_id"), col("emb")))
       .withColumn("nrm", expr(s"sqrt(${dotSql("emb", "emb")})"))
     val q = queries.select(
@@ -151,7 +144,6 @@ object Similarity {
     * probe cells first, filter labels inside the cell. */
   def hardNegatives(corpus: DataFrame, queries: DataFrame, k: Int)
       : DataFrame = {
-    ensureFunctions(corpus)
     val c = spreadCorpus(corpus.select(
       col("vec_id"),
       col("label"),
@@ -197,7 +189,6 @@ object Similarity {
     * Output: (q_vec_id, rnk, vec_id, score_q8) — cosine computed entirely
     * from the quantized dots. */
   def cosineTopKQ8(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    ensureFunctions(corpus)
     def prep(df: DataFrame, idAs: String, qAs: String, nrmAs: String) =
       df.select(col("vec_id").as(idAs),
           expr(toDoubleSql("embedding")).as("emb"))
@@ -254,7 +245,6 @@ object Similarity {
       dims: Int,
       nBits: Int = 4
   ): DataFrame = {
-    ensureFunctions(corpus)
     val bucket = lshBucketSql("embedding", dims, nBits)
     val v = spreadCorpus(corpus.select(
       col("vec_id"),
@@ -285,7 +275,6 @@ object Similarity {
       dims: Int,
       nBits: Int = 8
   ): DataFrame = {
-    ensureFunctions(corpus)
     val bucket = lshBucketSql("embedding", dims, nBits)
     val c = spreadCorpus(corpus.select(
       col("vec_id"),
@@ -330,7 +319,6 @@ object Similarity {
       candidates: Int
   ): DataFrame = {
     require(candidates >= k, s"candidates $candidates < k $k")
-    ensureFunctions(corpus)
     val c = spreadCorpus(corpus.select(
       col("vec_id"),
       expr(toDoubleSql("embedding")).as("emb")))

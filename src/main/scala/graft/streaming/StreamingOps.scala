@@ -401,10 +401,8 @@ object StreamingOps {
     * expensive projection evaluates once, after the spread — and unlike
     * the object round trip it stays inside whole-stage codegen and pays
     * no per-row serde. */
-  private def fence(df: DataFrame, inner: String, as: String): DataFrame = {
-    graft.functions.OptimizerFence.register(df.sparkSession)
+  private def fence(df: DataFrame, inner: String, as: String): DataFrame =
     df.withColumn(as, expr(s"graft_fence($inner)")).drop(inner)
-  }
 
   /** Shared verify stage of the shingle-based ingest gates
     * ([[nearDupGateStream]], [[ngramGateStream]]): candidate pairs

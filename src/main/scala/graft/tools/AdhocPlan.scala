@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc plan probe for INTERNAL builder frames (dev tool; a declared
@@ -18,12 +17,9 @@ object AdhocPlan {
       if (args.length > 1) args(1)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = graft.GraftSession.builder(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -40,10 +36,8 @@ object AdhocPlan {
       }
       sh.groupBy("id").agg(aggs.head, aggs.tail: _*)
     }
-    def newForm(sh: org.apache.spark.sql.DataFrame, h: Int) = {
-      graft.functions.MinhashSigAgg.register(spark)
+    def newForm(sh: org.apache.spark.sql.DataFrame, h: Int) =
       sh.groupBy("id").agg(expr(s"graft_minhash_sig(shingle, $h)").as("sig"))
-    }
     val frame = args(0) match {
       case "minhashAggOld" => oldForm(synthShingles, 32)
       case "minhashAggNew" => newForm(synthShingles, 32)

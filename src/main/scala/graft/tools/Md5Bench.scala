@@ -1,11 +1,9 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 object Md5Bench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]")
+      .config("spark.sql.shuffle.partitions", "32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def slice60(c: org.apache.spark.sql.Column, part: Int) =
       conv(substring(md5(c), 1 + 15 * part, 15), 16, 10).cast("long")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off generator for the frozen BPE merges tables committed in
   * [[graft.textanalysis.Bpe]] (provenance: the constants are pasted from
   * this tool's output, and BpeSpec re-trains to pin them). Usage:
@@ -19,10 +17,8 @@ object TrainBpe {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val nMerges = if (args.length > 1) args(1).toInt else 512
     val hex = args.length > 2 && args(2) == "hex"
-    val spark = SparkSession.builder()
-      .master("local[8]")
+    val spark = graft.GraftSession.builder("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = graft.queries.Tables.documents(spark, sfDir)

@@ -23,7 +23,6 @@ class BloomSpec extends SparkSuite {
 
   test("distributed agg build equals local build; probe works via codegen") {
     import spark.implicits._
-    Bloom.register(spark)
     val keys = (1L to 500L).map(_ * 131L)
     // Build across 4 partitions — exercises update + partial merge.
     val built = keys.toDF("k").repartition(4)
@@ -44,7 +43,6 @@ class BloomSpec extends SparkSuite {
 
   test("null keys: agg skips, probe yields null") {
     import spark.implicits._
-    Bloom.register(spark)
     val built = Seq[Option[Long]](Some(42L), None).toDF("k")
       .agg(call_function("bloom_agg", col("k")))
       .head().getAs[Array[Byte]](0)

@@ -11,7 +11,6 @@ class DotProductSpec extends SparkSuite {
     "aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
 
   test("matches the HOF fold bit-for-bit on random arrays") {
-    DotProduct.register(spark)
     val rnd = new scala.util.Random(42)
     val rows = (1 to 200).map { _ =>
       val n = rnd.nextInt(16) + 1
@@ -28,7 +27,6 @@ class DotProductSpec extends SparkSuite {
   }
 
   test("null semantics match zip_with padding: length mismatch and null elements") {
-    DotProduct.register(spark)
     val df = Seq(
       (Array(1.0, 2.0), Array(3.0)),          // mismatched lengths
       (Array.empty[Double], Array.empty[Double]) // both empty
@@ -51,7 +49,6 @@ class DotProductSpec extends SparkSuite {
   }
 
   test("participates in whole-stage codegen (no CodegenFallback in the scoring stage)") {
-    DotProduct.register(spark)
     // Non-constant, codegen-friendly input: literals constant-fold to a
     // LocalTableScan, and HOFs like transform() are CodegenFallback (the
     // very thing DotProduct avoids) — either would break the span.
@@ -71,7 +68,6 @@ class DotProductSpec extends SparkSuite {
   }
 
   test("rejects non-double-array inputs at analysis") {
-    DotProduct.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT graft_dot(array('x'), array('y'))").collect()
     }

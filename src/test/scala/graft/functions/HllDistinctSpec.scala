@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 class HllDistinctSpec extends SparkSuite {
 
   test("estimate lands within the m=64 error envelope on real data") {
-    HllDistinct.register(spark)
     import spark.implicits._
     val df = spark.range(0, 5000).select((col("id") % 1337).as("v"))
     val est = df.agg(expr("hll_distinct(v)")).head().getDouble(0)
@@ -17,7 +16,6 @@ class HllDistinctSpec extends SparkSuite {
   }
 
   test("estimate is identical across partitioning (merge-safe)") {
-    HllDistinct.register(spark)
     import spark.implicits._
     val df = spark.range(0, 2000).select((col("id") % 700).as("v"))
     val one = df.repartition(1).agg(expr("hll_distinct(v)")).head().getDouble(0)

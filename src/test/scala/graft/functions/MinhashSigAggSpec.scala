@@ -16,7 +16,6 @@ class MinhashSigAggSpec extends SparkSuite {
     conv(substring(md5(c), 1 + 15 * part, 15), 16, 10).cast("long")
 
   test("aggregate slots equal the min(md5Slice60(...)) expression form") {
-    MinhashSigAgg.register(spark)
     val docs = spark.read.parquet(s"$d/documents.parquet")
     val sh = graft.dedup.Dedup.shingleRows(docs, "doc_id", "text")
     val h = 8
@@ -44,7 +43,6 @@ class MinhashSigAggSpec extends SparkSuite {
   }
 
   test("odd slot count and the empty-input null contract") {
-    MinhashSigAgg.register(spark)
     import spark.implicits._
     // Odd numHashes: the last digest contributes only its part-0 slice.
     val one = Seq(42L).toDF("shingle")
@@ -67,7 +65,6 @@ class MinhashSigAggSpec extends SparkSuite {
   }
 
   test("a call with the wrong arity names the two-argument signature") {
-    MinhashSigAgg.register(spark)
     import spark.implicits._
     val e = intercept[Exception](Seq(42L).toDF("shingle")
       .agg(expr("graft_minhash_sig(shingle)")).collect())

@@ -9,7 +9,6 @@ class NfcNormalizeSpec extends SparkSuite {
   import spark.implicits._
 
   private def nfcOf(ss: Seq[String]): Seq[String] = {
-    NfcNormalize.register(spark)
     ss.toDF("t").selectExpr("nfc_normalize(t) AS n").collect()
       .map(r => if (r.isNullAt(0)) null else r.getString(0)).toSeq
   }
@@ -33,7 +32,6 @@ class NfcNormalizeSpec extends SparkSuite {
   }
 
   test("null propagates") {
-    NfcNormalize.register(spark)
     val r = Seq(Some("x"), None).toDF("t")
       .selectExpr("nfc_normalize(t) AS n").collect()
     assert(r(0).getString(0) == "x")
@@ -41,7 +39,6 @@ class NfcNormalizeSpec extends SparkSuite {
   }
 
   test("matches java.text.Normalizer on mixed samples (codegen path)") {
-    NfcNormalize.register(spark)
     val samples = Seq(
       "ascii only",
       "é combining acute",
@@ -60,7 +57,6 @@ class NfcNormalizeSpec extends SparkSuite {
   test("normalization unifies dedup keys split by encoding") {
     // The motivating property: composed and decomposed spellings of the
     // same text must land in ONE exact-dedup group after normalization.
-    NfcNormalize.register(spark)
     val docs = Seq(
       (0L, "café menu"), // composed
       (1L, "café menu") // decomposed — same logical text

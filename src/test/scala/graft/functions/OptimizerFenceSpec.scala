@@ -22,7 +22,6 @@ class OptimizerFenceSpec extends SparkSuite {
   private def rows(df: DataFrame) = df.collect().toSeq
 
   test("a fenced column as a join key and a sort key analyzes and returns the unfenced rows") {
-    OptimizerFence.register(spark)
     def q(key: Column) = left.withColumn("k", key)
       .join(right, col("k") === col("y"))
       .orderBy(col("k").desc, col("id"))
@@ -36,7 +35,6 @@ class OptimizerFenceSpec extends SparkSuite {
   }
 
   test("the fence itself in a join condition or a sort order is refused by CheckAnalysis") {
-    OptimizerFence.register(spark)
     // A fenced key is projected first (the test above): CheckAnalysis
     // admits a non-deterministic expression in neither place.
     Seq(

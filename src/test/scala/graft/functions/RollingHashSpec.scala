@@ -33,14 +33,12 @@ class RollingHashSpec extends SparkSuite {
 
   test("short strings yield null") {
     assert(RollingHashMin.minHash("short", 8, 31L, 1000003L) == -1L)
-    RollingHashMin.register(spark)
     val r = Seq("tiny").toDF("text")
       .selectExpr("rolling_fingerprint(text) AS f").head()
     assert(r.isNullAt(0))
   }
 
   test("codegen path equals interpreted eval over real documents") {
-    RollingHashMin.register(spark)
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
@@ -54,17 +52,6 @@ class RollingHashSpec extends SparkSuite {
     }.toMap
     assert(viaSql == viaScala)
     assert(viaSql.nonEmpty)
-  }
-
-  test("extensions inject the function into a fresh session") {
-    val s2 = spark.newSession()
-    // newSession shares the function registry state? Use the injector
-    // directly on a builder-style session via the extensions class.
-    new GraftExtensions() // construct: exercises the class
-    RollingHashMin.register(s2)
-    val n = s2.sql(
-      "SELECT rolling_fingerprint('the quick brown fox') AS f").head().getLong(0)
-    assert(n == RollingHashMin.minHash("the quick brown fox", 8, 31L, 1000003L))
   }
 
   test("fingerprint is shift-sensitive but content-stable") {

@@ -32,7 +32,6 @@ class ZOrderSpec extends SparkSuite {
 
   test("codegen path through SQL equals the interpreted function") {
     import spark.implicits._
-    ZOrder.register(spark)
     val rows = Seq((3L, 5L), (123456789L, 987654321L), (-1L, -1L), (0L, 7L))
     val got = rows.toDF("a", "b")
       .selectExpr("a", "b", "graft_zorder(a, b) AS z")

@@ -45,7 +45,6 @@ class AudioAlignSpec extends SparkSuite {
   }
 
   test("the alignment score is bit-identical under gain") {
-    graft.functions.DotProduct.register(spark)
     val e = energies(gainPair())
     val feat = Seq(
       (10L, e(1L).map(_.toDouble)),

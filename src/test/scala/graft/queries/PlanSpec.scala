@@ -367,24 +367,6 @@ class PlanSpec extends SparkSuite {
       s"per-doc offsets use a lang-keyed window:\n$p")
   }
 
-  test("training sequences: re-scan mode (checkpoint off) matches the checkpointed plan's output") {
-    import graft.queries.TextQueries
-    val on = SparkEntry.queries("q_train_sequences")(spark, d)
-      .collect().map(_.toSeq).toSeq
-    spark.conf.set(TextQueries.TrainSeqCheckpointConf, "false")
-    try {
-      val q = SparkEntry.queries("q_train_sequences")(spark, d)
-      val p = q.queryExecution.executedPlan.toString
-      // With the checkpoint declined, the tokenizing scan is back in the
-      // plan (the documented trade: re-scan instead of a corpus-sized
-      // executor-disk write)…
-      assert(p.contains("Scan parquet"),
-        s"expected the re-scan plan without the token checkpoint:\n$p")
-      // …and the output is bit-identical.
-      assert(q.collect().map(_.toSeq).toSeq == on)
-    } finally spark.conf.unset(TextQueries.TrainSeqCheckpointConf)
-  }
-
   test("keep-list and leakage split share ONE materialized components frame") {
     // Both queries' pairs+CC prefix resolves through the (session, dir)
     // memo: after either query plans, the other's plan reads the same
@@ -494,24 +476,6 @@ class PlanSpec extends SparkSuite {
     assert(p.contains("TopKPerKey"),
       s"per-query ranking must run on the bounded heap:\n$p")
     assert(!p.contains("WindowExec") && !p.contains("WindowGroupLimit"))
-  }
-
-  test("bm25: posting re-scan mode (checkpoint off) matches the checkpointed plan's output") {
-    import graft.queries.TextQueries
-    val on = SparkEntry.queries("q_bm25")(spark, d)
-      .collect().map(_.toSeq).toSeq
-    spark.conf.set(TextQueries.Bm25CheckpointConf, "false")
-    try {
-      val q = SparkEntry.queries("q_bm25")(spark, d)
-      val p = q.queryExecution.executedPlan.toString
-      // With the occurrence-sized posting checkpoint declined, the text
-      // scan is back in the plan (tf and df re-explode — the documented
-      // trade at 100 TB)…
-      assert(p.contains("Scan parquet"),
-        s"expected the re-scan plan without the posting checkpoint:\n$p")
-      // …and the output is bit-identical.
-      assert(q.collect().map(_.toSeq).toSeq == on)
-    } finally spark.conf.unset(TextQueries.Bm25CheckpointConf)
   }
 
   test("LM score vocabulary is TakeOrdered and broadcast") {

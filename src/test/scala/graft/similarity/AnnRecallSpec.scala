@@ -163,7 +163,6 @@ class AnnRecallSpec extends SparkSuite {
     // recall vs the brute-force corpus×holdout threshold flags on the
     // fixture split. A refactor that silently narrows the probed pair
     // space fails here rather than in production.
-    graft.functions.DotProduct.register(spark)
     val corpus = emb.filter(col("vec_id") % 13 =!= 0)
     val holdout = emb.filter(col("vec_id") % 13 === 0)
     val ids = (1 to 8).map(_ * 37L)

@@ -36,7 +36,6 @@ class CrossTopKSpec extends SparkSuite {
     val emb = graft.queries.Tables.embeddings(spark, d)
     // Reference: same scored cross join, ranked by the SQL window the
     // oracles use instead of the bounded heap.
-    graft.functions.DotProduct.register(spark)
     val index = PipelineQueries.imageFeatureFrame(
         graft.multimodal.Multimodal.mediaFromDocuments(spark, d))
       .select(col("doc_id").as("vec_id"), col("ih").as("emb"))

@@ -88,7 +88,6 @@ class IvfSpec extends SparkSuite {
       .map(r => r.getLong(0) -> ((r.getAs[Long]("n_holdout_hits"),
         r.getAs[Double]("max_score"))))
       .toMap
-    graft.functions.DotProduct.register(spark)
     val c = corpus.select(col("vec_id").as("cid"),
       expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("ce"))
     val h = holdout.select(col("vec_id").as("hid"),

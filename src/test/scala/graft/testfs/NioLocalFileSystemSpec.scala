@@ -3,13 +3,14 @@ package graft.testfs
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.PosixFilePermissions
 
-import graft.SparkSuite
+import graft.{NioLocalFileSystem, NioLocalFs, SparkSuite}
 import org.apache.hadoop.fs.{FileContext, FileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 
-/** The specs' session writes `file:` paths through [[NioLocalFileSystem]]
-  * and [[NioLocalFs]]; what they set and report must be what the OS
-  * holds, as with Hadoop's forked `chmod` and `ls`. */
+/** Every session built by `graft.GraftSession` writes `file:` paths
+  * through [[NioLocalFileSystem]] and [[NioLocalFs]]; what they set and
+  * report must be what the OS holds, as with Hadoop's forked `chmod` and
+  * `ls`. */
 class NioLocalFileSystemSpec extends SparkSuite {
 
   private def conf = spark.sparkContext.hadoopConfiguration
